@@ -1,16 +1,21 @@
 """Integrity / uniqueness / reconciliation checks (J1, J2, A3, S8/F3).
 
 Parity targets:
-- orphan FK check: anti-join per (child.fk -> parent.ref) pair,
-  abort on offenders (reference integrity-checks.js:5-24,114-137).
+- orphan FK check: anti-join per (child.fk -> parent.ref) pair, all
+  pairs counted in one labelled union; abort on offenders (reference
+  integrity-checks.js:5-24,114-137).
 - UUID uniqueness: semi-join src vs dst per table, rewrite colliding
   source uuids, iterate to fixpoint (uuid-checks.js:59-70,297-312).
 - count reconciliation: expected = initial_dest + moved must equal
-  final dest count (person-users.js:972-1019 et al.).
+  final dest count (person-users.js:972-1019 et al.); ``footer_rows``
+  reads the final count of a written table from its parquet footers.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -44,20 +49,36 @@ def orphan_check(
     return child.filter(cond).join(pkeys, child[fk] == pkeys["__ref"], "left_anti")
 
 
+def labelled_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
+    """Row count of every frame, in one job: each frame projects to its
+    label, the labelled rows are unioned, and one ``groupBy`` counts
+    them — where a ``count()`` per frame costs a job (plus its
+    exchanges) each.  Frames without rows are absent from the result.
+    """
+    if not frames:
+        return {}
+    rows = functools.reduce(
+        DataFrame.unionAll,
+        [df.select(F.lit(label).alias("label")) for label, df in frames.items()],
+    )
+    return {r["label"]: r["count"] for r in rows.groupBy("label").count().collect()}
+
+
 def run_orphan_checks(
-    pairs: list[tuple[DataFrame, DataFrame, str, str]],
+    pairs: dict[str, tuple[DataFrame, DataFrame, str, str]],
 ) -> dict[str, int]:
     """Metadata-driven integrity gate (integrity-checks.js:82-109).
 
-    pairs: (child, parent, fk, ref) tuples — in the JDBC deployment
+    pairs: {label: (child, parent, fk, ref)} — in the JDBC deployment
     these come from information_schema.key_column_usage, exactly as
     the reference discovers them (integrity-checks.js:65-79).
-    Returns {f"{fk}->{ref}": offender_count}; caller aborts if any>0.
+    Returns {label: offender_count} for the offending pairs only, from
+    one ``labelled_counts`` job over every pair's ``orphan_check``; an
+    empty dict means every constraint holds.
     """
-    report = {}
-    for child, parent, fk, ref in pairs:
-        report[f"{fk}->{ref}"] = orphan_check(child, parent, fk, ref).count()
-    return report
+    return labelled_counts(
+        {label: orphan_check(*pair) for label, pair in pairs.items()}
+    )
 
 
 def uuid_collisions(src: DataFrame, dst: DataFrame, uuid_col: str = "uuid") -> DataFrame:
@@ -98,13 +119,30 @@ def regenerate_uuids(
 def uuid_fixpoint(
     src: DataFrame, dst: DataFrame, pk: str, uuid_col: str = "uuid", max_rounds: int = 5
 ) -> DataFrame:
-    """Rewrite src uuids until none collide with dst (uuid-checks.js:297-312)."""
+    """Rewrite src uuids until none collide with dst (uuid-checks.js:297-312).
+
+    Each rewrite is persisted, and one ``labelled_counts`` job both
+    computes it (filling the cache) and counts its remaining collisions:
+    ``uuid()`` draws fresh values on every evaluation, so an
+    unmaterialized rewrite would publish uuids other than the ones the
+    check verified.  The previous rewrite is released once the next
+    one is computed.  When the result is not ``src`` it is a persisted
+    frame the caller owns and unpersists when done.
+    """
+    coll = uuid_collisions(src, dst, uuid_col)
+    if coll.isEmpty():
+        return src
     out = src
     for _ in range(max_rounds):
-        coll = uuid_collisions(out, dst, uuid_col)
-        if coll.isEmpty():
+        nxt = regenerate_uuids(out, coll, pk, uuid_col).persist()
+        coll = uuid_collisions(nxt, dst, uuid_col)
+        left = labelled_counts({"rows": nxt, "collisions": coll}).get("collisions", 0)
+        if out is not src:
+            out.unpersist()
+        out = nxt
+        if not left:
             return out
-        out = regenerate_uuids(out, coll, pk, uuid_col)
+    out.unpersist()
     raise RuntimeError("uuid fixpoint did not converge")
 
 
@@ -139,6 +177,18 @@ def reconcile(table: str, initial: int, moved: int, final: int) -> Reconciliatio
             f"(initial {initial} + moved {moved}) but found {final}"
         )
     return r
+
+
+def footer_rows(table_dir: str) -> int:
+    """Row count of a parquet output directory, summed from its part
+    files' footers — no Spark job, and it counts what is on disk, so a
+    missing or extra part file shows."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(f).num_rows
+        for f in glob.glob(os.path.join(table_dir, "*.parquet"))
+    )
 
 
 def exclusions(users: DataFrame, persons_fk: str = "person_id") -> DataFrame:

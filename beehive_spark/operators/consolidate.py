@@ -55,6 +55,7 @@ def consolidate(
     order_cols: list[str] | None = None,
     broadcast_dst: bool = True,
     id_mode: str = "scalable",
+    persisted: list[DataFrame] | None = None,
 ) -> ConsolidateResult:
     """Generic consolidation (replaces utils.js:83-150 and all J4 clones).
 
@@ -62,6 +63,7 @@ def consolidate(
     remapped to destination id-space *before* comparison
     (utils.js:101-104) — e.g. program_workflow matches on
     (mapped program_id, concept_id) (patient-programs.js:190-199).
+    persisted: passed to ``assign_ids``.
     """
     s = src
     if fk_premaps:
@@ -89,7 +91,7 @@ def consolidate(
     to_insert = s.join(dkeys, cond, "left_anti")
     to_insert = assign_ids(
         to_insert, src_pk, order_cols=order_cols or [src_pk], base=next_id_base,
-        mode=id_mode,
+        mode=id_mode, persisted=persisted,
     )
     new_mapping = to_insert.select(
         F.col(src_pk).alias("src_id"), F.col("dest_id").cast("long").alias("dest_id")

@@ -54,6 +54,7 @@ def assign_ids(
     source_tag: str | None = None,
     num_partitions: int | None = None,
     small_threshold: int | None = None,
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Attach a deterministic destination id column to every row.
 
@@ -66,6 +67,10 @@ def assign_ids(
     scalable and contiguous produce IDENTICAL ids when order_cols is a
     unique key (callers append src_pk as tiebreak); they differ only in
     physical plan — scalable distributes the sort.
+
+    ``persisted`` collects the frames this call persists (the range
+    path keeps one), so the caller can unpersist them once the result
+    is materialized.
     """
     if order_cols is None:
         order_cols = [src_pk]
@@ -103,7 +108,7 @@ def assign_ids(
         )
         if single_numeric:
             return _assign_ids_bounds(df, order_cols[0], base, out_col, n)
-        return _assign_ids_range(df, order_cols, base, out_col, n)
+        return _assign_ids_range(df, order_cols, base, out_col, n, persisted)
     if mode == "hash":
         tag = source_tag or ""
         return df.withColumn(out_col, F.xxhash64(F.lit(tag), F.col(src_pk)))
@@ -199,7 +204,12 @@ def _assign_ids_bounds(
 
 
 def _assign_ids_range(
-    df: DataFrame, order_cols: list[str], base: int, out_col: str, n: int
+    df: DataFrame,
+    order_cols: list[str],
+    base: int,
+    out_col: str,
+    n: int,
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Scalable contiguous ids for composite / non-numeric order keys:
     range-repartition on the key, count rows per partition, prefix-sum
@@ -217,6 +227,8 @@ def _assign_ids_range(
         .withColumn("__pid", F.spark_partition_id())
         .persist()
     )
+    if persisted is not None:
+        persisted.append(dfp)
     counts = {
         r["__pid"]: r["cnt"]
         for r in dfp.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()

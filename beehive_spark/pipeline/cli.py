@@ -12,10 +12,12 @@ stdout.  Exit codes mirror the reference's hard aborts: 0 ok,
 2 FK-integrity gate failed, 3 source already merged (provenance
 guard, preparation.js:60-75).
 
-Provenance lives at ``<out-dir>/provenance.parquet`` and is appended
-after a successful non-dry run — the Spark stand-in for the
-``beehive_merge_source`` table (preparation.js:34-42); dry runs touch
-nothing, like the reference's forced ROLLBACK.
+Provenance lives at ``<out-dir>/provenance.parquet``: a successful
+non-dry run appends one row (its source tag) as a new part file, after
+the merged tables are published — the Spark stand-in for the
+``beehive_merge_source`` table (preparation.js:34-42).  A run whose
+publish fails reconciliation appends nothing; dry runs touch nothing,
+like the reference's forced ROLLBACK.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import os
 import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from beehive_spark.pipeline.merge import (
     AlreadyMergedError,
@@ -89,18 +92,12 @@ def main(argv: list[str] | None = None) -> int:
         return 3
 
     if not args.dry_run:
-        new_prov = spark.createDataFrame(
-            [(args.source_tag,)], "source string"
+        # one new row, appended as one part file: earlier sources' rows
+        # stay as written.  Built on the JVM (no Python rows to ship).
+        new_row = spark.range(1, numPartitions=1).select(
+            F.lit(args.source_tag).alias("source")
         )
-        if provenance is not None:
-            new_prov = provenance.unionByName(new_prov)
-        # rewrite via a staging path: the read and write target the
-        # same location otherwise
-        tmp = prov_path + ".staging"
-        new_prov.coalesce(1).write.mode("overwrite").parquet(tmp)
-        final_df = spark.read.parquet(tmp)
-        final_df.cache().count()
-        final_df.coalesce(1).write.mode("overwrite").parquet(prov_path)
+        new_row.write.mode("append").parquet(prov_path)
 
     print(
         json.dumps(

@@ -18,15 +18,28 @@ Replaces the reference's orchestration (orchestrator.js:22-121):
                    patch-up upserts (location.js:57-75, obs.js:73-91,
                    person-users.js:772-797) all collapse into ordinary
                    joins — see SURVEY.md §3.3.
-5.  phase 2      — remap FKs + pk per table, union onto dst, reconcile
-                   counts (A3, person-users.js:972-1019)
-6.  publish      — staged atomic parquet publish, or dry-run (rollback
-                   equivalent, orchestrator.js:98-109)
+5.  phase 2      — remap FKs + pk per table, union onto dst; the moved
+                   rows are cached and counted once
+6.  publish      — staged atomic parquet publish: every table is
+                   written to a staging dir, its parquet footer row
+                   count is reconciled against initial + moved (A3,
+                   person-users.js:972-1019), and only then is the
+                   staging dir renamed into place.  A dry run
+                   (rollback equivalent, orchestrator.js:98-109)
+                   reconciles the count of the lazy merged frame.
 
 Scale notes: mappings are slim (src_id, dest_id) DataFrames joined
 with broadcast hints while they fit (they are per-source-instance
 sized, not corpus sized); above the broadcast threshold Catalyst
 falls back to shuffled joins with identical semantics.
+
+Each shared intermediate runs once: the uuid-fixpoint rounds, the user
+and person premaps, each moved table's id assignment and the moved rows
+are persisted and materialized at their phase boundary, because every
+action over an unmaterialized lineage replays all of it (and ``uuid()``
+would draw new values).  After a publish, ``run`` points the result at
+the published parquet and releases everything it persisted; a dry run
+keeps its frames, and their caches, for the caller.
 """
 
 from __future__ import annotations
@@ -43,10 +56,16 @@ from beehive_spark.operators import (
     consolidate,
     disjunctive_match,
     next_id_base,
-    orphan_check,
     reconcile,
 )
-from beehive_spark.operators.checks import Reconciliation, uuid_fixpoint
+from beehive_spark.operators.checks import (
+    Reconciliation,
+    ReconciliationError,
+    footer_rows,
+    labelled_counts,
+    run_orphan_checks,
+    uuid_fixpoint,
+)
 from beehive_spark.operators.remap import remap_fks
 from beehive_spark.pipeline.specs import SPECS, TableSpec, fk_pairs
 
@@ -86,6 +105,21 @@ class MergePipeline:
         self.specs = specs if specs is not None else SPECS
         self.generate_new_uuids = generate_new_uuids
         self.source_tag = source_tag
+        # frames this pipeline persisted; ``_release`` unpersists them
+        self._held: list[DataFrame] = []
+
+    def _hold(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` until ``_release``.  Its first full computation
+        fills the cache; a phase computes all it holds in one
+        ``labelled_counts`` job."""
+        df = df.persist()
+        self._held.append(df)
+        return df
+
+    def _release(self) -> None:
+        for df in self._held:
+            df.unpersist(blocking=True)
+        self._held = []
 
     # -- gates ------------------------------------------------------------
 
@@ -100,12 +134,12 @@ class MergePipeline:
             )
 
     def check_integrity(self, src: dict[str, DataFrame]) -> None:
-        """Pre-flight orphan gate (integrity-checks.js:114-137)."""
-        offenders: dict[str, int] = {}
-        for child, fk, parent, ref in fk_pairs(set(src)):
-            n = orphan_check(src[child], src[parent], fk, ref).count()
-            if n:
-                offenders[f"{child}.{fk}->{parent}.{ref}"] = n
+        """Pre-flight orphan gate (integrity-checks.js:114-137): every
+        spec-derived FK pair, counted in one job."""
+        offenders = run_orphan_checks({
+            f"{child}.{fk}->{parent}.{ref}": (src[child], src[parent], fk, ref)
+            for child, fk, parent, ref in fk_pairs(set(src))
+        })
         if offenders:
             raise IntegrityError(offenders)
 
@@ -146,19 +180,20 @@ class MergePipeline:
         matched = disjunctive_match(
             rest, du, "user_id", "user_id", [["system_id", "username"], ["uuid"]]
         )
-        # persons of matched users -> persons of the matched dst users
+        user_premap = self._hold(excl_umap.unionByName(matched).distinct())
+        # persons of matched users -> persons of the matched dst users;
+        # joining on `rest` keeps only the matched (non-excluded) users
         src_up = rest.select(F.col("user_id").alias("src_id"),
                              F.col("person_id").alias("src_person"))
         dst_up = du.select(F.col("user_id").cast("long").alias("dest_id"),
                            F.col("person_id").cast("long").alias("dest_person"))
         matched_pmap = (
-            matched.join(src_up, "src_id")
+            user_premap.join(src_up, "src_id")
             .join(dst_up, "dest_id")
             .select(F.col("src_person").alias("src_id"),
                     F.col("dest_person").alias("dest_id"))
         )
-        user_premap = excl_umap.unionByName(matched).distinct()
-        person_premap = excl_pmap.unionByName(matched_pmap).distinct()
+        person_premap = self._hold(excl_pmap.unionByName(matched_pmap).distinct())
         return user_premap, person_premap
 
     # -- mapping persistence (preparation.js:107-132 'persist' mode) -------
@@ -194,15 +229,22 @@ class MergePipeline:
         return self.spark.read.parquet(path)
 
     def build_mappings(self, src, dst, map_dir: str | None = None):
-        """Phase 1: complete (src_id -> dest_id) mapping per table."""
+        """Phase 1: complete (src_id -> dest_id) mapping per table.
+
+        The premaps and every table's id assignment are held and then
+        computed together in one job, so each runs once however many
+        mappings and rows derive from it.
+        """
         mappings: dict[str, DataFrame] = {}
         to_insert: dict[str, DataFrame] = {}
+        phase: dict[str, DataFrame] = {}  # held, computed together after the loop
+        map_writes: list[tuple[str, DataFrame]] = []  # written after that
 
         premaps: dict[str, DataFrame] = {}
         if "users" in src and "users" in dst:
             u_pre, p_pre = self._prematch_users(src, dst)
-            premaps["users"] = u_pre
-            premaps["person"] = p_pre
+            premaps["users"] = phase["users premap"] = u_pre
+            premaps["person"] = phase["person premap"] = p_pre
 
         for spec in self.specs:
             t = spec.name
@@ -220,7 +262,7 @@ class MergePipeline:
                         new_map.select(F.col("src_id").alias(spec.pk), "dest_id"),
                         spec.pk,
                     )
-                    mappings[t] = persisted.select("src_id", "dest_id").cache()
+                    mappings[t] = persisted.select("src_id", "dest_id")
                     continue
                 movers = sdf
                 if pre is not None:
@@ -231,7 +273,11 @@ class MergePipeline:
                 with_ids = assign_ids(
                     movers, spec.pk, order_cols=order, base=base,
                     mode=spec.id_mode, source_tag=self.source_tag,
+                    persisted=self._held,
                 )
+                if map_dir is None:
+                    # the mapping and the rows to insert share one id pass
+                    with_ids = phase[t] = self._hold(with_ids)
                 m = with_ids.select(
                     F.col(spec.pk).alias("src_id"),
                     F.col("dest_id").cast("long").alias("dest_id"),
@@ -241,8 +287,9 @@ class MergePipeline:
                     m = m.unionByName(pre)
                     wide = wide.unionByName(pre.withColumn("is_new", F.lit(False)))
                 if map_dir is not None:
+                    # the durable map is the one id pass both derive from
                     wide = self._persist(map_dir, t, wide)
-                    mappings[t] = wide.select("src_id", "dest_id").cache()
+                    mappings[t] = wide.select("src_id", "dest_id")
                     to_insert[t] = sdf.join(
                         wide.filter("is_new").select(
                             F.col("src_id").alias(spec.pk), "dest_id"
@@ -250,7 +297,7 @@ class MergePipeline:
                         spec.pk,
                     )
                 else:
-                    mappings[t] = m.cache()
+                    mappings[t] = m
                     to_insert[t] = with_ids
             elif spec.mode == "consolidate":
                 fk_premaps = {
@@ -265,21 +312,22 @@ class MergePipeline:
                         new_map.select(F.col("src_id").alias(spec.pk), "dest_id"),
                         spec.pk,
                     )
-                    mappings[t] = persisted.select("src_id", "dest_id").cache()
+                    mappings[t] = persisted.select("src_id", "dest_id")
                     continue
                 if ddf is None:
                     # consolidate against an absent dst table degrades to
                     # a plain move (nothing to match business keys on)
-                    with_ids = assign_ids(
+                    with_ids = phase[t] = self._hold(assign_ids(
                         sdf, spec.pk, order_cols=[spec.order_col or spec.pk],
-                        base=1, mode=spec.id_mode,
-                    )
+                        base=1, mode=spec.id_mode, persisted=self._held,
+                    ))
                     m = with_ids.select(
                         F.col(spec.pk).alias("src_id"),
                         F.col("dest_id").cast("long").alias("dest_id"),
                     )
-                    self._persist(map_dir, t, m.withColumn("is_new", F.lit(True)))
-                    mappings[t] = m.cache()
+                    if map_dir is not None:
+                        map_writes.append((t, m.withColumn("is_new", F.lit(True))))
+                    mappings[t] = m
                     to_insert[t] = with_ids
                     continue
                 res = consolidate(
@@ -292,21 +340,26 @@ class MergePipeline:
                     next_id_base=next_id_base(ddf, spec.pk),
                     order_cols=[spec.order_col or spec.pk],
                     id_mode=spec.id_mode,
+                    persisted=self._held,
                 )
+                # the mapping's plan embeds to_insert's, so once that is
+                # persisted its new ids are read from the cache
+                to_insert[t] = phase[t] = self._hold(res.to_insert)
+                mappings[t] = res.mapping
                 if map_dir is not None:
-                    new_flag = res.to_insert.select(
+                    new_flag = to_insert[t].select(
                         F.col(spec.pk).alias("src_id"), F.lit(True).alias("is_new")
                     )
-                    wide = (
-                        res.mapping.join(new_flag, "src_id", "left")
+                    map_writes.append((t, (
+                        mappings[t].join(new_flag, "src_id", "left")
                         .withColumn("is_new", F.coalesce("is_new", F.lit(False)))
-                    )
-                    self._persist(map_dir, t, wide)
-                mappings[t] = res.mapping.cache()
-                to_insert[t] = res.to_insert
+                    )))
             elif spec.mode == "pk_mapped":
                 mappings[t] = mappings[spec.pk_from]
             # anti_insert / link: no id mapping (string keys pass through)
+        labelled_counts(phase)
+        for t, wide in map_writes:
+            self._persist(map_dir, t, wide)
         return mappings, to_insert, premaps
 
     # -- phase 2: rewrite + merge -----------------------------------------
@@ -379,59 +432,101 @@ class MergePipeline:
     ) -> MergeResult:
         self.check_provenance(provenance)
         self.check_integrity(src)
+        # a dry run's frames stay cached for its caller; start a new list
+        self._held = []
+        try:
+            return self._merge(src, dst, None if dry_run else out_dir, map_dir)
+        except BaseException:
+            self._release()
+            raise
 
+    def _merge(self, src, dst, out_dir, map_dir) -> MergeResult:
         if not self.generate_new_uuids:
             # uuid uniqueness gate with rewrite-to-fixpoint
             # (uuid-checks.js:297-312)
+            src = dict(src)
             for spec in self.specs:
                 t = spec.name
                 if spec.has_uuid and t in src and t in dst and "uuid" in src[t].columns:
-                    src = dict(src)
-                    src[t] = uuid_fixpoint(src[t], dst[t], spec.pk)
+                    fixed = uuid_fixpoint(src[t], dst[t], spec.pk)
+                    if fixed is not src[t]:
+                        self._held.append(fixed)
+                    src[t] = fixed
 
         mappings, to_insert, _ = self.build_mappings(src, dst, map_dir=map_dir)
 
+        rows: dict[str, DataFrame] = {}
         merged: dict[str, DataFrame] = {}
-        moved: dict[str, int] = {}
-        recs: list[Reconciliation] = []
         for spec in self.specs:
             t = spec.name
             if t not in src:
                 continue
             ddf = dst.get(t)
-            rows = self.transform_table(spec, src, dst, mappings, to_insert)
+            r = self.transform_table(spec, src, dst, mappings, to_insert)
             if ddf is not None:
-                rows = rows.select(*ddf.columns)
-                out = ddf.unionByName(rows)
-            else:
-                out = rows
-            out = out.cache()
-            initial = ddf.count() if ddf is not None else 0
-            n_moved = rows.count()
-            final = out.count()
-            recs.append(reconcile(t, initial, n_moved, final))
-            merged[t] = out
-            moved[t] = n_moved
+                r = r.select(*ddf.columns)
+            rows[t] = self._hold(r)
+            merged[t] = ddf.unionByName(rows[t]) if ddf is not None else rows[t]
+        # every table's moved rows and destination rows, counted in one job
+        counted = labelled_counts({
+            **{f"moved {t}": r for t, r in rows.items()},
+            **{f"dst {t}": dst[t] for t in rows if t in dst},
+        })
+        moved = {t: counted.get(f"moved {t}", 0) for t in rows}
+        counts = {t: (counted.get(f"dst {t}", 0), moved[t]) for t in rows}
 
-        result = MergeResult(
-            merged=merged, mappings=mappings, moved_counts=moved,
-            reconciliations=recs,
+        result = MergeResult(merged=merged, mappings=mappings, moved_counts=moved)
+        if out_dir is None:
+            # nothing written: reconcile the merged frames themselves
+            final = labelled_counts(merged)
+            result.reconciliations = [
+                reconcile(t, initial, n, final.get(t, 0))
+                for t, (initial, n) in counts.items()
+            ]
+            return result
+        result.published_to, result.reconciliations = self.publish(
+            merged, out_dir, counts
         )
-        if out_dir and not dry_run:
-            result.published_to = self.publish(merged, out_dir)
+        result.merged = {
+            t: self.spark.read.schema(df.schema).parquet(
+                os.path.join(result.published_to, t)
+            )
+            for t, df in merged.items()
+        }
+        self._release()
         return result
 
-    def publish(self, merged: dict[str, DataFrame], out_dir: str) -> str:
+    def publish(
+        self,
+        merged: dict[str, DataFrame],
+        out_dir: str,
+        counts: dict[str, tuple[int, int]],
+    ) -> tuple[str, list[Reconciliation]]:
         """Staged atomic publish (replaces the MySQL transaction,
         orchestrator.js:66,98-109): write everything to a staging dir,
-        then move into place; a failed run leaves no partial output."""
+        reconcile it, then move it into place; a failed run leaves no
+        partial output.
+
+        counts: {table: (initial, moved)}.  Each staged table's parquet
+        footer row count must equal initial + moved (A3), checked
+        before any rename, so a short or long write raises
+        ``ReconciliationError`` and leaves the published output as it
+        was.  Returns (published dir, reconciliations).
+        """
         staging = os.path.join(out_dir, f"_staging_{self.source_tag}")
         final = os.path.join(out_dir, "merged")
         backup = final + ".old"
         if os.path.exists(staging):
             shutil.rmtree(staging)
-        for t, df in merged.items():
-            df.write.mode("overwrite").parquet(os.path.join(staging, t))
+        self._stage(merged, staging)
+        try:
+            recs = [
+                reconcile(t, initial, moved, footer_rows(os.path.join(staging, t)))
+                for t, (initial, moved) in counts.items()
+            ]
+        except ReconciliationError:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
         # Two renames instead of rmtree-then-rename: a crash between them
         # leaves either the old output at `final` or at `backup`, never a
         # window with no good version on disk.
@@ -442,4 +537,8 @@ class MergePipeline:
         os.replace(staging, final)
         if os.path.exists(backup):
             shutil.rmtree(backup)
-        return final
+        return final, recs
+
+    def _stage(self, merged: dict[str, DataFrame], staging: str) -> None:
+        for t, df in merged.items():
+            df.write.mode("overwrite").parquet(os.path.join(staging, t))

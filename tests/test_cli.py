@@ -42,10 +42,18 @@ def test_cli_merge_then_rerun_aborts(spark, tmp_path, capsys):
         r["final"] for r in report["reconciliations"] if r["table"] == "person"
     )
 
-    # second run with the same tag must hit the provenance guard
-    assert main(argv) == 3
-    err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert err["error"] == "already_merged"
+    # a merge with another tag appends its row next to the first one
+    other = argv[:-1] + ["clinic-8"]
+    assert main(other) == 0
+    capsys.readouterr()
+    prov = spark.read.parquet(os.path.join(out_dir, "provenance.parquet"))
+    assert sorted(r["source"] for r in prov.collect()) == ["clinic-7", "clinic-8"]
+
+    # a re-run with either tag must hit the provenance guard
+    for tag in ("clinic-7", "clinic-8"):
+        assert main(argv[:-1] + [tag]) == 3
+        err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert err["error"] == "already_merged"
 
 
 def test_cli_dry_run_publishes_nothing(spark, tmp_path, capsys):

@@ -14,7 +14,12 @@ from beehive_spark.operators import (
     uuid_collisions,
     ReconciliationError,
 )
-from beehive_spark.operators.checks import regenerate_uuids, uuid_fixpoint, exclusions
+from beehive_spark.operators.checks import (
+    exclusions,
+    regenerate_uuids,
+    run_orphan_checks,
+    uuid_fixpoint,
+)
 from beehive_spark.operators.ids import mapping_of
 
 
@@ -111,6 +116,23 @@ def test_orphan_check(spark):
     parent = spark.createDataFrame([(10,), (20,)], ["ref"])
     bad = orphan_check(child, parent, "fk", "ref")
     assert [r["pk"] for r in bad.collect()] == [2]
+
+
+def test_run_orphan_checks_equals_per_pair_counts(spark):
+    parent = spark.createDataFrame([(10,), (20,)], ["ref"])
+    pairs = {
+        "two": (spark.createDataFrame([(1, 10), (2, 99), (3, 98)], ["pk", "fk"]),
+                parent, "fk", "ref"),
+        "one": (spark.createDataFrame([(1, 97), (2, 20), (3, None)], ["pk", "fk"]),
+                parent, "fk", "ref"),
+        "clean": (spark.createDataFrame([(1, 10), (2, None), (3, 0)], ["pk", "fk"]),
+                  parent, "fk", "ref"),
+    }
+    per_pair = {label: orphan_check(*p).count() for label, p in pairs.items()}
+    got = run_orphan_checks(pairs)
+    assert got == {label: n for label, n in per_pair.items() if n}
+    assert got == {"two": 2, "one": 1}
+    assert run_orphan_checks({}) == {}
 
 
 def test_uuid_collision_and_fixpoint(spark):
