@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from beehive_spark.operators.ids import assign_ids
+from beehive_spark.operators.ids import assign_ids, mapping_of
 from beehive_spark.operators.remap import remap_fks
 
 
@@ -54,7 +54,6 @@ def consolidate(
     next_id_base: int = 1,
     order_cols: list[str] | None = None,
     broadcast_dst: bool = True,
-    id_mode: str = "scalable",
     persisted: list[DataFrame] | None = None,
 ) -> ConsolidateResult:
     """Generic consolidation (replaces utils.js:83-150 and all J4 clones).
@@ -91,12 +90,11 @@ def consolidate(
     to_insert = s.join(dkeys, cond, "left_anti")
     to_insert = assign_ids(
         to_insert, src_pk, order_cols=order_cols or [src_pk], base=next_id_base,
-        mode=id_mode, persisted=persisted,
+        persisted=persisted,
     )
-    new_mapping = to_insert.select(
-        F.col(src_pk).alias("src_id"), F.col("dest_id").cast("long").alias("dest_id")
+    return ConsolidateResult(
+        mapping=matched.unionByName(mapping_of(to_insert, src_pk)), to_insert=to_insert
     )
-    return ConsolidateResult(mapping=matched.unionByName(new_mapping), to_insert=to_insert)
 
 
 def disjunctive_match(

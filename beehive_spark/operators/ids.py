@@ -248,5 +248,7 @@ def _assign_ids_range(
 
 
 def mapping_of(df_with_ids: DataFrame, src_pk: str, out_col: str = "dest_id") -> DataFrame:
-    """Project the slim (src_id, dest_id) mapping DataFrame."""
-    return df_with_ids.select(F.col(src_pk).alias("src_id"), F.col(out_col).alias("dest_id"))
+    """Project the slim (src_id, dest_id) mapping DataFrame, dest_id long."""
+    return df_with_ids.select(
+        F.col(src_pk).alias("src_id"), F.col(out_col).cast("long").alias("dest_id")
+    )

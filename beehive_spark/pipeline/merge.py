@@ -10,14 +10,20 @@ Replaces the reference's orchestration (orchestrator.js:22-121):
 3.  uuid gate    — collision fixpoint per table when keeping uuids
                    (uuid-checks.js:225-371); skipped when
                    generate_new_uuids (every moved row gets a fresh one)
-4.  phase 1      — build ALL id mappings (window row_number per table,
-                   consolidation splits for metadata tables).  Because
-                   every mapping exists before any row is written, the
-                   reference's recursive creator-tree walk
-                   (person-users.js:568-601) and its deferred self-FK
-                   patch-up upserts (location.js:57-75, obs.js:73-91,
-                   person-users.js:772-797) all collapse into ordinary
-                   joins — see SURVEY.md §3.3.
+4.  phase 1      — build ALL id mappings, one path for every move and
+                   consolidate table: remap its business premaps,
+                   resume its map from ``map_dir`` when this source
+                   already wrote one, else keep the dst id of rows
+                   pre-matched in dst (user/person premaps, business-
+                   key consolidation) and give the rest fresh ids
+                   (``assign_ids``); every id assignment is computed
+                   in one job, then each new map is written to
+                   ``map_dir``.  Because every mapping exists before
+                   any row is written, the reference's recursive
+                   creator-tree walk (person-users.js:568-601) and its
+                   deferred self-FK patch-up upserts (location.js:57-75,
+                   obs.js:73-91, person-users.js:772-797) all collapse
+                   into ordinary joins — see SURVEY.md §3.3.
 5.  phase 2      — remap FKs + pk per table, union onto dst; the moved
                    rows are cached and counted once
 6.  publish      — staged atomic parquet publish: every table is
@@ -66,6 +72,7 @@ from beehive_spark.operators.checks import (
     run_orphan_checks,
     uuid_fixpoint,
 )
+from beehive_spark.operators.ids import mapping_of
 from beehive_spark.operators.remap import remap_fks
 from beehive_spark.pipeline.specs import SPECS, TableSpec, fk_pairs
 
@@ -187,11 +194,9 @@ class MergePipeline:
                              F.col("person_id").alias("src_person"))
         dst_up = du.select(F.col("user_id").cast("long").alias("dest_id"),
                            F.col("person_id").cast("long").alias("dest_person"))
-        matched_pmap = (
-            user_premap.join(src_up, "src_id")
-            .join(dst_up, "dest_id")
-            .select(F.col("src_person").alias("src_id"),
-                    F.col("dest_person").alias("dest_id"))
+        matched_pmap = mapping_of(
+            user_premap.join(src_up, "src_id").join(dst_up, "dest_id"),
+            "src_person", "dest_person",
         )
         person_premap = self._hold(excl_pmap.unionByName(matched_pmap).distinct())
         return user_premap, person_premap
@@ -203,42 +208,32 @@ class MergePipeline:
         # `source` partition column across every merged source instance
         return os.path.join(map_dir, table, f"source={self.source_tag}")
 
-    def _load_persisted(self, map_dir: str | None, table: str) -> DataFrame | None:
-        """Persisted (src_id, dest_id, is_new) for this source, or None."""
-        if map_dir is None:
-            return None
-        path = self._map_path(map_dir, table)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return None
-        return self.spark.read.parquet(path)
-
-    def _persist(self, map_dir: str | None, table: str, wide: DataFrame) -> DataFrame:
-        """Durably write a mapping and return the re-read frame.
-
-        What makes a 100 TB merge restartable mid-job: phase 1 (id
-        assignment) is the expensive, order-sensitive state; once each
-        table's map hits parquet, a crashed run resumes with every
-        completed map loaded instead of recomputed, and downstream
-        joins read lineage-free durable data (no recompute-on-retry of
-        the range-sort behind `assign_ids`).
-        """
-        if map_dir is None:
-            return wide
-        path = self._map_path(map_dir, table)
-        wide.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
-
     def build_mappings(self, src, dst, map_dir: str | None = None):
         """Phase 1: complete (src_id -> dest_id) mapping per table.
 
-        The premaps and every table's id assignment are held and then
-        computed together in one job, so each runs once however many
-        mappings and rows derive from it.
+        Every move and consolidate table takes one path.  Its business
+        premaps are applied to the source rows first.  A map this
+        source already wrote to ``map_dir`` is resumed: the mapping is
+        read back and the rows to insert are the source rows it marks
+        ``is_new``, so no id is assigned twice.  Otherwise the source
+        splits into rows pre-matched in dst (the user/person premaps,
+        or consolidate's business-key match), which keep their dst id,
+        and movers, which get fresh ids from ``assign_ids``; a
+        consolidate table with no dst side has nothing to match and
+        moves.
+
+        The premaps and every id assignment are held and computed
+        together in one job, so each runs once however many mappings
+        and rows derive from it.  Only then is each new map written to
+        ``map_dir`` as (src_id, dest_id, is_new), which makes a crashed
+        merge restartable without redoing the order-sensitive id pass.
+
+        Returns (mappings, to_insert).
         """
         mappings: dict[str, DataFrame] = {}
         to_insert: dict[str, DataFrame] = {}
         phase: dict[str, DataFrame] = {}  # held, computed together after the loop
-        map_writes: list[tuple[str, DataFrame]] = []  # written after that
+        fresh: list[TableSpec] = []  # maps to write to map_dir after that
 
         premaps: dict[str, DataFrame] = {}
         if "users" in src and "users" in dst:
@@ -250,117 +245,61 @@ class MergePipeline:
             t = spec.name
             if t not in src:
                 continue
+            if spec.mode == "pk_mapped":
+                mappings[t] = mappings[spec.pk_from]
+            if spec.mode not in ("move", "consolidate"):
+                continue  # anti_insert / link: string keys pass through
             sdf = src[t]
             ddf = dst.get(t)
-            persisted = self._load_persisted(map_dir, t)
-            if spec.mode == "move":
+            business = {col: mappings[ref]
+                        for col, ref in spec.business_premaps.items()
+                        if ref in mappings}
+            if business:
+                sdf = remap_fks(sdf, business, on_missing="null")
+            path = map_dir and self._map_path(map_dir, t)
+            if path and os.path.exists(os.path.join(path, "_SUCCESS")):
+                # resume: ids come from the durable map, never re-sorted
+                saved = self.spark.read.parquet(path)
+                mappings[t] = saved.select("src_id", "dest_id")
+                to_insert[t] = sdf.join(
+                    saved.filter("is_new").select(
+                        F.col("src_id").alias(spec.pk), "dest_id"),
+                    spec.pk,
+                )
+                continue
+            base = next_id_base(ddf, spec.pk) if ddf is not None else 1
+            order = [spec.order_col, spec.pk] if spec.order_col else [spec.pk]
+            if spec.mode == "consolidate" and ddf is not None:
+                res = consolidate(
+                    sdf, ddf, spec.pk, spec.pk, spec.business_keys,
+                    next_id_base=base, order_cols=order, persisted=self._held,
+                )
+                with_ids, mappings[t] = res.to_insert, res.mapping
+            else:
                 pre = premaps.get(t)
-                if persisted is not None:
-                    # resume: ids come from the durable map, never re-sorted
-                    new_map = persisted.filter("is_new")
-                    to_insert[t] = sdf.join(
-                        new_map.select(F.col("src_id").alias(spec.pk), "dest_id"),
-                        spec.pk,
-                    )
-                    mappings[t] = persisted.select("src_id", "dest_id")
-                    continue
                 movers = sdf
                 if pre is not None:
                     pre_keys = pre.select(F.col("src_id").alias(spec.pk))
                     movers = sdf.join(F.broadcast(pre_keys), spec.pk, "left_anti")
-                base = next_id_base(ddf, spec.pk) if ddf is not None else 1
-                order = [spec.order_col, spec.pk] if spec.order_col else [spec.pk]
-                with_ids = assign_ids(
-                    movers, spec.pk, order_cols=order, base=base,
-                    mode=spec.id_mode, source_tag=self.source_tag,
-                    persisted=self._held,
-                )
-                if map_dir is None:
-                    # the mapping and the rows to insert share one id pass
-                    with_ids = phase[t] = self._hold(with_ids)
-                m = with_ids.select(
-                    F.col(spec.pk).alias("src_id"),
-                    F.col("dest_id").cast("long").alias("dest_id"),
-                )
-                wide = m.withColumn("is_new", F.lit(True))
+                with_ids = assign_ids(movers, spec.pk, order_cols=order,
+                                      base=base, persisted=self._held)
+                mappings[t] = mapping_of(with_ids, spec.pk)
                 if pre is not None:
-                    m = m.unionByName(pre)
-                    wide = wide.unionByName(pre.withColumn("is_new", F.lit(False)))
-                if map_dir is not None:
-                    # the durable map is the one id pass both derive from
-                    wide = self._persist(map_dir, t, wide)
-                    mappings[t] = wide.select("src_id", "dest_id")
-                    to_insert[t] = sdf.join(
-                        wide.filter("is_new").select(
-                            F.col("src_id").alias(spec.pk), "dest_id"
-                        ),
-                        spec.pk,
-                    )
-                else:
-                    mappings[t] = m
-                    to_insert[t] = with_ids
-            elif spec.mode == "consolidate":
-                fk_premaps = {
-                    col: mappings[ref]
-                    for col, ref in spec.business_premaps.items()
-                    if ref in mappings
-                }
-                if persisted is not None:
-                    s = remap_fks(sdf, fk_premaps, on_missing="null") if fk_premaps else sdf
-                    new_map = persisted.filter("is_new")
-                    to_insert[t] = s.join(
-                        new_map.select(F.col("src_id").alias(spec.pk), "dest_id"),
-                        spec.pk,
-                    )
-                    mappings[t] = persisted.select("src_id", "dest_id")
-                    continue
-                if ddf is None:
-                    # consolidate against an absent dst table degrades to
-                    # a plain move (nothing to match business keys on)
-                    with_ids = phase[t] = self._hold(assign_ids(
-                        sdf, spec.pk, order_cols=[spec.order_col or spec.pk],
-                        base=1, mode=spec.id_mode, persisted=self._held,
-                    ))
-                    m = with_ids.select(
-                        F.col(spec.pk).alias("src_id"),
-                        F.col("dest_id").cast("long").alias("dest_id"),
-                    )
-                    if map_dir is not None:
-                        map_writes.append((t, m.withColumn("is_new", F.lit(True))))
-                    mappings[t] = m
-                    to_insert[t] = with_ids
-                    continue
-                res = consolidate(
-                    sdf,
-                    ddf,
-                    spec.pk,
-                    spec.pk,
-                    spec.business_keys,
-                    fk_premaps=fk_premaps or None,
-                    next_id_base=next_id_base(ddf, spec.pk),
-                    order_cols=[spec.order_col or spec.pk],
-                    id_mode=spec.id_mode,
-                    persisted=self._held,
-                )
-                # the mapping's plan embeds to_insert's, so once that is
-                # persisted its new ids are read from the cache
-                to_insert[t] = phase[t] = self._hold(res.to_insert)
-                mappings[t] = res.mapping
-                if map_dir is not None:
-                    new_flag = to_insert[t].select(
-                        F.col(spec.pk).alias("src_id"), F.lit(True).alias("is_new")
-                    )
-                    map_writes.append((t, (
-                        mappings[t].join(new_flag, "src_id", "left")
-                        .withColumn("is_new", F.coalesce("is_new", F.lit(False)))
-                    )))
-            elif spec.mode == "pk_mapped":
-                mappings[t] = mappings[spec.pk_from]
-            # anti_insert / link: no id mapping (string keys pass through)
+                    mappings[t] = mappings[t].unionByName(pre)
+            # the mapping's plan embeds with_ids', so once that is held
+            # its new ids are read from the cache
+            to_insert[t] = phase[t] = self._hold(with_ids)
+            if map_dir is not None:
+                fresh.append(spec)
         labelled_counts(phase)
-        for t, wide in map_writes:
-            self._persist(map_dir, t, wide)
-        return mappings, to_insert, premaps
+        for spec in fresh:
+            t = spec.name
+            is_new = to_insert[t].select(
+                F.col(spec.pk).alias("src_id"), F.lit(True).alias("is_new"))
+            (mappings[t].join(is_new, "src_id", "left")
+             .withColumn("is_new", F.coalesce("is_new", F.lit(False)))
+             .write.mode("overwrite").parquet(self._map_path(map_dir, t)))
+        return mappings, to_insert
 
     # -- phase 2: rewrite + merge -----------------------------------------
 
@@ -453,7 +392,7 @@ class MergePipeline:
                         self._held.append(fixed)
                     src[t] = fixed
 
-        mappings, to_insert, _ = self.build_mappings(src, dst, map_dir=map_dir)
+        mappings, to_insert = self.build_mappings(src, dst, map_dir=map_dir)
 
         rows: dict[str, DataFrame] = {}
         merged: dict[str, DataFrame] = {}

@@ -57,12 +57,6 @@ class TableSpec:
     # FK columns whose rows are DROPPED when unmapped instead of nulled
     # (P5, reference person-users.js:79-80,116-117,391-394, provider.js:14-15)
     drop_unmapped: list[str] = field(default_factory=list)
-    # id-assignment physical strategy (operators.ids.assign_ids):
-    # "scalable" (default; distributed range sort, ids identical to
-    # contiguous), "contiguous" (strict-parity global window), or
-    # "hash" (non-contiguous, shuffle-free — for tables where nothing
-    # downstream needs density)
-    id_mode: str = "scalable"
 
 
 SPECS: list[TableSpec] = [

@@ -430,8 +430,11 @@ def vacuum_artifacts(root: str, min_age_sec: float = 24 * 3600) -> list[str]:
     """Remove stale transactional leftovers under ``root``: the
     ``.staging`` / ``.compact_staging`` / ``.old`` sibling directories
     that an interrupted staged-swap writer (upsert_parquet,
-    apply_cdc_parquet, compact_parquet, merge.publish) can leave
-    behind.  Returns the paths removed.
+    apply_cdc_parquet, delete_where, compact_parquet) can leave
+    behind, and the ``merged.old`` backup of ``MergePipeline.publish``
+    (its ``<out>/_staging_<tag>`` directory matches no suffix and is
+    cleared by the next publish of that tag).  Returns the paths
+    removed.
 
     Two guards make this safe to run while writers are active (the
     naive "delete anything ending in .staging/.old" is NOT — it can

@@ -187,6 +187,26 @@ def _recover_backup_swap(path: str) -> None:
             os.replace(backup, path)
 
 
+def _stage_and_swap(df: DataFrame, path: str) -> int:
+    """Write ``df`` to ``path``'s ``.staging`` sibling, count the rows
+    from its parquet footers, then promote it over ``path`` with the
+    engine's one locked backup-then-replace swap
+    (``layout.promote_staging``).  Returns the row count written —
+    shared tail of :func:`upsert_parquet`, :func:`apply_cdc_parquet`
+    and :func:`delete_where`."""
+    import shutil
+
+    from beehive_spark.operators.checks import footer_rows
+    from beehive_spark.sources.layout import promote_staging
+
+    staging = path.rstrip("/") + ".staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    df.write.mode("overwrite").parquet(staging)
+    total = footer_rows(staging)
+    promote_staging(staging, path)
+    return total
+
+
 def upsert_parquet(
     spark,
     df: DataFrame,
@@ -201,19 +221,16 @@ def upsert_parquet(
     Plan: anti-join the EXISTING table against the incoming keys (one
     shuffle bounded by the smaller key set — the incoming side, which
     broadcasts while small), union the incoming rows, write to a
-    staging dir, then swap atomically with the same backup-then-replace
-    dance as MergePipeline.publish, so a crash at any point leaves a
-    complete table on disk.  Plain parquet: no log, so concurrent
-    writers need external locking — a real table format (Delta/Iceberg)
-    is the answer when that matters; this covers the
-    single-writer/many-reader pipeline case.
+    staging dir, then swap it in with the shared backup-then-replace
+    promotion, so a crash at any point leaves a complete table on
+    disk.  Plain parquet: no log, so concurrent writers need external
+    locking — a real table format (Delta/Iceberg) is the answer when
+    that matters; this covers the single-writer/many-reader pipeline
+    case.
 
     Returns {"existing", "updated", "inserted", "total"} row counts.
     """
     import os
-    import shutil
-
-    from pyspark.sql import functions as F  # noqa: F401
 
     _recover_backup_swap(path)
     key_cols = [keys] if isinstance(keys, str) else list(keys)
@@ -228,19 +245,9 @@ def upsert_parquet(
         merged = survivors.select(*incoming.columns).unionByName(incoming)
         updated = n_existing - n_survivors
     else:
-        existing = None
         n_existing, updated = 0, 0
         merged = incoming
-    staging = path.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(staging)
-    total = spark.read.parquet(staging).count()
-    backup = path.rstrip("/") + ".old"
-    shutil.rmtree(backup, ignore_errors=True)
-    if os.path.isdir(path):
-        os.replace(path, backup)
-    os.replace(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
+    total = _stage_and_swap(merged, path)
     n_incoming = incoming.count()
     return {
         "existing": n_existing,
@@ -278,8 +285,6 @@ def apply_cdc_parquet(
 
     from pyspark.sql import functions as F
 
-    import shutil
-
     _recover_backup_swap(path)
     key_cols = [keys] if isinstance(keys, str) else list(keys)
     payload = [c for c in changes.columns if c != type_col]
@@ -296,16 +301,7 @@ def apply_cdc_parquet(
         merged = survivors.select(*upserts.columns).unionByName(upserts)
     else:
         merged = upserts
-    staging = path.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(staging)
-    total = spark.read.parquet(staging).count()
-    backup = path.rstrip("/") + ".old"
-    shutil.rmtree(backup, ignore_errors=True)
-    if os.path.isdir(path):
-        os.replace(path, backup)
-    os.replace(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
+    total = _stage_and_swap(merged, path)
     return {"deleted": n_del, "upserted": upserts.count(), "total": total}
 
 
@@ -327,9 +323,6 @@ def delete_where(spark, path: str, predicate) -> dict:
 
     Returns {"deleted", "remaining"}.
     """
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     _recover_backup_swap(path)
@@ -337,13 +330,5 @@ def delete_where(spark, path: str, predicate) -> dict:
     existing = spark.read.parquet(path)
     survivors = existing.filter(~cond | cond.isNull())
     n_before = existing.count()
-    staging = path.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    survivors.write.mode("overwrite").parquet(staging)
-    remaining = spark.read.parquet(staging).count()
-    backup = path.rstrip("/") + ".old"
-    shutil.rmtree(backup, ignore_errors=True)
-    os.replace(path, backup)
-    os.replace(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
+    remaining = _stage_and_swap(survivors, path)
     return {"deleted": n_before - remaining, "remaining": remaining}

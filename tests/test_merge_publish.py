@@ -9,6 +9,11 @@ too many or too few must fail the merge and leave the previous
 each shared intermediate (uuid-fixpoint rounds, premaps, id
 assignment, moved rows) is computed once, and a fan-out back to one
 job per FK pair or per re-read lineage would exceed it.
+
+A ``map_dir`` re-run must resume every id map it wrote, on each
+mapping route (premapped move, business-key consolidation with a
+business premap, consolidation with no dst side), without assigning
+an id.
 """
 
 import glob
@@ -18,8 +23,10 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
+import beehive_spark.pipeline.merge as mergemod
 from beehive_spark.operators import ReconciliationError
 from beehive_spark.pipeline import MergePipeline
+from beehive_spark.pipeline.specs import SPEC_BY_NAME
 from tests.test_merge_pipeline import build_fixture
 
 TABLES = ("person", "users")
@@ -124,3 +131,46 @@ def test_corrupted_publish_is_not_renamed_into_place(
     assert _snapshot(merged) == before
     # neither the staging dir nor a backup of merged/ is left behind
     assert sorted(os.listdir(out)) == ["merged"]
+
+
+RESUME_TABLES = ("person", "users", "location", "program", "program_workflow",
+                 "visit_type")
+
+
+def _pairs(df, *cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_map_dir_resume_reproduces_mappings(spark, tmp_path, monkeypatch):
+    src, dst = build_fixture(spark)
+    src = {t: src[t] for t in RESUME_TABLES}
+    # visit_type is consolidated with nothing to match on the dst side
+    dst = {t: dst[t] for t in RESUME_TABLES if t != "visit_type"}
+    map_dir = str(tmp_path / "maps")
+
+    def build():
+        pipe = MergePipeline(spark, source_tag="resume")
+        try:
+            mappings, to_insert = pipe.build_mappings(src, dst, map_dir=map_dir)
+            return (
+                {t: _pairs(m, "src_id", "dest_id") for t, m in mappings.items()},
+                {t: _pairs(r, SPEC_BY_NAME[t].pk, "dest_id")
+                 for t, r in to_insert.items()},
+            )
+        finally:
+            pipe._release()
+
+    first = build()
+    assert set(first[0]) == set(RESUME_TABLES)
+    assert first[0]["visit_type"] == [(1, 1), (2, 2)]
+    # workflow 1 matches on (mapped program_id, concept_id); 2 is new
+    saved = spark.read.parquet(os.path.join(map_dir, "program_workflow"))
+    assert _pairs(saved, "src_id", "dest_id", "is_new") == [
+        (1, 1, False), (2, 2, True)]
+
+    def boom(*a, **k):
+        raise AssertionError("id assignment re-ran during resume")
+
+    for name in ("assign_ids", "consolidate", "next_id_base"):
+        monkeypatch.setattr(mergemod, name, boom)
+    assert build() == first
