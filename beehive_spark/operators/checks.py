@@ -117,33 +117,55 @@ def regenerate_uuids(
 
 
 def uuid_fixpoint(
-    src: DataFrame, dst: DataFrame, pk: str, uuid_col: str = "uuid", max_rounds: int = 5
-) -> DataFrame:
+    tables: dict[str, tuple[DataFrame, DataFrame, str]],
+    uuid_col: str = "uuid",
+    max_rounds: int = 5,
+) -> dict[str, DataFrame]:
     """Rewrite src uuids until none collide with dst (uuid-checks.js:297-312).
 
-    Each rewrite is persisted, and one ``labelled_counts`` job both
-    computes it (filling the cache) and counts its remaining collisions:
-    ``uuid()`` draws fresh values on every evaluation, so an
-    unmaterialized rewrite would publish uuids other than the ones the
-    check verified.  The previous rewrite is released once the next
-    one is computed.  When the result is not ``src`` it is a persisted
-    frame the caller owns and unpersists when done.
+    tables: {table: (src, dst, pk)}.  Each round persists every pending
+    table's rewrite, and one ``labelled_counts`` job over all of them
+    computes the rewrites (filling the cache) and counts each table's
+    collisions before and after: ``uuid()`` draws fresh values on every
+    evaluation, so an unmaterialized rewrite would publish uuids other
+    than the ones the check verified.  A table with no collisions gets
+    back its own ``src`` and its rewrite is unpersisted; a table still
+    colliding after the round goes into the next one, and its previous
+    rewrite is released.  Any other result is a persisted frame the
+    caller owns and unpersists when done.
     """
-    coll = uuid_collisions(src, dst, uuid_col)
-    if coll.isEmpty():
-        return src
-    out = src
+    out: dict[str, DataFrame] = {}
+    pending = dict(tables)
     for _ in range(max_rounds):
-        nxt = regenerate_uuids(out, coll, pk, uuid_col).persist()
-        coll = uuid_collisions(nxt, dst, uuid_col)
-        left = labelled_counts({"rows": nxt, "collisions": coll}).get("collisions", 0)
-        if out is not src:
-            out.unpersist()
-        out = nxt
-        if not left:
-            return out
-    out.unpersist()
-    raise RuntimeError("uuid fixpoint did not converge")
+        if not pending:
+            break
+        rewrites, frames = {}, {}
+        for t, (cur, dst, pk) in pending.items():
+            coll = uuid_collisions(cur, dst, uuid_col)
+            rewrites[t] = nxt = regenerate_uuids(cur, coll, pk, uuid_col).persist()
+            frames[f"before {t}"] = coll
+            frames[f"rows {t}"] = nxt
+            frames[f"after {t}"] = uuid_collisions(nxt, dst, uuid_col)
+        counted = labelled_counts(frames)
+        for t, nxt in rewrites.items():
+            cur, dst, pk = pending.pop(t)
+            if not counted.get(f"before {t}", 0):
+                nxt.unpersist()
+                out[t] = cur
+                continue
+            if cur is not tables[t][0]:
+                cur.unpersist()
+            if counted.get(f"after {t}", 0):
+                pending[t] = (nxt, dst, pk)
+            else:
+                out[t] = nxt
+    if pending:
+        left = {**out, **{t: cur for t, (cur, _, _) in pending.items()}}
+        for t, df in left.items():
+            if df is not tables[t][0]:
+                df.unpersist()
+        raise RuntimeError(f"uuid fixpoint did not converge: {sorted(pending)}")
+    return out
 
 
 @dataclass

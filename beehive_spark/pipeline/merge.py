@@ -7,7 +7,8 @@ Replaces the reference's orchestration (orchestrator.js:22-121):
                    (preparation.js:134-158)
 2.  integrity    — FK orphan gate over spec-derived pairs, hard abort
                    (integrity-checks.js:114-137)
-3.  uuid gate    — collision fixpoint per table when keeping uuids
+3.  uuid gate    — one collision fixpoint over every uuid table when
+                   keeping uuids, each round one job across all of them
                    (uuid-checks.js:225-371); skipped when
                    generate_new_uuids (every moved row gets a fresh one)
 4.  phase 1      — build ALL id mappings, one path for every move and
@@ -383,14 +384,17 @@ class MergePipeline:
         if not self.generate_new_uuids:
             # uuid uniqueness gate with rewrite-to-fixpoint
             # (uuid-checks.js:297-312)
+            gated = {
+                spec.name: (src[spec.name], dst[spec.name], spec.pk)
+                for spec in self.specs
+                if spec.has_uuid and spec.name in src and spec.name in dst
+                and "uuid" in src[spec.name].columns
+            }
             src = dict(src)
-            for spec in self.specs:
-                t = spec.name
-                if spec.has_uuid and t in src and t in dst and "uuid" in src[t].columns:
-                    fixed = uuid_fixpoint(src[t], dst[t], spec.pk)
-                    if fixed is not src[t]:
-                        self._held.append(fixed)
-                    src[t] = fixed
+            for t, fixed in uuid_fixpoint(gated).items():
+                if fixed is not src[t]:
+                    self._held.append(fixed)
+                src[t] = fixed
 
         mappings, to_insert = self.build_mappings(src, dst, map_dir=map_dir)
 

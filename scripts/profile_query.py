@@ -7,7 +7,9 @@ Usage:
 For each named query: captures `.explain("formatted")` to
 <plan-dir>/<name>_<suffix>.txt (the judge's evidence file) and times
 `--runs` noop-sink materializations (best + all samples printed),
-with the job description set so the run is attributable.
+with the job description set so the run is attributable.  Beside each
+sample it prints that run's Janino compiles and their total ms, so a
+generated-code cache that thrashes shows up per query.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    from beehive_spark.session import get_spark
+    from beehive_spark.session import codegen_counts, get_spark
     from beehive_spark.queries import all_queries
 
     spark = get_spark(app_name="profile_query")
@@ -48,16 +50,20 @@ def main() -> None:
             with open(os.path.join(
                     args.plan_dir, f"{name}_{args.suffix}.txt"), "w") as fh:
                 fh.write(plan)
-        samples = []
+        samples, codegen = [], []
         for _ in range(args.runs):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{name} [{args.suffix}]")
+            compiles, compile_ms = codegen_counts(spark)
             t0 = time.time()
             qs[name](spark, args.sf_dir).write.format("noop").mode(
                 "overwrite").save()
             samples.append(round(time.time() - t0, 3))
             spark.sparkContext.setJobDescription(None)
-        print(f"{name}: best={min(samples)} samples={samples}", flush=True)
+            after, after_ms = codegen_counts(spark)
+            codegen.append(f"{after - compiles} compiles/{after_ms - compile_ms:.0f} ms")
+        print(f"{name}: best={min(samples)} samples={samples} codegen={codegen}",
+              flush=True)
     spark.stop()
 
 

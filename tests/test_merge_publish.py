@@ -14,6 +14,10 @@ A ``map_dir`` re-run must resume every id map it wrote, on each
 mapping route (premapped move, business-key consolidation with a
 business premap, consolidation with no dst side), without assigning
 an id.
+
+A repeat merge in the same session must reuse the generated code the
+first one compiled: the session's codegen cache holds a merge's
+working set.
 """
 
 import glob
@@ -27,12 +31,16 @@ import beehive_spark.pipeline.merge as mergemod
 from beehive_spark.operators import ReconciliationError
 from beehive_spark.pipeline import MergePipeline
 from beehive_spark.pipeline.specs import SPEC_BY_NAME
+from beehive_spark.session import codegen_counts
 from tests.test_merge_pipeline import build_fixture
 
 TABLES = ("person", "users")
-# 80 jobs on a 4-core host; one count job per FK pair and counts that
+# 70 jobs on a 4-core host; one count job per FK pair and counts that
 # replay the uncached lineage took it to 167
 JOB_CEILING = 100
+# Janino compiles in a repeat merge: a handful with the code cache sized
+# to the working set, ~190 when the cache is smaller than one merge
+COMPILE_CEILING = 16
 
 
 def _person_users(spark):
@@ -104,6 +112,17 @@ def test_merge_job_ceiling_and_release(published):
     _, _, jobs, still_cached = published
     assert 0 < jobs <= JOB_CEILING
     assert not still_cached           # a publish releases what it persisted
+
+
+def test_repeat_merge_reuses_generated_code(spark, tmp_path):
+    src, dst = _person_users(spark)
+    counts = []
+    for run in ("first", "second"):
+        before, _ = codegen_counts(spark)
+        MergePipeline(spark, generate_new_uuids=False, source_tag=run).run(
+            src, dst, out_dir=str(tmp_path / run))
+        counts.append(codegen_counts(spark)[0] - before)
+    assert counts[1] <= COMPILE_CEILING, counts
 
 
 @pytest.mark.parametrize("corruption", ["extra_part", "dropped_part"])

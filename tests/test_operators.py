@@ -140,10 +140,21 @@ def test_uuid_collision_and_fixpoint(spark):
     dst = spark.createDataFrame([(9, "u-b")], ["pk", "uuid"])
     coll = uuid_collisions(src, dst)
     assert [r["pk"] for r in coll.collect()] == [2]
-    fixed = uuid_fixpoint(src, dst, "pk")
-    assert uuid_collisions(fixed, dst).isEmpty()
-    kept = {r["pk"]: r["uuid"] for r in fixed.collect()}
+    clean = spark.createDataFrame([(5, "u-c")], ["pk", "uuid"])
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persisted().size()
+    fixed = uuid_fixpoint({"hit": (src, dst, "pk"), "clean": (clean, dst, "pk")})
+    assert set(fixed) == {"hit", "clean"}
+    assert uuid_collisions(fixed["hit"], dst).isEmpty()
+    kept = {r["pk"]: r["uuid"] for r in fixed["hit"].collect()}
     assert kept[1] == "u-a" and kept[2] != "u-b"
+    # a table with no collisions gets its own frame back
+    assert fixed["clean"] is clean
+    assert uuid_fixpoint({}) == {}
+    # only the colliding table's rewrite stays persisted, for its caller
+    assert persisted().size() == before + 1
+    fixed["hit"].unpersist()
+    assert persisted().size() == before
 
 
 def test_regenerate_uuids_only_touches_collisions(spark):
