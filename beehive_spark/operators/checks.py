@@ -9,6 +9,16 @@ Parity targets:
 - count reconciliation: expected = initial_dest + moved must equal
   final dest count (person-users.js:972-1019 et al.); ``footer_rows``
   reads the final count of a written table from its parquet footers.
+
+Footer helpers answer from parquet metadata where a frame is a bare
+parquet scan (``parquet_parts``): ``footer_count`` sums its files'
+footer row counts, ``footer_maxima`` reads an integer column's
+row-group max statistics, and ``row_counts`` counts the frames it
+cannot answer that way in one ``labelled_counts`` job.  Each returns
+``None`` for a frame or column the footers cannot answer exactly
+(derived or non-parquet frames, non-``file:`` paths, missing columns or
+statistics), so its caller runs the job instead and a result never
+depends on where the frame came from.
 """
 
 from __future__ import annotations
@@ -17,6 +27,7 @@ import functools
 import glob
 import os
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -205,12 +216,86 @@ def footer_rows(table_dir: str) -> int:
     """Row count of a parquet output directory, summed from its part
     files' footers — no Spark job, and it counts what is on disk, so a
     missing or extra part file shows."""
+    return _num_rows(glob.glob(os.path.join(table_dir, "*.parquet")))
+
+
+def _num_rows(files: list[str]) -> int:
     import pyarrow.parquet as pq
 
-    return sum(
-        pq.read_metadata(f).num_rows
-        for f in glob.glob(os.path.join(table_dir, "*.parquet"))
-    )
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+_PARQUET_FORMAT = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
+
+
+def parquet_parts(df: DataFrame) -> list[str] | None:
+    """Local part files of ``df`` when its analyzed plan is a bare
+    parquet scan (a ``LogicalRelation`` over parquet files, as
+    ``spark.read.parquet`` builds), else ``None``: a filtered,
+    projected or otherwise derived frame, another format or source
+    (an RDD, JDBC), or a file whose URI is not ``file:``.  No job runs;
+    the files come from the scan's file listing."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getName() != _PARQUET_FORMAT):
+        return None
+    uris = [urlparse(u) for u in df.inputFiles()]
+    if any(u.scheme != "file" for u in uris):
+        return None
+    return [unquote(u.path) for u in uris]
+
+
+def footer_count(df: DataFrame) -> int | None:
+    """Row count of a bare parquet scan from its footers, else ``None``."""
+    parts = parquet_parts(df)
+    return None if parts is None else _num_rows(parts)
+
+
+def footer_maxima(df: DataFrame, col: str) -> list[int] | None:
+    """Per-row-group max of the signed integer column ``col`` of a bare
+    parquet scan, from its footer statistics; a row group whose column
+    is all null has no max and is left out.  ``None`` when the footers
+    cannot answer: not a bare parquet scan, a file without ``col`` or
+    with another type there, or a row group without min/max
+    statistics."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = parquet_parts(df)
+    if parts is None:
+        return None
+    out = []
+    for f in parts:
+        md = pq.read_metadata(f)
+        schema = md.schema.to_arrow_schema()
+        if schema.get_field_index(col) < 0 or not pa.types.is_signed_integer(
+                schema.field(col).type):
+            return None
+        j = [md.schema.column(i).path for i in range(md.num_columns)].index(col)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            stats = rg.column(j).statistics
+            if stats is None:
+                return None
+            if stats.has_min_max:
+                out.append(int(stats.max))
+            elif not (stats.has_null_count and stats.null_count == rg.num_rows):
+                return None
+    return out
+
+
+def row_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
+    """Row count of every frame, zeros included: a bare parquet scan's
+    from its footers (``footer_count``), the rest in one
+    ``labelled_counts`` job."""
+    footers = {label: footer_count(df) for label, df in frames.items()}
+    counted = labelled_counts(
+        {label: df for label, df in frames.items() if footers[label] is None})
+    return {label: counted.get(label, 0) if n is None else n
+            for label, n in footers.items()}
 
 
 def exclusions(users: DataFrame, persons_fk: str = "person_id") -> DataFrame:

@@ -32,15 +32,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from beehive_spark.operators.checks import footer_maxima
+
 
 def next_id_base(dst: DataFrame, pk: str) -> int:
     """Next available PK in the destination table (A2, utils.js:11-26).
 
     ``max(pk)+1`` instead of AUTO_INCREMENT probing — identical result
     for append-only merges, and works on any source, not just MySQL.
+    A bare parquet scan answers from its row-group statistics with no
+    job (``checks.footer_maxima``); any other frame runs the ``max``.
     """
-    row = dst.agg(F.max(F.col(pk)).alias("m")).first()
-    m = row["m"] if row is not None else None
+    maxima = footer_maxima(dst, pk)
+    if maxima is not None:
+        m = max(maxima, default=None)
+    else:
+        row = dst.agg(F.max(F.col(pk)).alias("m")).first()
+        m = row["m"] if row is not None else None
     return int(m) + 1 if m is not None else 1
 
 
@@ -237,9 +245,10 @@ def _assign_ids_range(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
+    # typed, so an empty input's empty map still resolves
     off_map = F.create_map(
         *[x for pid, off in sorted(offsets.items()) for x in (F.lit(pid), F.lit(off))]
-    )
+    ).cast("map<int,bigint>")
     w = Window.partitionBy("__pid").orderBy(*ocols)
     return (
         dfp.withColumn(out_col, (off_map[F.col("__pid")] + F.row_number().over(w) - 1).cast("long"))

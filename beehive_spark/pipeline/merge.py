@@ -18,22 +18,30 @@ Replaces the reference's orchestration (orchestrator.js:22-121):
                    pre-matched in dst (user/person premaps, business-
                    key consolidation) and give the rest fresh ids
                    (``assign_ids``); every id assignment is computed
-                   in one job, then each new map is written to
-                   ``map_dir``.  Because every mapping exists before
-                   any row is written, the reference's recursive
+                   in one job, then the new maps are written to
+                   ``map_dir`` together.  Because every mapping exists
+                   before any row is written, the reference's recursive
                    creator-tree walk (person-users.js:568-601) and its
                    deferred self-FK patch-up upserts (location.js:57-75,
                    obs.js:73-91, person-users.js:772-797) all collapse
                    into ordinary joins — see SURVEY.md §3.3.
-5.  phase 2      — remap FKs + pk per table, union onto dst; the moved
-                   rows are cached and counted once
-6.  publish      — staged atomic parquet publish: every table is
-                   written to a staging dir, its parquet footer row
-                   count is reconciled against initial + moved (A3,
-                   person-users.js:972-1019), and only then is the
-                   staging dir renamed into place.  A dry run
-                   (rollback equivalent, orchestrator.js:98-109)
-                   reconciles the count of the lazy merged frame.
+5.  phase 2      — remap FKs + pk per table, union onto dst; a
+                   publish attaches a row-count ``Observation`` to the
+                   moved rows, so the staging write counts them as it
+                   writes them and nothing is cached or counted
+                   before it
+6.  publish      — staged atomic parquet publish: the tables are
+                   written to a staging dir concurrently, then each
+                   staged table's parquet footer row count is
+                   reconciled against initial + moved (A3,
+                   person-users.js:972-1019) — initial from the dst
+                   footers (one count job for any dst that is not a
+                   bare parquet scan), moved from the observation —
+                   and only then is the staging dir renamed into
+                   place.  A dry run (rollback equivalent,
+                   orchestrator.js:98-109) caches and counts the moved
+                   rows and reconciles the count of the lazy merged
+                   frame.
 
 Scale notes: mappings are slim (src_id, dest_id) DataFrames joined
 with broadcast hints while they fit (they are per-source-instance
@@ -41,21 +49,25 @@ sized, not corpus sized); above the broadcast threshold Catalyst
 falls back to shuffled joins with identical semantics.
 
 Each shared intermediate runs once: the uuid-fixpoint rounds, the user
-and person premaps, each moved table's id assignment and the moved rows
-are persisted and materialized at their phase boundary, because every
-action over an unmaterialized lineage replays all of it (and ``uuid()``
-would draw new values).  After a publish, ``run`` points the result at
-the published parquet and releases everything it persisted; a dry run
-keeps its frames, and their caches, for the caller.
+and person premaps, each moved table's id assignment and, in a dry run,
+the moved rows are persisted and materialized at their phase boundary,
+because every action over an unmaterialized lineage replays all of it
+(and ``uuid()`` would draw new values).  A publish's staging write is
+the only action over its moved rows, so they are not held.  After a
+publish, ``run`` points the result at the published parquet and
+releases everything it persisted; a dry run keeps its frames, and their
+caches, for the caller.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from beehive_spark.operators import (
@@ -70,6 +82,7 @@ from beehive_spark.operators.checks import (
     ReconciliationError,
     footer_rows,
     labelled_counts,
+    row_counts,
     run_orphan_checks,
     uuid_fixpoint,
 )
@@ -225,9 +238,10 @@ class MergePipeline:
 
         The premaps and every id assignment are held and computed
         together in one job, so each runs once however many mappings
-        and rows derive from it.  Only then is each new map written to
-        ``map_dir`` as (src_id, dest_id, is_new), which makes a crashed
-        merge restartable without redoing the order-sensitive id pass.
+        and rows derive from it.  Only then are the new maps written to
+        ``map_dir`` as (src_id, dest_id, is_new), together (``_write``),
+        which makes a crashed merge restartable without redoing the
+        order-sensitive id pass.
 
         Returns (mappings, to_insert).
         """
@@ -293,13 +307,15 @@ class MergePipeline:
             if map_dir is not None:
                 fresh.append(spec)
         labelled_counts(phase)
+        maps = {}
         for spec in fresh:
             t = spec.name
             is_new = to_insert[t].select(
                 F.col(spec.pk).alias("src_id"), F.lit(True).alias("is_new"))
-            (mappings[t].join(is_new, "src_id", "left")
-             .withColumn("is_new", F.coalesce("is_new", F.lit(False)))
-             .write.mode("overwrite").parquet(self._map_path(map_dir, t)))
+            maps[self._map_path(map_dir, t)] = (
+                mappings[t].join(is_new, "src_id", "left")
+                .withColumn("is_new", F.coalesce("is_new", F.lit(False))))
+        self._write(maps)
         return mappings, to_insert
 
     # -- phase 2: rewrite + merge -----------------------------------------
@@ -399,6 +415,7 @@ class MergePipeline:
         mappings, to_insert = self.build_mappings(src, dst, map_dir=map_dir)
 
         rows: dict[str, DataFrame] = {}
+        observed: dict[str, Observation] = {}
         merged: dict[str, DataFrame] = {}
         for spec in self.specs:
             t = spec.name
@@ -408,53 +425,67 @@ class MergePipeline:
             r = self.transform_table(spec, src, dst, mappings, to_insert)
             if ddf is not None:
                 r = r.select(*ddf.columns)
-            rows[t] = self._hold(r)
-            merged[t] = ddf.unionByName(rows[t]) if ddf is not None else rows[t]
-        # every table's moved rows and destination rows, counted in one job
-        counted = labelled_counts({
-            **{f"moved {t}": r for t, r in rows.items()},
-            **{f"dst {t}": dst[t] for t in rows if t in dst},
-        })
-        moved = {t: counted.get(f"moved {t}", 0) for t in rows}
-        counts = {t: (counted.get(f"dst {t}", 0), moved[t]) for t in rows}
+            if out_dir is None:
+                r = rows[t] = self._hold(r)
+            else:
+                # the staging write is the only action over these rows
+                observed[t] = Observation()
+                r = r.observe(observed[t], F.count(F.lit(1)).alias("n"))
+            merged[t] = ddf.unionByName(r) if ddf is not None else r
+        dst_rows = {f"dst {t}": dst[t] for t in merged if t in dst}
 
-        result = MergeResult(merged=merged, mappings=mappings, moved_counts=moved)
         if out_dir is None:
-            # nothing written: reconcile the merged frames themselves
+            # nothing written: count the held moved rows and the dst
+            # inputs, then reconcile the merged frames themselves
+            counted = row_counts(
+                {**{f"moved {t}": r for t, r in rows.items()}, **dst_rows})
             final = labelled_counts(merged)
-            result.reconciliations = [
-                reconcile(t, initial, n, final.get(t, 0))
-                for t, (initial, n) in counts.items()
-            ]
-            return result
-        result.published_to, result.reconciliations = self.publish(
-            merged, out_dir, counts
-        )
-        result.merged = {
-            t: self.spark.read.schema(df.schema).parquet(
-                os.path.join(result.published_to, t)
+            moved = {t: counted[f"moved {t}"] for t in rows}
+            return MergeResult(
+                merged=merged, mappings=mappings, moved_counts=moved,
+                reconciliations=[
+                    reconcile(t, counted.get(f"dst {t}", 0), n, final.get(t, 0))
+                    for t, n in moved.items()
+                ],
             )
-            for t, df in merged.items()
-        }
+        counted = row_counts(dst_rows)
+        published_to, recs = self.publish(
+            merged, out_dir, {t: counted.get(f"dst {t}", 0) for t in merged},
+            observed,
+        )
         self._release()
-        return result
+        return MergeResult(
+            merged={
+                t: self.spark.read.schema(df.schema).parquet(
+                    os.path.join(published_to, t))
+                for t, df in merged.items()
+            },
+            mappings=mappings,
+            moved_counts={r.table: r.moved for r in recs},
+            reconciliations=recs,
+            published_to=published_to,
+        )
 
     def publish(
         self,
         merged: dict[str, DataFrame],
         out_dir: str,
-        counts: dict[str, tuple[int, int]],
+        initial: dict[str, int],
+        observed: dict[str, Observation],
     ) -> tuple[str, list[Reconciliation]]:
         """Staged atomic publish (replaces the MySQL transaction,
         orchestrator.js:66,98-109): write everything to a staging dir,
         reconcile it, then move it into place; a failed run leaves no
         partial output.
 
-        counts: {table: (initial, moved)}.  Each staged table's parquet
-        footer row count must equal initial + moved (A3), checked
-        before any rename, so a short or long write raises
-        ``ReconciliationError`` and leaves the published output as it
-        was.  Returns (published dir, reconciliations).
+        initial: {table: dst rows}; observed: {table: the row-count
+        ``Observation`` on its moved rows, which the staging write
+        reports}.  Each staged table's parquet footer row count must
+        equal initial + moved (A3), checked before any rename, so a
+        short or long write, or a moved count that a task retry
+        inflated, raises ``ReconciliationError`` and leaves the
+        published output as it was.  Returns (published dir,
+        reconciliations).
         """
         staging = os.path.join(out_dir, f"_staging_{self.source_tag}")
         final = os.path.join(out_dir, "merged")
@@ -464,8 +495,9 @@ class MergePipeline:
         self._stage(merged, staging)
         try:
             recs = [
-                reconcile(t, initial, moved, footer_rows(os.path.join(staging, t)))
-                for t, (initial, moved) in counts.items()
+                reconcile(t, n, observed[t].get["n"],
+                          footer_rows(os.path.join(staging, t)))
+                for t, n in initial.items()
             ]
         except ReconciliationError:
             shutil.rmtree(staging, ignore_errors=True)
@@ -483,5 +515,25 @@ class MergePipeline:
         return final, recs
 
     def _stage(self, merged: dict[str, DataFrame], staging: str) -> None:
-        for t, df in merged.items():
-            df.write.mode("overwrite").parquet(os.path.join(staging, t))
+        self._write({os.path.join(staging, t): df for t, df in merged.items()})
+
+    def _write(self, outputs: dict[str, DataFrame]) -> None:
+        """Overwrite each path with its frame as parquet.  The writes run
+        concurrently, at most ``defaultParallelism`` at a time, and each
+        runs with a copy of the caller's local properties, so its jobs
+        carry the caller's job group."""
+        if not outputs:
+            return
+        workers = min(len(outputs), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            writes = [
+                pool.submit(inheritable_thread_target(self.spark)(_overwrite),
+                            df, path)
+                for path, df in outputs.items()
+            ]
+        for w in writes:
+            w.result()
+
+
+def _overwrite(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)

@@ -5,10 +5,17 @@ against its output on disk.
 The publish reconciles every table against the parquet footers of its
 staged output before the rename, so a staged table with a part file
 too many or too few must fail the merge and leave the previous
-``merged/`` in place.  The job ceiling pins the merge's job count:
-each shared intermediate (uuid-fixpoint rounds, premaps, id
-assignment, moved rows) is computed once, and a fan-out back to one
-job per FK pair or per re-read lineage would exceed it.
+``merged/`` in place.  The moved rows are counted by the staging write
+itself, also when a table moves none.  The job ceiling pins the
+merge's job count: each shared intermediate (uuid-fixpoint rounds,
+premaps, id assignment) is computed once, and a fan-out back to one
+job per FK pair or per re-read lineage would exceed it.  Every job of
+the merge, the concurrent staging writes included, runs under the
+caller's job group.
+
+With parquet inputs, the dst counts and id bases come from the
+footers: no ``max`` job for an id base and no count job after the
+mappings.
 
 A ``map_dir`` re-run must resume every id map it wrote, on each
 mapping route (premapped move, business-key consolidation with a
@@ -21,6 +28,7 @@ working set.
 """
 
 import glob
+import inspect
 import os
 import shutil
 
@@ -28,14 +36,14 @@ import pyarrow.parquet as pq
 import pytest
 
 import beehive_spark.pipeline.merge as mergemod
-from beehive_spark.operators import ReconciliationError
+from beehive_spark.operators import ReconciliationError, checks
 from beehive_spark.pipeline import MergePipeline
 from beehive_spark.pipeline.specs import SPEC_BY_NAME
 from beehive_spark.session import codegen_counts
 from tests.test_merge_pipeline import build_fixture
 
 TABLES = ("person", "users")
-# 70 jobs on a 4-core host; one count job per FK pair and counts that
+# 68 jobs on a 4-core host; one count job per FK pair and counts that
 # replay the uncached lineage took it to 167
 JOB_CEILING = 100
 # Janino compiles in a repeat merge: a handful with the code cache sized
@@ -51,6 +59,26 @@ def _person_users(spark):
 def _cached_rdds(sc) -> set[int]:
     infos = sc._jsc.sc().getRDDStorageInfo()
     return {infos[i].id() for i in range(len(infos))}
+
+
+def _jobs_since(sc, mark: int) -> list[tuple[int, str | None, str]]:
+    """(job id, job group, call site) of every job after job ``mark``,
+    read from the status store."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() > mark:
+            grp = j.jobGroup()
+            out.append((j.jobId(), grp.get() if grp.isDefined() else None,
+                        j.name()))
+    return sorted(out)
+
+
+def _last_job(sc) -> int:
+    return max((j for j, _, _ in _jobs_since(sc, -1)), default=-1)
 
 
 def _footer_rows(table_dir: str) -> int:
@@ -74,6 +102,7 @@ def published(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("publish"))
     sc = spark.sparkContext
     cached_before = _cached_rdds(sc)
+    mark = _last_job(sc)
     sc.setJobGroup("merge-pin", "keep-uuids person-users merge")
     try:
         res = MergePipeline(
@@ -81,8 +110,7 @@ def published(spark, tmp_path_factory):
         ).run(src, dst, out_dir=out)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("merge-pin"))
-    return out, res, jobs, _cached_rdds(sc) - cached_before
+    return out, res, _jobs_since(sc, mark), _cached_rdds(sc) - cached_before
 
 
 def test_publish_reconciles_against_footers(published):
@@ -110,8 +138,62 @@ def test_published_uuids_stable_and_unique(published):
 
 def test_merge_job_ceiling_and_release(published):
     _, _, jobs, still_cached = published
-    assert 0 < jobs <= JOB_CEILING
+    assert 0 < len(jobs) <= JOB_CEILING
+    # the staging threads keep the caller's job group
+    assert {grp for _, grp, _ in jobs} == {"merge-pin"}
     assert not still_cached           # a publish releases what it persisted
+
+
+def test_parquet_inputs_count_from_footers(spark, tmp_path, monkeypatch):
+    frames = {}
+    for side, tables in zip(("src", "dst"), _person_users(spark)):
+        frames[side] = {}
+        for t, df in tables.items():
+            path = str(tmp_path / side / t)
+            df.write.parquet(path)
+            frames[side][t] = spark.read.parquet(path)
+    sc = spark.sparkContext
+    after_mappings = []
+    build = MergePipeline.build_mappings
+
+    def marked(self, *args, **kwargs):
+        out = build(self, *args, **kwargs)
+        after_mappings.append(_last_job(sc))
+        return out
+
+    monkeypatch.setattr(MergePipeline, "build_mappings", marked)
+    mark = _last_job(sc)
+    sc.setJobGroup("footer-pin", "person-users merge of parquet inputs")
+    try:
+        res = MergePipeline(spark, generate_new_uuids=False, source_tag="pq").run(
+            frames["src"], frames["dst"], out_dir=str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.moved_counts == {"person": 6, "users": 4}
+    assert all(r.ok for r in res.reconciliations)
+    jobs = _jobs_since(sc, mark)
+    assert {grp for _, grp, _ in jobs} == {"footer-pin"}
+    first_sites = [site for _, _, site in jobs
+                   if site.startswith("first at") and "ids.py" in site]
+    assert not first_sites
+    lines, start = inspect.getsourcelines(checks.labelled_counts)
+    counts_sites = {f"checks.py:{n}" for n in range(start, start + len(lines))}
+    late_counts = [site for j, _, site in jobs if j > after_mappings[0]
+                   and any(site.endswith(c) for c in counts_sites)]
+    assert not late_counts
+
+
+def test_publish_of_a_table_that_moves_nothing(spark, tmp_path):
+    src, dst = _person_users(spark)
+    # only the admin and daemon users, which map onto dst's admin; the
+    # persons they created move
+    src["users"] = src["users"].filter("system_id in ('admin', 'daemon')")
+    src["person"] = src["person"].filter("creator = 5")
+    res = MergePipeline(spark, source_tag="none").run(
+        src, dst, out_dir=str(tmp_path))
+    assert res.moved_counts == {"person": 3, "users": 0}
+    users = {r.table: r for r in res.reconciliations}["users"]
+    assert users.ok and users.moved == 0 and users.final == users.initial
 
 
 def test_repeat_merge_reuses_generated_code(spark, tmp_path):

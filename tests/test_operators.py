@@ -1,5 +1,7 @@
 """Unit tests for the primitive merge operators (SURVEY.md §2)."""
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +18,9 @@ from beehive_spark.operators import (
 )
 from beehive_spark.operators.checks import (
     exclusions,
+    footer_count,
+    footer_maxima,
+    parquet_parts,
     regenerate_uuids,
     run_orphan_checks,
     uuid_fixpoint,
@@ -48,6 +53,58 @@ def test_next_id_base(spark):
     assert next_id_base(df, "pk") == 10
     empty = df.filter(F.lit(False))
     assert next_id_base(empty, "pk") == 1
+
+
+def _parquet(spark, tmp_path, pks, **write):
+    """A one-file parquet table of ``pks`` (plus a payload column), read back."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"pk": pa.array(pks, pa.int64()),
+                             "x": [str(p) for p in pks]}), path, **write)
+    return spark.read.parquet(path)
+
+
+def _job_max(df) -> int:
+    m = df.agg(F.max("pk")).first()[0]
+    return int(m) + 1 if m is not None else 1
+
+
+def test_footers_answer_a_multi_row_group_scan(spark, tmp_path):
+    df = _parquet(spark, tmp_path, [7, 3, None, 41, 12, 9, 40], row_group_size=2)
+    assert len(parquet_parts(df)) == 1
+    assert len(footer_maxima(df, "pk")) == 4           # one max per row group
+    assert next_id_base(df, "pk") == _job_max(df) == 42
+    assert footer_count(df) == df.count() == 7
+    assert footer_maxima(df, "x") is None               # not an integer column
+    assert footer_maxima(df, "missing") is None
+
+
+def test_footers_without_statistics_fall_back(spark, tmp_path):
+    df = _parquet(spark, tmp_path, [5, 17, 2], row_group_size=2,
+                  write_statistics=False)
+    assert footer_maxima(df, "pk") is None
+    assert next_id_base(df, "pk") == _job_max(df) == 18
+    assert footer_count(df) == df.count() == 3
+
+
+def test_footers_do_not_answer_a_derived_frame(spark, tmp_path):
+    df = _parquet(spark, tmp_path, [5, 17, 2]).filter("pk < 10")
+    assert parquet_parts(df) is None
+    assert footer_count(df) is None and footer_maxima(df, "pk") is None
+    assert next_id_base(df, "pk") == _job_max(df) == 6
+    assert parquet_parts(spark.createDataFrame([(1,)], "pk long")) is None
+
+
+def test_footers_of_an_all_null_pk(spark, tmp_path):
+    df = _parquet(spark, tmp_path, [None, None, None], row_group_size=2)
+    assert footer_maxima(df, "pk") == []
+    assert next_id_base(df, "pk") == _job_max(df) == 1
+    assert footer_count(df) == df.count() == 3
+
+
+def test_footers_of_an_empty_file(spark, tmp_path):
+    df = _parquet(spark, tmp_path, [])
+    assert next_id_base(df, "pk") == _job_max(df) == 1
+    assert footer_count(df) == df.count() == 0
 
 
 def test_remap_fks_null_and_drop(spark):
@@ -240,3 +297,11 @@ def test_assign_ids_all_scalable_paths_equal_contiguous(spark):
     assert got_auto == want
     assert got_bounds == want
     assert got_range == want_range
+
+
+@pytest.mark.parametrize("order_cols", [["pk"], ["tag", "pk"]])
+def test_assign_ids_distributed_paths_take_an_empty_input(spark, order_cols):
+    empty = spark.createDataFrame([], "pk long, tag string")
+    out = assign_ids(empty, "pk", order_cols=order_cols, base=10,
+                     mode="scalable", small_threshold=0)
+    assert out.collect() == []
