@@ -298,18 +298,6 @@ def row_counts(frames: dict[str, DataFrame]) -> dict[str, int]:
             for label, n in footers.items()}
 
 
-def exclusions(users: DataFrame, persons_fk: str = "person_id") -> DataFrame:
-    """Admin/daemon exclusion set (F6/P2, utils.js:248-253).
-
-    Returns (user_id, person_id) of users with system_id in
-    ('admin','daemon') — consumed as an anti-join side, never as a
-    driver-side NOT IN list (scale rule: exclusion lists are data).
-    """
-    return users.filter(F.col("system_id").isin("admin", "daemon")).select(
-        "user_id", persons_fk
-    )
-
-
 @dataclass(frozen=True)
 class Rule:
     """One declarative data-quality expectation.

@@ -37,8 +37,9 @@ Replaces the reference's orchestration (orchestrator.js:22-121):
                    person-users.js:972-1019) — initial from the dst
                    footers (one count job for any dst that is not a
                    bare parquet scan), moved from the observation —
-                   and only then is the staging dir renamed into
-                   place.  A dry run (rollback equivalent,
+                   and only then is the staging dir swapped into
+                   place (``promote_staging``, the engine's one locked
+                   rename-with-backup).  A dry run (rollback equivalent,
                    orchestrator.js:98-109) caches and counts the moved
                    rows and reconciles the count of the lazy merged
                    frame.
@@ -89,6 +90,7 @@ from beehive_spark.operators.checks import (
 from beehive_spark.operators.ids import mapping_of
 from beehive_spark.operators.remap import remap_fks
 from beehive_spark.pipeline.specs import SPECS, TableSpec, fk_pairs
+from beehive_spark.sources.layout import promote_staging
 
 
 class MergeAbort(RuntimeError):
@@ -475,8 +477,8 @@ class MergePipeline:
     ) -> tuple[str, list[Reconciliation]]:
         """Staged atomic publish (replaces the MySQL transaction,
         orchestrator.js:66,98-109): write everything to a staging dir,
-        reconcile it, then move it into place; a failed run leaves no
-        partial output.
+        reconcile it, then swap it into place (``promote_staging``); a
+        failed run leaves no partial output.
 
         initial: {table: dst rows}; observed: {table: the row-count
         ``Observation`` on its moved rows, which the staging write
@@ -489,7 +491,6 @@ class MergePipeline:
         """
         staging = os.path.join(out_dir, f"_staging_{self.source_tag}")
         final = os.path.join(out_dir, "merged")
-        backup = final + ".old"
         if os.path.exists(staging):
             shutil.rmtree(staging)
         self._stage(merged, staging)
@@ -502,16 +503,7 @@ class MergePipeline:
         except ReconciliationError:
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        # Two renames instead of rmtree-then-rename: a crash between them
-        # leaves either the old output at `final` or at `backup`, never a
-        # window with no good version on disk.
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        if os.path.exists(final):
-            os.replace(final, backup)
-        os.replace(staging, final)
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
+        promote_staging(staging, final)
         return final, recs
 
     def _stage(self, merged: dict[str, DataFrame], staging: str) -> None:

@@ -9,6 +9,13 @@ Contract (driver harness): column names AND types must match between
 the Spark result and the oracle result; computed columns are aliased
 identically on both sides; doubles are rounded identically on both
 sides so order-insensitive value hashes agree.
+
+The registry is the one list of queries: ``all_queries`` and
+``all_oracles`` iterate in registration order (the order
+``_ensure_loaded`` imports the query modules, then the order each
+module defines its queries).  ``tests/test_oracle_gate.py`` checks
+every entry against its oracle at sf0.001 and ``bench.py`` derives its
+extra tier from it.
 """
 
 from __future__ import annotations
@@ -66,84 +73,6 @@ def all_oracles() -> dict[str, str]:
 
 _loaded = False
 
-# Registry order is the driver's ORACLE-VERIFICATION order, and the driver
-# differentially checks the FIRST 50 registered queries per round.  The
-# window rotates each round so the cross-round union covers every
-# registered query (221/221 after r09, 206/206 oracle-bearing
-# hash-green).  The head lists only what the CURRENT round changed or
-# added.  Everything past the head backfills
-# OLDEST-EVIDENCE-FIRST, COMPUTED from the committed
-# CORRECTNESS_r*.json files (see _evidence_vintage), with rows-only
-# (no-oracle) entries LAST GLOBALLY so no window slot returns
-# `no_oracle` while stale oracled queries queue (r8 verdict finding
-# #2) — after CORRECTNESS_r08 the backfill clears the entire 21-query
-# r04-vintage oracled cohort plus the oldest r05 entries.  The local
-# scripts/check_oracle.py sweep still verifies ALL registered queries
-# each round.
-_PRIORITY = [
-    # --- round 12 (optimization): paths whose internals this round
-    # touches — the driver gate must re-prove them
-    "graph_triangles",              # r12 opt target (§2.3 intersect rewrite)
-    "dedup_embedding_bucketed",     # r12 opt target (candidate pre-filter)
-    "similarity_ann_lsh_planted",   # r12 opt target (Arrow planted constructor)
-    "media_phash_dedup",            # r12 audited (no conv residual found)
-    "media_image_resize",           # r12 touched-and-reverted; re-verify
-    "graph_kcore_planted",          # r12 opt target (batched peel)
-    # --- r11-touched paths the r11 driver sample missed (r11 verdict
-    # #3): their only green evidence is builder-side sweeps; rotate
-    # them through the driver's differential gate now.  events_resample
-    # + incremental_max/topk/join ride the computed backfill (their
-    # evidence vintage already puts them inside the 50-slot window).
-    "incremental_distinct_orders",  # r11 opt: maintainer delta persists
-    "incremental_histogram_orders", # r11 opt: maintainer delta persists
-    "pagerank_planted",             # r11 opt: dst-layout zero-shuffle rounds
-    "tree_shortest_paths",          # r11 opt: seeded-universe sssp loop
-    "bom_cost_rollup",              # r11 opt: has-children flag rollup
-    "copurchase_recommendations",   # r11 opt: explode-doubled pair view
-    "orders_backlog_timeline",      # r11 opt: one-pass sweep events
-    "curation_pipeline",            # r11 opt: slim decision-frame persists
-]
-# The head stays SHORT (<= 15 names, pinned by
-# tests/test_window_policy.py): >= 35 of the driver's 50 window slots
-# go to the computed oldest-evidence-first backfill, which this round
-# rotates onto the r6-vintage oracled cohort (the oldest remaining
-# evidence after CORRECTNESS_r10 cleared the r4/r5 backlog).
-
-
-def _evidence_vintage() -> dict[str, int]:
-    """Newest driver-evidence round per query, COMPUTED from the
-    committed CORRECTNESS_r*.json files at import time — never
-    transcribed from a verdict or a comment (the r6 bookkeeping
-    lesson: a hand-maintained census claimed an r03 evidence floor
-    while seven queries actually sat at r02).  Queries absent from
-    every file have never been driver-verified and sort FIRST."""
-    import glob
-    import json
-
-    # queries/__init__.py -> queries/ -> beehive_spark/ -> repo root
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    vint: dict[str, int] = {}
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    if not files:
-        # the window ordering would silently degrade to registration
-        # order — the exact quiet-bookkeeping-drift failure this
-        # computed census replaced; raise rather than lie (r7 review)
-        raise RuntimeError(
-            f"no CORRECTNESS_r*.json evidence files found under {root}; "
-            "the oracle-window backfill cannot be ordered without them"
-        )
-    for f in files:
-        rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
-        with open(f) as fh:
-            recs = json.load(fh)  # malformed sidecar: raise, don't skip
-        if not isinstance(recs, dict):
-            raise RuntimeError(f"malformed correctness sidecar: {f}")
-        for q in recs:
-            vint[q] = max(rnd, vint.get(q, 0))
-    return vint
-
 
 def _ensure_loaded() -> None:
     global _loaded
@@ -157,24 +86,4 @@ def _ensure_loaded() -> None:
         from beehive_spark.queries import relational  # noqa: F401
         from beehive_spark.queries import tpch  # noqa: F401
 
-        ordered = {n: _REGISTRY[n] for n in _PRIORITY if n in _REGISTRY}
-        # slots the explicit head leaves open backfill OLDEST driver
-        # evidence first (never-verified entries FIRST as a safety net
-        # for a head the author forgot to extend).  Rows-only queries
-        # (oracle=None) sort LAST GLOBALLY, not merely within their
-        # vintage: a window slot spent on a known-`no_oracle` entry is
-        # wasted evidence while stale oracled queries queue behind it
-        # (r8 verdict: dedup_semantic burned three slots this way) —
-        # their driver evidence is their planted hash-green twins.
-        # Then registration order for a deterministic window.
-        vint = _evidence_vintage()
-        reg_pos = {n: i for i, n in enumerate(_REGISTRY)}
-        rest = [n for n in _REGISTRY if n not in ordered]
-        rest.sort(
-            key=lambda n: (_REGISTRY[n][1] is None, vint.get(n, -1), reg_pos[n])
-        )
-        for n in rest:
-            ordered[n] = _REGISTRY[n]
-        _REGISTRY.clear()
-        _REGISTRY.update(ordered)
         _loaded = True

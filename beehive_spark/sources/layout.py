@@ -36,7 +36,8 @@ def dir_swap_lock(path: str):
     crash recovery on one artifact path — THE shared guard for every
     rename-with-backup protocol in this engine (`compact_parquet`
     here, `operators.ann_index._swap_in`/`_recover`,
-    `streaming.materialize._commit_swap`/`_recover`).
+    `streaming.materialize._commit_swap`/`_recover`,
+    `MergePipeline.publish`).
 
     Without it, a reader's roll-forward recovery racing a writer's
     swap (or a second reader's recovery) can promote `.staging`
@@ -87,7 +88,8 @@ def promote_staging(
     directory to ``.old``, promote ``staging``, drop the backup — one
     implementation for every staged swap in the engine
     (`compact_parquet`, `operators.ann_index._swap_in`,
-    `streaming.materialize._commit_swap`), so protocol fixes land once.
+    `streaming.materialize._commit_swap`, `MergePipeline.publish`), so
+    protocol fixes land once.
 
     ``marker`` is the relative filename whose presence makes a
     directory "complete" (always written last by builders).  When

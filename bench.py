@@ -31,6 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from beehive_spark.queries import all_queries  # noqa: E402
+
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -70,178 +72,11 @@ HEAVY = [
     "poisson_bootstrap_ci",
 ]
 
-# round-2+ operators, reported under "extra_queries" (single pass, NOT
-# part of the headline total) so round-over-round totals stay
-# comparable to BENCH_r01 while new ops' runtimes remain visible.
-# Disable with BEEHIVE_BENCH_EXTRA=0.
-EXTRA = [
-    "dedup_embedding_bucketed",
-    "dedup_semantic",
-    "dedup_semantic_planted",
-    "similarity_ann_ivf",
-    "similarity_ann_pq",
-    "similarity_ann_pq_planted",
-    "dedup_incremental",
-    "dedup_containment",
-    "quality_filter",
-    "mixture_reweight",
-    "pack_sequences",
-    "assign_ids_scalable",
-    "snapshot_diff",
-    "sample_weighted",
-    "events_anomaly",
-    "grouping_sets_revenue",
-    "fuzzy_join_names",
-    "pagerank_hierarchy",
-    "incremental_agg_orders",
-    "incremental_max_orders",
-    "text_perplexity",
-    "heavy_hitters_shingles",
-    "chunk_documents",
-    "text_normalize",
-    "events_histogram_rollup",
-    "stratified_quota_sample",
-    "peak_concurrency",
-    "incremental_topk_orders",
-    "corpus_drift",
-    "dedup_survivorship",
-    "heavy_hitters_by_source",
-    "embedding_centroids",
-    "user_activity_streaks",
-    "event_transitions",
-    "session_cooccurrence",
-    "lineitem_unpivot",
-    "dq_orders_audit",
-    "trimmed_mean_prices",
-    "weekly_revenue_wow",
-    # round-3 additions
-    "ann_index_build",
-    "ann_index_probe",
-    "media_phash_dedup",
-    "events_gap_fill",
-    "orders_rfm_segments",
-    "stddev_prices_exact",
-    "session_attribution",
-    "bigram_next_word",
-    "dataset_interleave",
-    "dataset_split_manifest",
-    "brand_affinity",
-    "revenue_concentration",
-    "cross_corpus_overlap",
-    "doc_length_outliers",
-    "events_dwell_time",
-    "orders_seasonality",
-    "user_ltv_cohort",
-    "doc_prefix_clusters",
-    "media_audio_features",
-    "doc_winnowing_fingerprints",
-    "media_video_frames",
-    "point_in_time_state",
-    # round-4 additions
-    "pagerank_copurchase",
-    "media_image_resize",
-    "embedding_gram",
-    # round-5 additions
-    "orders_backlog_timeline",
-    "supplier_churn_quarters",
-    "media_exif_harvest",
-    "connected_components_twophase",
-    "embedding_mmr_rerank",
-    "ann_index_delete",
-    "bloom_prune_join",
-    "graph_triangles",
-    "copurchase_recommendations",
-    "user_feature_matrix",
-    "graph_kcore",
-    # round-6 additions
-    "graph_kcore_planted",
-    "part_skyline_brand",
-    "qgram_editdist_join",
-    "zorder_layout",
-    "interval_concurrency",
-    "events_resample",
-    "events_ewma",
-    "ngram_lm_score",
-    "media_scene_cuts",
-    "incremental_join_orders",
-    "media_audio_vad",
-    # round-7 additions
-    "pagerank_planted",
-    "media_caption_luma",
-    "bom_cost_rollup",
-    "record_linkage_fs",
-    "record_linkage_blocked",
-    "pmi_collocations",
-    "events_ohlc_bars",
-    "table_checksum_buckets",
-    "incremental_checksum_orders",
-    "incremental_histogram_orders",
-    "bm25_retrieval",
-    "events_twap",
-    "incremental_distinct_orders",
-    "tree_shortest_paths",
-    # round-8 session-2 additions
-    "dedup_minhash_lsh_planted",
-    "dedup_simhash_planted",
-    "similarity_ann_ivf_planted",
-    "similarity_ann_lsh_planted",
-    "association_rules",
-    "equidepth_histogram",
-    "event_trigram_lm",
-    "negative_sampling",
-    "feature_minmax_scaled",
-    "k_anonymity_audit",
-    "events_holt",
-    # round-8 session-3 additions
-    "events_rolling_median",
-    "events_cusum_changepoint",
-    "feature_correlations",
-    "decision_stump_gini",
-    "kmeans_planted",
-    "retrieval_rrf_fusion",
-    "incremental_corr_orders",
-    "label_propagation_planted",
-    "text_keyphrases",
-    "orders_pareto_abc",
-    "lineitem_exact_quantiles",
-    "events_holt_backtest",
-    "entity_resolution_pipeline",
-    "mixture_temperature_schedule",
-    # round-9 additions
-    "curation_pipeline",
-    "feature_target_encoding",
-    "feature_woe_iv",
-    "time_series_split_purged",
-    "link_prediction_adamic_adar",
-    "text_ngram_novelty",
-    "events_funnel_windowed",
-    "embedding_quantize_int8",
-    "sequence_mining_triples",
-    "skew_salted_join_agg",
-    "ab_test_conversion",
-    # round-10 additions
-    "attribution_linear_multitouch",
-    "conversion_cuped",
-    "survival_kaplan_meier",
-    "model_calibration_ece",
-    "text_zipf_slope",
-    "retrieval_ndcg",
-    "graph_degree_assortativity",
-    "text_burstiness",
-    "user_path_signatures",
-    "feature_quantile_normalize",
-    # round-11 additions
-    "feature_winsorize_clip",
-    "text_readability",
-    "orders_benford_audit",
-    "events_user_entropy",
-    "feature_hash_cross",
-    "supplier_gini",
-    "l_diversity_audit",
-    "poisson_bootstrap_ci",
-    "countmin_heavy_keys",
-    "roc_auc_eval",
-]
+# every other registered query, in registry order, reported under
+# "extra_queries" (best-of-2, NOT part of the headline total) so
+# round-over-round totals stay comparable to BENCH_r01 while every
+# query's runtime remains visible.  Disable with BEEHIVE_BENCH_EXTRA=0.
+EXTRA = [n for n in all_queries() if n not in HEADLINE + HEAVY]
 
 
 def main() -> None:
@@ -253,7 +88,6 @@ def main() -> None:
         sf_num = None
 
     from beehive_spark.session import get_spark
-    from beehive_spark.queries import all_queries
 
     spark = get_spark(app_name="beehive_bench")
     qs = all_queries()
@@ -304,26 +138,6 @@ def main() -> None:
                 if name not in extra or elapsed < extra[name]:
                     extra[name] = elapsed
 
-    # sweep tier (BEEHIVE_BENCH_SWEEP=1): one single-pass timing for
-    # every registered query with NO entry in the headline or extras
-    # tiers, so each of the ~177 registered queries has at least one
-    # wall-time record per round (r7 verdict #3: 69 cheap one-plan
-    # queries had never been benched in any round).  Single-pass by
-    # design — this tier exists for coverage, not regression gating;
-    # a storm-inflated sample here costs nothing downstream because
-    # bench_diff only gates the headline + extras tiers.
-    sweep: dict[str, float] = {}
-    if os.environ.get("BEEHIVE_BENCH_SWEEP", "0") == "1":
-        measured = set(HEADLINE) | set(EXTRA)
-        spark.catalog.clearCache()
-        for name in qs:
-            if name in measured:
-                continue
-            fn = qs[name]
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            sweep[name] = round(time.time() - t0, 3)
-
     # The driver tail-captures bench output and parses the FINAL JSON
     # line; round 3's single line (headline + ~60 extras) outgrew that
     # buffer and the round recorded no bench at all (BENCH_r03.json
@@ -369,18 +183,6 @@ def main() -> None:
                 json.dump(extra_line, fh, indent=1)
             with open(os.path.join(here, "BENCH_EXTRA_HISTORY.jsonl"), "a") as fh:
                 fh.write(json.dumps(extra_line) + "\n")
-        except OSError:  # pragma: no cover - read-only checkout
-            pass
-    if sweep:
-        sweep_line = {"metric": "sweep_queries", "unit": "sec", "sf": sf_num,
-                      "runs_per_query": 1, "agg": "single",
-                      "headline_value": out["value"], "run_id": run_id,
-                      "queries": sweep}
-        print(json.dumps(sweep_line))
-        here = os.path.dirname(os.path.abspath(__file__))
-        try:
-            with open(os.path.join(here, "BENCH_EXTRA_HISTORY.jsonl"), "a") as fh:
-                fh.write(json.dumps(sweep_line) + "\n")
         except OSError:  # pragma: no cover - read-only checkout
             pass
     print(json.dumps(out))

@@ -3,9 +3,11 @@
 Runs every ``queries()`` entry on Spark and, where present, its
 ``oracle_sql()`` on DuckDB over the same parquet tables, then compares
 row count, sorted column names, dtypes and an order-insensitive
-canonicalized value multiset.  Usage:
+canonicalized value multiset (``query_problems``, which
+``tests/test_oracle_gate.py`` also runs on every query at sf0.001).
+Usage, from the repo root (default sf_dir: the sf0.01 testdata):
 
-    PYTHONPATH=/root/repo python scripts/check_oracle.py [sf_dir] [name ...]
+    PYTHONPATH=. python scripts/check_oracle.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
@@ -121,6 +123,66 @@ def dtype_drift(sdf, duck_df) -> list[str]:
     return probs
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def query_problems(spark, con, sf_dir, fn, oracle_sql):
+    """Run one query on Spark and, when ``oracle_sql`` is given, on
+    DuckDB; return (Spark row count, problems).
+
+    A query without an oracle only has to collect.  With one, the two
+    results must agree on row count, sorted column names, dtype kinds
+    (``dtype_drift``) and the canonicalized value multiset.  An error on
+    either side is reported as a problem, not raised."""
+    try:
+        sdf = fn(spark, sf_dir)
+        spark_rows = sdf.collect()
+        spark_cols = sorted(sdf.columns)
+    except Exception as exc:  # noqa: BLE001
+        return None, [f"spark error: {exc}"]
+    if oracle_sql is None:
+        return len(spark_rows), []
+    try:
+        cur = con.execute(oracle_sql)
+        duck_cols_raw = [d[0] for d in cur.description]
+        duck_rows = cur.fetchall()
+        # second fetch through pandas for the dtype-drift lint —
+        # this is the representation the driver's canonicalizer sees
+        duck_df = con.execute(oracle_sql).df()
+    except Exception as exc:  # noqa: BLE001
+        return len(spark_rows), [f"duckdb error: {exc}"]
+    duck_cols = sorted(duck_cols_raw)
+    problems = dtype_drift(sdf, duck_df)
+    if len(spark_rows) != len(duck_rows):
+        problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
+    if spark_cols != duck_cols:
+        problems.append(f"cols spark={spark_cols} duck={duck_cols}")
+    if not problems:
+        sset = sorted(
+            tuple(canon(row[c]) for c in spark_cols) for row in spark_rows
+        )
+        didx = [duck_cols_raw.index(c) for c in duck_cols]
+        dset = sorted(
+            tuple(canon(row[i]) for i in didx) for row in duck_rows
+        )
+        if sset != dset:
+            n_bad = sum(1 for a, b in zip(sset, dset) if a != b)
+            problems.append(f"values differ ({n_bad} rows); first diff:")
+            for a, b in zip(sset, dset):
+                if a != b:
+                    problems.append(f"  spark={a}")
+                    problems.append(f"  duck ={b}")
+                    break
+    return len(spark_rows), problems
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -129,11 +191,7 @@ def main():
     import __spark_entry__ as entry_mod
 
     spark = get_spark(app_name="check_oracle")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_connection(sf_dir)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -142,56 +200,15 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            spark_rows = sdf.collect()
-            spark_cols = sorted(sdf.columns)
-        except Exception as exc:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: spark error: {exc}")
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(spark_rows)} rows, "
-                  f"{time.time()-t0:.1f}s)")
-            continue
-        try:
-            cur = con.execute(oracles[name])
-            duck_cols_raw = [d[0] for d in cur.description]
-            duck_rows = cur.fetchall()
-            # second fetch through pandas for the dtype-drift lint —
-            # this is the representation the driver's canonicalizer sees
-            duck_df = con.execute(oracles[name]).df()
-        except Exception as exc:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {exc}")
-            continue
-        duck_cols = sorted(duck_cols_raw)
-        problems = dtype_drift(sdf, duck_df)
-        if len(spark_rows) != len(duck_rows):
-            problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
-        if spark_cols != duck_cols:
-            problems.append(f"cols spark={spark_cols} duck={duck_cols}")
-        if not problems:
-            sset = sorted(
-                tuple(canon(row[c]) for c in spark_cols) for row in spark_rows
-            )
-            didx = [duck_cols_raw.index(c) for c in duck_cols]
-            dset = sorted(
-                tuple(canon(row[i]) for i in didx) for row in duck_rows
-            )
-            if sset != dset:
-                n_bad = sum(1 for a, b in zip(sset, dset) if a != b)
-                problems.append(f"values differ ({n_bad} rows); first diff:")
-                for a, b in zip(sset, dset):
-                    if a != b:
-                        problems.append(f"  spark={a}")
-                        problems.append(f"  duck ={b}")
-                        break
+        n_rows, problems = query_problems(spark, con, sf_dir, fn, oracles.get(name))
         if problems:
             failures.append(name)
             print(f"FAIL {name}: " + "; ".join(problems[:3]))
+        elif name not in oracles:
+            print(f"ok   {name}: rows-only ({n_rows} rows, "
+                  f"{time.time()-t0:.1f}s)")
         else:
-            print(f"ok   {name}: {len(spark_rows)} rows match "
+            print(f"ok   {name}: {n_rows} rows match "
                   f"({time.time()-t0:.1f}s)")
     print()
     if failures:

@@ -2,9 +2,9 @@
 entry must produce rows, every oracle must belong to a registered
 query, and registration must be collision-free."""
 
-import pytest
-
 import os
+import shutil
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -52,31 +52,36 @@ def test_registry_consistency():
     }
 
 
-@pytest.mark.slow  # heavy member of an otherwise-fast suite
-def test_all_queries_run_at_smallest_sf(spark):
-    """Every registered query must at least plan and execute at
-    sf0.001 (the driver's smoke tier) — count() forces execution."""
-    sf = "/root/testdata/sf0.001"
-    failures = {}
-    for name, fn in entrymod.queries().items():
-        try:
-            fn(spark, sf).count()
-        except Exception as e:  # pragma: no cover - report which broke
-            failures[name] = repr(e)[:200]
-    assert not failures, failures
+def test_registry_imports_without_repo_root_files(tmp_path):
+    """The query package imports from a copy of ``beehive_spark/`` alone:
+    no file at the repo root decides what the registry holds."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copytree(os.path.join(repo, "beehive_spark"),
+                    tmp_path / "beehive_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    code = ("from beehive_spark.queries import all_oracles, all_queries; "
+            "print(len(all_queries()), len(all_oracles()))")
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, capture_output=True,
+        text=True, env={**os.environ, "PYTHONPATH": str(tmp_path)},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["241", "226"]
 
 
 def test_bench_tiers_are_registered_and_disjoint():
     """Every bench tier name must be a registered query (a typo'd tier
-    entry would KeyError mid-bench and lose the round's record), the
-    tiers must not overlap, and EXTRA must be duplicate-free (a dupe
-    silently re-times one query and inflates the sweep-coverage
-    census the close-commit message reports)."""
+    entry would KeyError mid-bench and lose the round's record), each
+    tier must be duplicate-free, the tiers must not overlap (one query
+    timed twice), and EXTRA is every other registered query."""
     import bench
 
-    qs = set(entrymod.queries())
-    assert set(bench.HEADLINE) <= qs
-    assert set(bench.EXTRA) <= qs
+    qs = list(entrymod.queries())
+    for tier in (bench.HEADLINE, bench.HEAVY, bench.EXTRA):
+        assert set(tier) <= set(qs)
+        assert len(tier) == len(set(tier))
+    assert not set(bench.HEADLINE) & set(bench.HEAVY)
     assert not set(bench.HEADLINE) & set(bench.EXTRA)
-    assert len(bench.EXTRA) == len(set(bench.EXTRA))
-    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
+    assert not set(bench.HEAVY) & set(bench.EXTRA)
+    assert bench.EXTRA == [
+        n for n in qs if n not in bench.HEADLINE + bench.HEAVY]

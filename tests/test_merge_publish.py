@@ -230,8 +230,9 @@ def test_corrupted_publish_is_not_renamed_into_place(
     with pytest.raises(ReconciliationError, match="person"):
         MergePipeline(spark, source_tag="second").run(src, dst, out_dir=out)
     assert _snapshot(merged) == before
-    # neither the staging dir nor a backup of merged/ is left behind
-    assert sorted(os.listdir(out)) == ["merged"]
+    # neither the staging dir nor a backup of merged/ is left behind;
+    # merged.lock is the swap lock the first publish took
+    assert sorted(os.listdir(out)) == ["merged", "merged.lock"]
 
 
 RESUME_TABLES = ("person", "users", "location", "program", "program_workflow",

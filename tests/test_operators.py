@@ -17,7 +17,6 @@ from beehive_spark.operators import (
     ReconciliationError,
 )
 from beehive_spark.operators.checks import (
-    exclusions,
     footer_count,
     footer_maxima,
     parquet_parts,
@@ -225,15 +224,6 @@ def test_reconcile(spark):
     assert reconcile("t", 10, 5, 15).ok
     with pytest.raises(ReconciliationError):
         reconcile("t", 10, 5, 14)
-
-
-def test_exclusions(spark):
-    users = spark.createDataFrame(
-        [(1, "admin", 100), (2, "daemon", 101), (3, "joe", 102)],
-        ["user_id", "system_id", "person_id"],
-    )
-    got = sorted(r["user_id"] for r in exclusions(users).collect())
-    assert got == [1, 2]
 
 
 def test_mapping_of(spark):
