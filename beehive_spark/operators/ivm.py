@@ -45,33 +45,22 @@ from pyspark.sql import functions as F
 #: name of the signed-multiplicity column in a retraction feed
 SIGN = "_sign"
 
-# Maintainer-internal persisted frames (touched-groups-sized deltas and
-# merges) registered here so long-running callers can release them.  A
-# one-shot batch query never needs to: the bench/driver clear the cache
-# between runs and the session end drops entries anyway.  But the
-# streaming sinks in streaming/materialize.py re-invoke a maintainer
-# EVERY micro-batch, and Spark's CacheManager keeps each persist until
-# clearCache/session end — without an explicit release the cached
-# delta/merged frames accumulate without bound over a stream's lifetime.
-_INTERMEDIATE_PERSISTS: list[DataFrame] = []
 
-
-def _persist(df: DataFrame) -> DataFrame:
+# The maintainers persist their touched-groups-sized intermediates
+# (deltas and merges, each feeding several branches).  ``persisted``,
+# the library's out-list convention (``assign_ids``, ``consolidate``),
+# collects every frame one call persists; the caller unpersists exactly
+# those once the result is materialized (committed/checkpointed) —
+# earlier merely loses the sharing, never correctness.  The streaming
+# sinks in streaming/materialize.py pass a fresh list per micro-batch,
+# so a stream's cache stays bounded and never touches another caller's
+# frames.  Callers that pass no list (one-shot batch queries) leave the
+# frames to the session's cache clearing.
+def _persist(df: DataFrame, persisted: list[DataFrame] | None) -> DataFrame:
     df = df.persist()
-    _INTERMEDIATE_PERSISTS.append(df)
+    if persisted is not None:
+        persisted.append(df)
     return df
-
-
-def release_intermediates(blocking: bool = False) -> None:
-    """Unpersist every maintainer-internal frame persisted since the
-    last call.  Call AFTER the batch outputs are materialized
-    (committed/checkpointed) — unpersisting earlier merely loses the
-    sharing, never correctness (the plan recomputes).  Streams running
-    maintainers concurrently in one session would release each other's
-    in-flight entries — a perf, not correctness, hazard; serialize
-    batches per session if that matters."""
-    while _INTERMEDIATE_PERSISTS:
-        _INTERMEDIATE_PERSISTS.pop().unpersist(blocking=blocking)
 
 
 def cdc_to_retractions(
@@ -113,6 +102,7 @@ def incremental_agg(
     keys: Sequence[str],
     sums: dict[str, str],
     count_col: str = "n_rows",
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Maintain ``base`` — a grouped aggregate with columns
     ``keys + [count_col] + [out, out_nn for out in sums]`` as produced
@@ -153,7 +143,7 @@ def incremental_agg(
     # computation instead of re-deriving the whole retraction feed per
     # branch (r11: the un-persisted plan re-expanded the feed lineage
     # combinatorially — 28 scans of the fact parquet for one maintainer)
-    delta = _persist(retractions.groupBy(*keys).agg(*delta_aggs))
+    delta = _persist(retractions.groupBy(*keys).agg(*delta_aggs), persisted)
 
     def _merge(col: str):
         return F.coalesce(F.col(f"b.{col}"), F.lit(0)) + F.coalesce(
@@ -229,6 +219,7 @@ def incremental_distinct(
     value_col: str,
     mult_col: str = "m",
     count_col: str = "n_distinct",
+    persisted: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Maintain a per-group COUNT(DISTINCT ``value_col``) view from a
     signed retraction stream via a MULTIPLICITY TABLE — the classic
@@ -265,7 +256,7 @@ def incremental_distinct(
         .groupBy(*mk)
         .agg(F.sum(SIGN).cast("long").alias("_dm"))
     )
-    delta = _persist(delta)
+    delta = _persist(delta, persisted)
     bdelta = F.broadcast(delta)
     untouched_m = mult.join(bdelta.select(*mk), mk, "left_anti")
     touched_m = mult.join(bdelta.select(*mk), mk, "left_semi")
@@ -280,7 +271,7 @@ def incremental_distinct(
             ).alias(mult_col),
         )
     )
-    merged = _persist(merged)
+    merged = _persist(merged, persisted)
     new_mult = untouched_m.unionByName(
         merged.filter(F.col(mult_col) > 0).select(*mk, mult_col)
     )
@@ -294,7 +285,7 @@ def incremental_distinct(
         .cast("long")
         .alias("_dd")
     ).filter(F.col("_dd") != 0)
-    crossings = _persist(crossings)
+    crossings = _persist(crossings, persisted)
     bcross = F.broadcast(crossings)
     untouched_c = counts.join(bcross.select(*keys), keys, "left_anti")
     touched_c = counts.join(bcross.select(*keys), keys, "left_semi")
@@ -322,6 +313,7 @@ def incremental_minmax(
     agg: str = "max",
     count_col: str = "n_rows",
     out_col: str | None = None,
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Maintain a per-group MIN/MAX — the classic NON-self-maintainable
     aggregate — with rescans confined to the groups that need one.
@@ -359,7 +351,7 @@ def incremental_minmax(
         best_in(F.when((sgn > 0) & v.isNotNull(), v)).alias("_ins"),
         best_in(F.when((sgn < 0) & v.isNotNull(), v)).alias("_del"),
     )
-    delta = _persist(delta)
+    delta = _persist(delta, persisted)
     bdelta = F.broadcast(delta)
     untouched = base.join(bdelta.select(*keys), keys, "left_anti")
     touched = base.join(bdelta.select(*keys), keys, "left_semi")
@@ -378,7 +370,7 @@ def incremental_minmax(
         )
         .filter(F.col(count_col) > 0)
     )
-    m = _persist(m)
+    m = _persist(m, persisted)
     tie = (
         F.col("_del") >= F.col("_old") if agg == "max" else F.col("_del") <= F.col("_old")
     )
@@ -423,6 +415,7 @@ def incremental_topk(
     k: int,
     count_col: str = "n_rows",
     out_col: str = "topk",
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Maintain a per-group descending top-``k`` value array — the
     k-extremes generalization of :func:`incremental_minmax`, closing
@@ -455,7 +448,7 @@ def incremental_topk(
         ).alias("_ins"),
         F.max(F.when((sgn < 0) & v.isNotNull(), v)).alias("_del_mx"),
     )
-    delta = _persist(delta)
+    delta = _persist(delta, persisted)
     bdelta = F.broadcast(delta)
     untouched = base.join(bdelta.select(*keys), keys, "left_anti")
     touched = base.join(bdelta.select(*keys), keys, "left_semi")
@@ -476,7 +469,7 @@ def incremental_topk(
         )
         .filter(F.col(count_col) > 0)
     )
-    m = _persist(m)
+    m = _persist(m, persisted)
     kth = F.element_at(F.col("_old"), F.size("_old"))  # smallest stored
     needs_rescan = F.col("_del_mx").isNotNull() & (
         (F.size("_old") < k) | (F.col("_del_mx") >= kth)
@@ -511,6 +504,7 @@ def delta_join(
     b_old: DataFrame,
     db: DataFrame,
     on: str | Sequence[str],
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Signed delta of the equi-join view ``V = A JOIN B`` from signed
     deltas of its inputs — the bilinear join-maintenance identity
@@ -551,8 +545,8 @@ def delta_join(
     out = on + a_cols + b_cols + [SIGN]
     # each delta feeds two of the three identity terms; they are small
     # by contract (broadcast below), so persist to compute each once
-    da_r = _persist(da.withColumnRenamed(SIGN, sa))
-    db_r = _persist(db.withColumnRenamed(SIGN, sb))
+    da_r = _persist(da.withColumnRenamed(SIGN, sa), persisted)
+    db_r = _persist(db.withColumnRenamed(SIGN, sb), persisted)
     t1 = b_old.join(F.broadcast(da_r), on).select(
         *on, *a_cols, *b_cols, F.col(sa).alias(SIGN)
     )

@@ -39,30 +39,6 @@ from beehive_spark.queries.llm import dedup_clusters
 from beehive_spark.sources.layout import export_training_shards
 
 
-# Slim decision frames persisted by curation_fate, registered so a
-# caller that materializes the fate frame can release them.  The
-# bench/driver convention (clear cache between runs) covers the
-# @query-decorated path; this registry covers SERVICE callers that
-# invoke the pipeline repeatedly in one long-lived session — without a
-# release each invocation would leak three cache entries.
-_FATE_PERSISTS: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _FATE_PERSISTS.append(df)
-    return df
-
-
-def release_fate_persists(blocking: bool = False) -> None:
-    """Unpersist the slim decision frames cached by
-    :func:`curation_fate` since the last call.  Call after the fate
-    frame (and anything derived from it) is materialized; releasing
-    earlier loses sharing, never correctness."""
-    while _FATE_PERSISTS:
-        _FATE_PERSISTS.pop().unpersist(blocking=blocking)
-
-
 def _fingerprint(col):
     """Exact-dup fingerprint: md5 of whitespace-normalized lowercase
     text (same rule as the dedup_exact / dedup_incremental oracles)."""
@@ -82,6 +58,7 @@ def curation_fate(
     spark: SparkSession,
     sf_dir: str,
     survivorship: str = "min_id",
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The pipeline's decision lineage WITHOUT the write: one row per
     input document with its FIRST-FAILING-STAGE fate
@@ -101,7 +78,13 @@ def curation_fate(
     dedup groups 16-byte hashes; near-dup reuses the banded-candidate
     + min-label-CC shape audited in PLANS.md; the fate assembly is
     two left joins of slim (doc_id, dup_of) drop lists against the
-    (doc_id,)-keyed gate frame."""
+    (doc_id,)-keyed gate frame.
+
+    ``persisted`` collects the three slim decision frames this call
+    persists (the library's out-list convention, as in
+    ``operators.ivm``): a caller that materializes the fate frame
+    unpersists them after; one that passes no list (the registered
+    query) leaves them to the session's cache clearing."""
     if survivorship not in ("min_id", "longest"):
         raise ValueError(f"unknown survivorship policy: {survivorship}")
     docs = load(spark, sf_dir, "documents")
@@ -113,9 +96,9 @@ def curation_fate(
     # (id, keep, reasons) decision frame, not the text (r11 interleaved
     # A/B with the two drop-list persists below: wins every adjacent
     # pair, warm best 6.70 -> 6.25 s, cold 20.8 -> 11.3 s)
-    q = _persist(quality_filter(spark, sf_dir).select(
+    q = quality_filter(spark, sf_dir).select(
         "doc_id", "keep", "fail_reasons"
-    ))
+    ).persist()
 
     # stage 2: exact dedup among quality survivors — keep min doc_id
     # per fingerprint
@@ -127,10 +110,11 @@ def curation_fate(
     # slim (doc_id, dup_of) drop list, consumed by the survivor
     # anti-join and the fate assembly — persist so the fingerprint
     # stage computes once
-    exact_dropped = _persist(
+    exact_dropped = (
         fp.join(canonical_exact, "fp")
         .filter(F.col("doc_id") != F.col("keep_id"))
         .select("doc_id", F.col("keep_id").alias("dup_of"))
+        .persist()
     )
 
     # stage 3: near-dup collapse — within each connected component of
@@ -142,7 +126,9 @@ def curation_fate(
     # cluster-members-only frame, consumed by the canonical election
     # AND the drop-list join — persist so the survivor anti-join
     # lineage computes once
-    alive_clusters = _persist(clusters.join(survivors2, "doc_id"))
+    alive_clusters = clusters.join(survivors2, "doc_id").persist()
+    if persisted is not None:
+        persisted += [q, exact_dropped, alive_clusters]
     if survivorship == "longest":
         from pyspark.sql import Window
 
@@ -216,7 +202,8 @@ def curate_corpus(
     # stages 1-3 + attribution live in curation_fate (also the
     # driver-registered `curation_pipeline` query, so the composed
     # lineage is oracle-verified, not just each stage alone)
-    fate = curation_fate(spark, sf_dir, survivorship)
+    held: list[DataFrame] = []
+    fate = curation_fate(spark, sf_dir, survivorship, persisted=held)
 
     # stage 4+5: scrub surviving text, export deterministic shards
     survivors = fate.filter(F.col("fate") == "kept").select("doc_id")
@@ -230,7 +217,8 @@ def curate_corpus(
     fate.write.mode("overwrite").parquet(os.path.join(out_dir, "report"))
     # the fate frame and the shard export are both on disk now — the
     # slim per-invocation decision caches have served every consumer
-    release_fate_persists()
+    for df in held:
+        df.unpersist()
 
     report = spark.read.parquet(os.path.join(out_dir, "report"))
     counts = {r["fate"]: r["n"] for r in report.groupBy("fate").agg(

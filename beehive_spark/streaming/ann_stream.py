@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from beehive_spark.operators.ann_index import append_ivf_index, read_meta, write_meta
+from beehive_spark.streaming.events import drain
 
 
 def _last_stream_batch(index_dir: str, lineage: str) -> int:
@@ -109,13 +110,8 @@ def run_ann_index_append_stream(
         meta["stream_lineage"] = lineage
         write_meta(index_dir, meta)
 
-    q = (
-        vectors.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        vectors.writeStream.foreachBatch(sink),
+        checkpoint,
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()

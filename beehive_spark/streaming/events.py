@@ -25,6 +25,57 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+
+def drain(writer: DataStreamWriter, checkpoint: str, timeout_sec: int = 120) -> None:
+    """Run a stream writer to completion: checkpoint at ``checkpoint``,
+    process everything available (``Trigger.AvailableNow``), return once
+    the query has stopped itself.  Every library stream runs through
+    here.
+
+    A query still running after ``timeout_sec`` is stopped and
+    ``TimeoutError`` raised: returning normally would report a stream
+    whose table silently misses batches as fully applied.  A failed
+    batch surfaces as the query's own exception."""
+    q = (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"stream at {checkpoint} did not drain within {timeout_sec}s"
+        )
+
+
+def compact_changes(
+    feed: DataFrame, keys: list[str], cols: list[str], seq_col: str = "seq"
+) -> DataFrame:
+    """Last change per key of a CDC feed (standard compaction), as
+    ``change_type`` plus ``cols``.  A column carried as ``<c>_new`` /
+    ``<c>_old`` payloads resolves to ``coalesce(new, old)`` (deletes
+    carry their key only on the ``_old`` side), a plain column as-is.
+    Keys are IMMUTABLE in the feed (standard CDC contract: a
+    key-changing update arrives as delete+insert); the highest
+    ``seq_col`` wins."""
+
+    def col_of(c):
+        new_c, old_c = f"{c}_new", f"{c}_old"
+        if new_c in feed.columns:
+            return F.coalesce(F.col(new_c), F.col(old_c)).alias(c)
+        return F.col(c)
+
+    w = Window.partitionBy(
+        *[col_of(k).alias(f"__k_{k}") for k in keys]
+    ).orderBy(F.col(seq_col).desc())
+    return (
+        feed.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("change_type", *[col_of(c) for c in dict.fromkeys(cols)])
+    )
+
 
 def event_schema(spark: SparkSession, path: str) -> T.StructType:
     """Probe the on-disk schema of an events parquet (footer-only read).
@@ -275,16 +326,11 @@ def run_topk_foreachbatch(
             .parquet(out_dir)
         )
 
-    q = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "topk"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        counts.writeStream.outputMode("complete").foreachBatch(sink),
+        os.path.join(checkpoint_dir, "topk"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def user_value_extremes(events: DataFrame) -> DataFrame:
@@ -366,17 +412,11 @@ def run_stream_to_memory(
 ) -> None:
     """Execute a streaming plan to a memory sink with AvailableNow
     (process-everything-then-stop), the batch-verifiable harness."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, name))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        os.path.join(checkpoint_dir, name),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def hourly_type_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -423,16 +463,11 @@ def run_anomaly_foreachbatch(
             .parquet(out_dir)
         )
 
-    q = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "anomaly"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        counts.writeStream.outputMode("complete").foreachBatch(sink),
+        os.path.join(checkpoint_dir, "anomaly"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_cdc_apply_stream(
@@ -464,24 +499,15 @@ def run_cdc_apply_stream(
             return
         # last change per key wins within the batch (CDC compaction);
         # a monotonic per-record sequence column is required
-        w = Window.partitionBy(*key_cols).orderBy(F.col("seq").desc())
-        compacted = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "seq")
-        )
+        payload = [c for c in batch_df.columns if c not in ("change_type", "seq")]
+        compacted = compact_changes(batch_df, key_cols, payload)
         apply_cdc_parquet(spark, table_path, compacted, keys=key_cols)
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "cdc_apply"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        changes.writeStream.foreachBatch(sink),
+        os.path.join(checkpoint_dir, "cdc_apply"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def holt_forecast_stream(events: DataFrame) -> DataFrame:

@@ -10,12 +10,35 @@ Why the retraction algebra is the right streaming primitive: signed
 deltas are ADDITIVE, so within-micro-batch ordering is irrelevant —
 an entity updated five times in one batch contributes a telescoping
 sum in which intermediate states cancel exactly (no last-change-per-key
-compaction pass needed, unlike the row-level apply).  Exactly-once on
-an at-least-once source comes from foreachBatch's deterministic batch
-ids: the last applied id is recorded in a ``_ivm_meta.json`` INSIDE the
-staged table directory before the atomic swap (so data and replay marker
-commit in one rename — no crash window where the fold is live but
-unrecorded), and replayed batches are skipped, making the sink idempotent.
+compaction pass needed, unlike the row-level apply).
+
+The exactly-once protocol, stated once for every maintainer here.
+foreachBatch batch ids are deterministic, so each artifact records the
+last id it applied and a replayed batch is skipped:
+
+- **Drain.** Every stream runs through ``events.drain``:
+  ``Trigger.AvailableNow`` to completion, ``TimeoutError`` (after
+  stopping the query) if it runs past ``timeout_sec``.
+- **Table fold** (``_table_sink``: ivm_agg, checksum, ohlc, hll).  A
+  single parquet table; the maintainer supplies only its fold
+  ``(batch_df, base, persisted) -> fresh``.  Empty and replayed batches
+  (``_last_applied``) are skipped; ``_commit_swap`` writes the fresh
+  table with its batch id in ``_ivm_meta.json`` INSIDE the staged
+  directory, so data and replay marker commit in one rename (no crash
+  window where the fold is live but unrecorded); then exactly the
+  frames this batch's fold persisted are unpersisted (``_releasing``).
+  The mg summary keeps its own sink body (its row count doubles as the
+  emptiness check) on the same ``_last_applied`` / ``_commit_swap``
+  pair.
+- **Store fold** (``shingle_store.store_fold``: novelty, dedup, vocab,
+  countmin).  A bucketed store; per-batch log partitions are
+  idempotent overwrites written FIRST, the store's manifest rename
+  carrying the batch id commits SECOND.
+- **Multi-artifact sinks** (ivm_distinct, cdc_materialize, ivm_join)
+  own their commit ordering and crash repair, documented per function,
+  and release their per-batch persists through the same ``_releasing``
+  sink wrapper.
+
 Batch ids are scoped to ONE checkpoint lineage (Spark's foreachBatch
 contract): rebuilding a lost checkpoint and re-ingesting the feed with
 DIFFERENT batching can renumber already-applied changes past the
@@ -38,12 +61,10 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from beehive_spark.operators.ivm import (
-    cdc_to_retractions,
-    incremental_agg,
-    release_intermediates,
-)
+from beehive_spark.operators.ivm import cdc_to_retractions, incremental_agg
 from beehive_spark.sources.layout import dir_swap_lock, promote_staging
+from beehive_spark.streaming.events import compact_changes, drain
+from beehive_spark.streaming.shingle_store import store_fold
 
 
 META_NAME = "_ivm_meta.json"
@@ -147,6 +168,38 @@ def _commit_swap(fresh: DataFrame, table_path: str, batch_id: int) -> None:
     _promote(_stage(fresh, table_path, batch_id), table_path)
 
 
+def _releasing(body):
+    """A foreachBatch sink running ``body(batch_df, batch_id,
+    persisted)`` with a fresh ``persisted`` list per micro-batch, and
+    unpersisting exactly the frames the body appended to it once the
+    body returns (after its commits) or raises."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        persisted: list[DataFrame] = []
+        try:
+            body(batch_df, batch_id, persisted)
+        finally:
+            for df in persisted:
+                df.unpersist()
+
+    return sink
+
+
+def _table_sink(spark: SparkSession, table_path: str, fold):
+    """The foreachBatch sink of a single-table maintainer: skip an
+    empty or replayed batch, fold it into the live table with
+    ``fold(batch_df, base, persisted) -> fresh``, commit through
+    ``_commit_swap``, then release the fold's persists."""
+
+    def body(batch_df: DataFrame, batch_id: int, persisted) -> None:
+        if batch_df.isEmpty() or batch_id <= _last_applied(table_path):
+            return  # nothing to fold, or a replay already folded in
+        fresh = fold(batch_df, spark.read.parquet(table_path), persisted)
+        _commit_swap(fresh, table_path, batch_id)
+
+    return _releasing(body)
+
+
 def run_ivm_agg_stream(
     spark: SparkSession,
     changes: DataFrame,
@@ -165,33 +218,22 @@ def run_ivm_agg_stream(
     (``change_type`` + ``<col>_old`` / ``<col>_new`` payloads).
 
     The table must exist (write the initial aggregate once from a
-    batch backfill); each micro-batch is folded in with a staged
-    write + atomic swap, and the applied batch id is recorded so
-    source replays are no-ops.
+    batch backfill); each micro-batch is one table fold (module
+    docstring).
     """
     value_cols = list(sums.values()) if values is None else list(values)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if batch_id <= _last_applied(table_path):
-            return  # replayed micro-batch: already folded in
+    def fold(batch_df: DataFrame, base: DataFrame, persisted) -> DataFrame:
         retr = cdc_to_retractions(batch_df, keys=keys, values=value_cols)
-        base = spark.read.parquet(table_path)
-        fresh = incremental_agg(base, retr, keys, sums, count_col=count_col)
-        _commit_swap(fresh, table_path, batch_id)
-        release_intermediates()  # free the maintainer's per-batch persists
+        return incremental_agg(
+            base, retr, keys, sums, count_col=count_col, persisted=persisted
+        )
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "ivm_agg"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        changes.writeStream.foreachBatch(_table_sink(spark, table_path, fold)),
+        os.path.join(checkpoint_dir, "ivm_agg"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_ivm_distinct_stream(
@@ -230,13 +272,14 @@ def run_ivm_distinct_stream(
       (the view is a pure function of the aux table — one grouped
       count over |distinct values| rows, the recovery-only slow path).
 
-    Same single-checkpoint-lineage caveat as ``run_ivm_agg_stream``.
+    Same single-checkpoint-lineage caveat as every maintainer here
+    (module docstring).
     """
     from pyspark.sql import functions as F
 
     from beehive_spark.operators.ivm import incremental_distinct
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def sink(batch_df: DataFrame, batch_id: int, persisted) -> None:
         if batch_df.isEmpty():
             return
         m_last = _last_applied(mult_path)
@@ -257,27 +300,19 @@ def run_ivm_distinct_stream(
         counts = spark.read.parquet(counts_path)
         new_mult, new_counts = incremental_distinct(
             mult, counts, retr, keys, value_col,
-            mult_col=mult_col, count_col=count_col,
+            mult_col=mult_col, count_col=count_col, persisted=persisted,
         )
         # the view's lazy plan reads the PRE-batch mult files; pin its
         # rows before the mult swap replaces them
         new_counts = new_counts.localCheckpoint(eager=True)
         _commit_swap(new_mult, mult_path, batch_id)
         _commit_swap(new_counts, counts_path, batch_id)
-        release_intermediates()  # free the maintainer's per-batch persists
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "ivm_distinct")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        changes.writeStream.foreachBatch(_releasing(sink)),
+        os.path.join(checkpoint_dir, "ivm_distinct"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_cdc_materialize_stream(
@@ -316,15 +351,12 @@ def run_cdc_materialize_stream(
     maps extra aggregate columns to source value columns maintained as
     MAX.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from beehive_spark.operators.ivm import incremental_minmax
     from beehive_spark.sources.writers import apply_cdc_parquet
 
     value_cols = sorted({*sums.values(), *(minmax or {}).values()})
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def sink(batch_df: DataFrame, batch_id: int, persisted) -> None:
         if batch_df.isEmpty():
             return
         if batch_id <= _last_applied(agg_path):
@@ -334,33 +366,12 @@ def run_cdc_materialize_stream(
         sum_state = [count_col] + [x for o in sums for x in (o, f"{o}_nn")]
         fresh = incremental_agg(
             base.select(*agg_keys, *sum_state), retr, agg_keys, sums,
-            count_col=count_col,
+            count_col=count_col, persisted=persisted,
         )
         # row table next: compact to last change per key, then apply —
-        # so the minmax rescan below sees the post-batch rows.  Row
-        # keys are IMMUTABLE in the feed (standard CDC contract: a
-        # key-changing update must arrive as delete+insert), so each
-        # column resolves as coalesce(new, old) — deletes carry their
-        # key only on the _old side.
-        def col_of(c):
-            new_c, old_c = f"{c}_new", f"{c}_old"
-            if new_c in batch_df.columns:
-                return F.coalesce(F.col(new_c), F.col(old_c)).alias(c)
-            return F.col(c)
-
-        w = Window.partitionBy(
-            *[col_of(k).alias(f"__k_{k}") for k in row_keys]
-        ).orderBy(F.col(seq_col).desc())
-        compacted = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
-                "change_type",
-                *[
-                    col_of(c)
-                    for c in dict.fromkeys([*row_keys, *agg_keys, *value_cols])
-                ],
-            )
+        # so the minmax rescan below sees the post-batch rows
+        compacted = compact_changes(
+            batch_df, row_keys, [*row_keys, *agg_keys, *value_cols], seq_col
         )
         apply_cdc_parquet(spark, row_path, compacted, keys=row_keys)
         if minmax:
@@ -375,26 +386,18 @@ def run_cdc_materialize_stream(
                     agg="max",
                     count_col=count_col,
                     out_col=out,
+                    persisted=persisted,
                 )
                 fresh = fresh.drop(out).join(
                     mm.select(*agg_keys, out), agg_keys, "left"
                 )
         _commit_swap(fresh, agg_path, batch_id)
-        release_intermediates()  # free the maintainer's per-batch persists
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option(
-            "checkpointLocation",
-            os.path.join(checkpoint_dir or agg_path + "_ckpt", "m"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        changes.writeStream.foreachBatch(_releasing(sink)),
+        os.path.join(checkpoint_dir or agg_path + "_ckpt", "m"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_ivm_join_agg_stream(
@@ -448,31 +451,12 @@ def run_ivm_join_agg_stream(
     ``delta_join``), the row applies broadcast their touched keys, and
     the aggregate fold broadcasts the touched groups — none of the
     three base artifacts ever repartitions."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from beehive_spark.operators.ivm import delta_join
     from beehive_spark.sources.writers import apply_cdc_parquet
 
-    def compact(feed: DataFrame, keys: list[str], cols: list[str]) -> DataFrame:
-        # last change per key (CDC contract: keys immutable in the
-        # feed; key changes arrive as delete+insert)
-        def col_of(c):
-            new_c, old_c = f"{c}_new", f"{c}_old"
-            if new_c in feed.columns:
-                return F.coalesce(F.col(new_c), F.col(old_c)).alias(c)
-            return F.col(c)
-
-        w = Window.partitionBy(
-            *[col_of(k).alias(f"__k_{k}") for k in keys]
-        ).orderBy(F.col(seq_col).desc())
-        return (
-            feed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("change_type", *[col_of(c) for c in dict.fromkeys(cols)])
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def sink(batch_df: DataFrame, batch_id: int, persisted) -> None:
         if batch_df.isEmpty():
             return
         if batch_id <= _last_applied(view_path):
@@ -489,10 +473,12 @@ def run_ivm_join_agg_stream(
                 fa, keys=a_keys, values=[join_key] + a_values
             )
             db = cdc_to_retractions(fb, keys=[join_key], values=b_values)
-            dv = delta_join(a_old, da, b_old, db, on=join_key)
+            dv = delta_join(
+                a_old, da, b_old, db, on=join_key, persisted=persisted
+            )
             fresh = incremental_agg(
                 spark.read.parquet(view_path), dv, agg_keys, sums,
-                count_col=count_col,
+                count_col=count_col, persisted=persisted,
             )
             _stage(fresh, view_path, batch_id)
         # idempotent keyed rewrites (safe to redo on replay); a
@@ -502,29 +488,24 @@ def run_ivm_join_agg_stream(
         if not fa.isEmpty():
             apply_cdc_parquet(
                 spark, a_path,
-                compact(fa, a_keys, a_keys + [join_key] + a_values),
+                compact_changes(
+                    fa, a_keys, a_keys + [join_key] + a_values, seq_col
+                ),
                 keys=a_keys,
             )
         if not fb.isEmpty():
             apply_cdc_parquet(
-                spark, b_path, compact(fb, [join_key], [join_key] + b_values),
+                spark, b_path,
+                compact_changes(fb, [join_key], [join_key] + b_values, seq_col),
                 keys=[join_key],
             )
         _promote(staging, view_path)
-        release_intermediates()  # free the maintainer's per-batch persists
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "ivm_join")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        changes.writeStream.foreachBatch(_releasing(sink)),
+        os.path.join(checkpoint_dir, "ivm_join"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_ivm_checksum_stream(
@@ -547,12 +528,9 @@ def run_ivm_checksum_stream(
     component is a group under its own operation, so a micro-batch
     costs one <=n_buckets-row broadcast merge regardless of history.
 
-    Exactly-once is the SIMPLEST of the materialize family because
-    the view is fully self-maintaining (no auxiliary artifact): one
-    staged write commits data and batch id together (`_commit_swap`),
-    and a replayed micro-batch short-circuits on the recorded id.
-    The table must exist (write the initial ``build_checksum`` once
-    from the batch backfill).
+    The view is fully self-maintaining (no auxiliary artifact), so it
+    is one table fold.  The table must exist (write the initial
+    ``build_checksum`` once from the batch backfill).
 
     This closes the merge reconciliation loop in streaming form: the
     destination's fingerprints stay current with the write feed in
@@ -561,16 +539,11 @@ def run_ivm_checksum_stream(
     without ever diffing full tables."""
     from beehive_spark.operators.ivm import incremental_checksum
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if batch_id <= _last_applied(table_path):
-            return  # replayed micro-batch: already folded in
-        base = spark.read.parquet(table_path)
+    def fold(batch_df: DataFrame, base: DataFrame, persisted) -> DataFrame:
         # mod plumbs through like n_buckets: a table backfilled with a
         # non-default modulus maintained under the default would fold
         # wrong residues into sum_fp with no error (r8 review)
-        fresh = incremental_checksum(
+        return incremental_checksum(
             base,
             batch_df,
             hash_col=hash_col,
@@ -578,20 +551,12 @@ def run_ivm_checksum_stream(
             n_buckets=n_buckets,
             mod=mod,
         )
-        _commit_swap(fresh, table_path, batch_id)
 
-    q = (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "ivm_checksum")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        changes.writeStream.foreachBatch(_table_sink(spark, table_path, fold)),
+        os.path.join(checkpoint_dir, "ivm_checksum"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_ohlc_stream(
@@ -613,10 +578,9 @@ def run_ohlc_stream(
     close_ts/close_id ride along so later, earlier-timestamped data —
     late arrivals included — can still win the open or lose the
     close); project the standard (event_type, bucket, open, high,
-    low, close, n_events) off it for consumers.  Exactly-once via the
-    family's staged write committing data + batch id together; replays
-    short-circuit on the recorded id.  The table must exist (write an
-    empty frame or a batch backfill first).
+    low, close, n_events) off it for consumers.  Each micro-batch is
+    one table fold.  The table must exist (write an empty frame or a
+    batch backfill first).
 
     Crash window: SINGLE-ARTIFACT — one ``_commit_swap`` per batch, so
     the only window is "table swap landed, checkpoint commit marker
@@ -657,13 +621,8 @@ def run_ohlc_stream(
             "high", "low", "n_events",
         )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if batch_id <= _last_applied(table_path):
-            return  # replayed micro-batch: already folded in
+    def fold(batch_df: DataFrame, t: DataFrame, persisted) -> DataFrame:
         d = partial(batch_df)
-        t = spark.read.parquet(table_path)
         tt, dd = t.alias("t"), d.alias("d")
         on = ["event_type", "bucket"]
         j = tt.join(dd, on, "full_outer")
@@ -678,7 +637,7 @@ def run_ohlc_stream(
         close_from_t = F.col("d.close_ts").isNull() | (
             F.col("t.close_ts").isNotNull() & (t_close >= d_close)
         )
-        fresh = j.select(
+        return j.select(
             *on,
             F.when(open_from_t, F.col("t.open_ts")).otherwise(F.col("d.open_ts")).alias("open_ts"),
             F.when(open_from_t, F.col("t.open_id")).otherwise(F.col("d.open_id")).alias("open_id"),
@@ -693,18 +652,12 @@ def run_ohlc_stream(
                 + F.coalesce(F.col("d.n_events"), F.lit(0).cast("long"))
             ).alias("n_events"),
         ).select(*state_cols)
-        _commit_swap(fresh, table_path, batch_id)
 
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "ohlc"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        events.writeStream.foreachBatch(_table_sink(spark, table_path, fold)),
+        os.path.join(checkpoint_dir, "ohlc"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_mg_summary_stream(
@@ -739,9 +692,11 @@ def run_mg_summary_stream(
     upper bound, or re-count candidates exactly as the batch
     operator's second pass does.
 
-    Exactly-once exactly as the family: staged write commits data +
-    batch id in one rename, replays short-circuit on the recorded id.
-    The table must exist (write the sentinel-only frame first).
+    Its sink keeps its own body (the batch row count it needs anyway
+    doubles as the emptiness check, so the table fold's ``isEmpty``
+    would add a job) on the table fold's ``_last_applied`` /
+    ``_commit_swap`` pair.  The table must exist (write the
+    sentinel-only frame first).
     Crash window: single-artifact like the ohlc maintainer — the only
     window (swap landed, checkpoint marker lost) repairs by the id
     guard on replay (tests/test_streaming.py::
@@ -799,16 +754,11 @@ def run_mg_summary_stream(
         )
         _commit_swap(fresh, table_path, batch_id)
 
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "mg"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        events.writeStream.foreachBatch(sink),
+        os.path.join(checkpoint_dir, "mg"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_novelty_stream(
@@ -873,15 +823,12 @@ def run_novelty_stream(
     STRESS novelty_store_fold row holds fold cost flat by scaling
     n_buckets with the store).
 
-    Exactly-once across the artifacts: the out and corrections
-    partitions are IDEMPOTENT overwrites keyed by batch id and write
-    FIRST; the store commit (versioned bucket dirs + one atomic
-    manifest rename carrying the batch id) lands SECOND.  A crash
-    between them replays the batch: both log partitions rewrite
-    deterministically to identical content (the pre-commit manifest
-    still exposes the pre-batch store), then the buckets fold once.
-    A replay after the manifest rename short-circuits on the recorded
-    id.  (Kill-between-artifacts test: tests/test_streaming_novelty.py.)
+    Each micro-batch is one store fold (``shingle_store.store_fold``,
+    MIN): the out and corrections partitions write FIRST, the store's
+    manifest rename SECOND; a crash between them replays the batch
+    against the pre-batch store, so both partitions rewrite to
+    identical content before the buckets fold once
+    (kill-between-artifacts test: tests/test_streaming_novelty.py).
 
     Scale shape per micro-batch: shingles shuffle once for the
     in-batch MIN (xxhash64 keys, the jaccard idiom), equi-join the
@@ -892,48 +839,26 @@ def run_novelty_stream(
     from pyspark.sql import functions as F
 
     from beehive_spark.queries.llm import _shingles, _tokens
-    from beehive_spark.streaming.shingle_store import (
-        bucket_of,
-        commit_buckets,
-        gc_store,
-        maybe_split_store,
-        read_buckets,
-        read_manifest,
-    )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        manifest = read_manifest(store_path)
-        if batch_id <= manifest["batch_id"]:
-            return  # replayed micro-batch: already folded (out dirs exist)
-        gc_store(store_path, manifest)  # prior batch's superseded dirs
-        if split_threshold_bytes is not None:
-            manifest = maybe_split_store(
-                spark, store_path, manifest, split_threshold_bytes
-            )
-        n_buckets = manifest["n_buckets"]
+    def shingles(batch_df: DataFrame) -> DataFrame:
         # token array materializes first (the text_ngram_novelty /
         # jaccard idiom: inlining the regex into the shingle lambda
         # re-evaluates it per n-gram slot)
-        sh = batch_df.select(
+        return batch_df.select(
             "doc_id", _tokens(F.col("text")).alias("w")
         ).select("doc_id", F.explode(_shingles(F.col("w"))).alias("s"))
-        bmin = (
-            sh.groupBy("s")
-            .agg(F.min("doc_id").alias("bfd"))
-            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
-            .localCheckpoint(eager=True)  # consumed 4x below
+
+    def keyed(batch_df: DataFrame) -> DataFrame:
+        return shingles(batch_df).groupBy("s").agg(
+            F.min("doc_id").alias("value")
         )
-        touched = sorted(
-            r["bk"] for r in bmin.select("bk").distinct().collect()
-        )  # bounded by n_buckets
-        store = read_buckets(spark, store_path, manifest, touched)
-        merged = bmin.join(store, "s", "left")
+
+    def logs(batch_df, batch, store) -> dict:
+        merged = batch.join(store, "s", "left")
         # a shingle is new for doc d iff d is its global first sighting
-        gfirst = F.least(F.coalesce("fd", "bfd"), F.col("bfd"))
+        gfirst = F.least(F.coalesce("fd", "value"), F.col("value"))
         per_doc = (
-            sh.join(
+            shingles(batch_df).join(
                 merged.select("s", gfirst.alias("gf")), "s"
             )
             .groupBy("doc_id")
@@ -954,47 +879,26 @@ def run_novelty_stream(
                 ).alias("novelty_micro"),
             )
         )
-        # artifact 1 FIRST: idempotent per-batch overwrite
-        per_doc.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
-        # artifact 2: retractions for credit an out-of-order batch
-        # transferred away from already-emitted docs (bfd < fd: the
-        # stored holder loses the shingle to the earlier-id newcomer)
+        # retractions for credit an out-of-order batch transferred away
+        # from already-emitted docs (value < fd: the stored holder
+        # loses the shingle to the earlier-id newcomer)
         corrections = (
-            merged.filter(F.col("fd").isNotNull() & (F.col("bfd") < F.col("fd")))
+            merged.filter(
+                F.col("fd").isNotNull() & (F.col("value") < F.col("fd"))
+            )
             .groupBy(F.col("fd").alias("doc_id"))
             .agg((-F.count(F.lit(1))).cast("long").alias("n_new_delta"))
         )
-        corrections.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "corrections", f"batch={batch_id}")
-        )
-        # artifact 3: fold ONLY the touched buckets (nulls-safe MIN),
-        # commit point = one atomic manifest rename with the batch id
-        fresh = (
-            store.join(bmin.drop("bk"), "s", "full_outer")
-            .select(
-                "s",
-                F.least(
-                    F.coalesce("fd", "bfd"), F.coalesce("bfd", "fd")
-                ).alias("fd"),
-            )
-            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
-        )
-        commit_buckets(fresh, store_path, manifest, batch_id)
+        return {"": per_doc, "corrections": corrections}
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "novelty")
-        )
-        .trigger(availableNow=True)
-        .start()
+    sink = store_fold(
+        spark, store_path, out_dir, keyed, "min", logs, split_threshold_bytes
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
+    drain(
+        docs.writeStream.foreachBatch(sink),
+        os.path.join(checkpoint_dir, "novelty"),
+        timeout_sec,
+    )
 
 
 def run_hll_stream(
@@ -1022,21 +926,15 @@ def run_hll_stream(
     instead of COUNT(DISTINCT)ing (whose exact-IVM twin,
     ``run_ivm_distinct_stream``, must carry the full multiset).
 
-    Exactly-once as the family: single artifact, staged write commits
-    data + batch id in one rename, replays short-circuit on the
-    recorded id (and sketch union is idempotent over a replayed batch
-    anyway — belt and suspenders).  The table must exist (write an
-    empty frame first).  The union register state is a deterministic
-    function of the input value SET, so the streamed estimate equals
-    the one-shot batch estimate exactly (pinned in
-    tests/test_streaming_hll.py)."""
+    Each micro-batch is one table fold (and sketch union is idempotent
+    over a replayed batch anyway — belt and suspenders).  The table
+    must exist (write an empty frame first).  The union register state
+    is a deterministic function of the input value SET, so the
+    streamed estimate equals the one-shot batch estimate exactly
+    (pinned in tests/test_streaming_hll.py)."""
     from pyspark.sql import functions as F
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if batch_id <= _last_applied(table_path):
-            return  # replayed micro-batch: already folded in
+    def fold(batch_df: DataFrame, t: DataFrame, persisted) -> DataFrame:
         b = (
             batch_df.filter(F.col(value_col).isNotNull())
             .groupBy(F.col(key_col).alias("k"))
@@ -1045,8 +943,7 @@ def run_hll_stream(
                 F.count(F.lit(1)).cast("long").alias("b_n"),
             )
         )
-        t = spark.read.parquet(table_path)
-        fresh = (
+        return (
             t.join(b, t[key_col] == b["k"], "full_outer")
             .select(
                 F.coalesce(t[key_col], b["k"]).alias(key_col),
@@ -1060,18 +957,12 @@ def run_hll_stream(
                 ).alias("n_events"),
             )
         )
-        _commit_swap(fresh, table_path, batch_id)
 
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "hll"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        events.writeStream.foreachBatch(_table_sink(spark, table_path, fold)),
+        os.path.join(checkpoint_dir, "hll"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
 
 
 def run_dedup_stream(
@@ -1131,11 +1022,9 @@ def run_dedup_stream(
     average-live-bucket-size-triggered bucket doubling, or the
     documented fixed-B sizing contract when ``None``.
 
-    Exactly-once and crash behavior are the novelty maintainer's,
-    through the same code path: verdict + correction partitions are
-    idempotent per-batch overwrites written FIRST; the store's atomic
-    manifest rename carrying the batch id commits SECOND; replays
-    short-circuit on the recorded id.
+    Each micro-batch is one store fold (MIN), the novelty maintainer's
+    code path: verdict + correction partitions FIRST, the store's
+    manifest rename SECOND.
 
     Scale shape per micro-batch: one md5 projection, one fp-keyed MIN
     (16-byte keys), an equi-join against the TOUCHED buckets only,
@@ -1144,15 +1033,6 @@ def run_dedup_stream(
     continuous crawl dedup viable at 100 TB."""
     from pyspark.sql import functions as F
 
-    from beehive_spark.streaming.shingle_store import (
-        bucket_of,
-        commit_buckets,
-        gc_store,
-        maybe_split_store,
-        read_buckets,
-        read_manifest,
-    )
-
     fp_expr = F.coalesce(
         F.md5(
             F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
@@ -1160,33 +1040,17 @@ def run_dedup_stream(
         F.lit("null"),
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        manifest = read_manifest(store_path)
-        if batch_id <= manifest["batch_id"]:
-            return  # replayed micro-batch (out dirs already exist)
-        gc_store(store_path, manifest)
-        if split_threshold_bytes is not None:
-            manifest = maybe_split_store(
-                spark, store_path, manifest, split_threshold_bytes
-            )
-        n_buckets = manifest["n_buckets"]
-        b = batch_df.select("doc_id", fp_expr.alias("s"))
-        bmin = (
-            b.groupBy("s")
-            .agg(F.min("doc_id").alias("bfd"))
-            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
-            .localCheckpoint(eager=True)  # consumed 3x below
+    def keyed(batch_df: DataFrame) -> DataFrame:
+        return batch_df.select("doc_id", fp_expr.alias("s")).groupBy("s").agg(
+            F.min("doc_id").alias("value")
         )
-        touched = sorted(
-            r["bk"] for r in bmin.select("bk").distinct().collect()
-        )
-        store = read_buckets(spark, store_path, manifest, touched)
-        merged = bmin.join(store, "s", "left")
-        gfirst = F.least(F.coalesce("fd", "bfd"), F.col("bfd"))
+
+    def logs(batch_df, batch, store) -> dict:
+        merged = batch.join(store, "s", "left")
+        gfirst = F.least(F.coalesce("fd", "value"), F.col("value"))
         verdicts = (
-            b.join(merged.select("s", gfirst.alias("gf")), "s")
+            batch_df.select("doc_id", fp_expr.alias("s"))
+            .join(merged.select("s", gfirst.alias("gf")), "s")
             .select(
                 "doc_id",
                 (F.col("gf") == F.col("doc_id")).alias("is_new"),
@@ -1197,45 +1061,25 @@ def run_dedup_stream(
                 .alias("dup_of"),
             )
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
         corrections = (
             merged.filter(
-                F.col("fd").isNotNull() & (F.col("bfd") < F.col("fd"))
+                F.col("fd").isNotNull() & (F.col("value") < F.col("fd"))
             )
             .select(
                 F.col("fd").alias("old_canonical"),
-                F.col("bfd").alias("new_canonical"),
+                F.col("value").alias("new_canonical"),
             )
         )
-        corrections.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "corrections", f"batch={batch_id}")
-        )
-        fresh = (
-            store.join(bmin.drop("bk"), "s", "full_outer")
-            .select(
-                "s",
-                F.least(
-                    F.coalesce("fd", "bfd"), F.coalesce("bfd", "fd")
-                ).alias("fd"),
-            )
-            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
-        )
-        commit_buckets(fresh, store_path, manifest, batch_id)
+        return {"": verdicts, "corrections": corrections}
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "dedup")
-        )
-        .trigger(availableNow=True)
-        .start()
+    sink = store_fold(
+        spark, store_path, out_dir, keyed, "min", logs, split_threshold_bytes
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
+    drain(
+        docs.writeStream.foreachBatch(sink),
+        os.path.join(checkpoint_dir, "dedup"),
+        timeout_sec,
+    )
 
 
 def run_vocab_stream(
@@ -1273,10 +1117,8 @@ def run_vocab_stream(
       to carry a type gets the credit); consumers fold
       ``cumsum(n_new_types)`` for the vocabulary-size curve.
 
-    Exactly-once and crash behavior are the family's: the idempotent
-    per-batch out partition writes FIRST, the store's atomic manifest
-    rename carrying the batch id commits SECOND, replays
-    short-circuit on the recorded id.  ``split_threshold_bytes``
+    Each micro-batch is one store fold (SUM): the out partition
+    FIRST, the store's manifest rename SECOND.  ``split_threshold_bytes``
     enables the size-triggered bucket doubling exactly as in
     ``run_novelty_stream``.
 
@@ -1289,75 +1131,32 @@ def run_vocab_stream(
     from pyspark.sql import functions as F
 
     from beehive_spark.queries.llm import _tokens
-    from beehive_spark.streaming.shingle_store import (
-        bucket_of,
-        commit_buckets,
-        gc_store,
-        maybe_split_store,
-        read_buckets,
-        read_manifest,
-    )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        manifest = read_manifest(store_path)
-        if batch_id <= manifest["batch_id"]:
-            return  # replayed micro-batch (out dir already exists)
-        gc_store(store_path, manifest)
-        if split_threshold_bytes is not None:
-            manifest = maybe_split_store(
-                spark, store_path, manifest, split_threshold_bytes
-            )
-        n_buckets = manifest["n_buckets"]
-        toks = batch_df.select(
-            F.explode(_tokens(F.col("text"))).alias("s")
+    def keyed(batch_df: DataFrame) -> DataFrame:
+        return (
+            batch_df.select(F.explode(_tokens(F.col("text"))).alias("s"))
+            .groupBy("s")
+            .agg(F.count(F.lit(1)).cast("long").alias("value"))
         )
-        bc = (
-            toks.groupBy("s")
-            .agg(F.count(F.lit(1)).cast("long").alias("bc"))
-            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
-            .localCheckpoint(eager=True)  # consumed 3x below
-        )
-        touched = sorted(
-            r["bk"] for r in bc.select("bk").distinct().collect()
-        )
-        store = read_buckets(spark, store_path, manifest, touched)
-        merged = bc.join(store, "s", "left")
-        stats = merged.agg(
-            F.sum("bc").cast("long").alias("n_tokens"),
+
+    def logs(batch_df, batch, store) -> dict:
+        stats = batch.join(store, "s", "left").agg(
+            F.sum("value").cast("long").alias("n_tokens"),
             F.count(F.lit(1)).cast("long").alias("n_types_batch"),
             F.sum(F.when(F.col("fd").isNull(), 1).otherwise(0))
             .cast("long")
             .alias("n_new_types"),
         )
-        stats.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
-        fresh = (
-            store.join(bc.drop("bk"), "s", "full_outer")
-            .select(
-                "s",
-                (
-                    F.coalesce("fd", F.lit(0)) + F.coalesce("bc", F.lit(0))
-                ).cast("long").alias("fd"),
-            )
-            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
-        )
-        commit_buckets(fresh, store_path, manifest, batch_id)
+        return {"": stats}
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "vocab")
-        )
-        .trigger(availableNow=True)
-        .start()
+    sink = store_fold(
+        spark, store_path, out_dir, keyed, "sum", logs, split_threshold_bytes
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()
+    drain(
+        docs.writeStream.foreachBatch(sink),
+        os.path.join(checkpoint_dir, "vocab"),
+        timeout_sec,
+    )
 
 
 def run_countmin_stream(
@@ -1399,10 +1198,8 @@ def run_countmin_stream(
       (saturation of the touched-cell fraction is the operational
       signal that w is undersized for the stream's key diversity).
 
-    Exactly-once and crash behavior are the family's: idempotent
-    per-batch out partition FIRST, the store's atomic manifest rename
-    carrying the batch id SECOND, replays short-circuit on the
-    recorded id.
+    Each micro-batch is one store fold (SUM): the out partition
+    FIRST, the store's manifest rename SECOND.
 
     Scale shape per micro-batch: one token explode into a token-keyed
     combinable count, a _CM_D-fold explode of that AGGREGATE into
@@ -1414,27 +1211,12 @@ def run_countmin_stream(
 
     from beehive_spark.queries.core import _CM_D, _CM_W
     from beehive_spark.queries.llm import _tokens
-    from beehive_spark.streaming.shingle_store import (
-        bucket_of,
-        commit_buckets,
-        gc_store,
-        read_buckets,
-        read_manifest,
-    )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        manifest = read_manifest(store_path)
-        if batch_id <= manifest["batch_id"]:
-            return  # replayed micro-batch (out dir already exists)
-        gc_store(store_path, manifest)
-        n_buckets = manifest["n_buckets"]
-        toks = batch_df.select(
-            F.explode(_tokens(F.col("text"))).alias("t")
-        )
-        tc = toks.groupBy("t").agg(
-            F.count(F.lit(1)).cast("long").alias("bc")
+    def keyed(batch_df: DataFrame) -> DataFrame:
+        tc = (
+            batch_df.select(F.explode(_tokens(F.col("text"))).alias("t"))
+            .groupBy("t")
+            .agg(F.count(F.lit(1)).cast("long").alias("bc"))
         )
         cm_cell = F.concat(
             F.col("d").cast("string"),
@@ -1458,7 +1240,7 @@ def run_countmin_stream(
                 % _CM_W
             ).cast("string"),
         )
-        cells = (
+        return (
             tc.select(
                 "t",
                 "bc",
@@ -1466,42 +1248,19 @@ def run_countmin_stream(
             )
             .select(cm_cell.alias("s"), F.col("bc"))
             .groupBy("s")
-            .agg(F.sum("bc").cast("long").alias("bc"))
-            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
-            .localCheckpoint(eager=True)  # consumed 3x below
+            .agg(F.sum("bc").cast("long").alias("value"))
         )
-        touched = sorted(
-            r["bk"] for r in cells.select("bk").distinct().collect()
-        )
-        store = read_buckets(spark, store_path, manifest, touched)
+
+    def logs(batch_df, cells, store) -> dict:
         stats = cells.agg(
-            (F.sum("bc") / F.lit(_CM_D)).cast("long").alias("n_tokens"),
+            (F.sum("value") / F.lit(_CM_D)).cast("long").alias("n_tokens"),
             F.count(F.lit(1)).cast("long").alias("n_cells_touched"),
         )
-        stats.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
-        fresh = (
-            store.join(cells.drop("bk"), "s", "full_outer")
-            .select(
-                "s",
-                (
-                    F.coalesce("fd", F.lit(0)) + F.coalesce("bc", F.lit(0))
-                ).cast("long").alias("fd"),
-            )
-            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
-        )
-        commit_buckets(fresh, store_path, manifest, batch_id)
+        return {"": stats}
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "countmin")
-        )
-        .trigger(availableNow=True)
-        .start()
+    sink = store_fold(spark, store_path, out_dir, keyed, "sum", logs)
+    drain(
+        docs.writeStream.foreachBatch(sink),
+        os.path.join(checkpoint_dir, "countmin"),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover
-        q.stop()

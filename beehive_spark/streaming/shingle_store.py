@@ -314,3 +314,81 @@ def commit_buckets(
             "buckets": new_buckets,
         },
     )
+
+
+# the two store merges: nulls-safe MIN (first sighting) and SUM (counts)
+_COMBINE = {
+    "min": lambda fd, v: F.least(F.coalesce(fd, v), F.coalesce(v, fd)),
+    "sum": lambda fd, v: (
+        F.coalesce(fd, F.lit(0)) + F.coalesce(v, F.lit(0))
+    ).cast("long"),
+}
+
+
+def store_fold(
+    spark: SparkSession,
+    path: str,
+    out_dir: str,
+    keyed,
+    combine: str,
+    logs,
+    split_threshold_bytes: int | None = None,
+):
+    """The exactly-once micro-batch fold every bucketed maintainer
+    shares, as a ``foreachBatch`` sink.  Per batch:
+
+    1. read the manifest; a replayed batch id is skipped (its logs and
+       buckets already landed);
+    2. ``gc_store``, then ``maybe_split_store`` when
+       ``split_threshold_bytes`` is set;
+    3. ``keyed(batch_df)`` gives the batch's ``(s, value)`` rows, one
+       per key; they get their bucket ``bk`` and are localCheckpointed
+       (every step below reads them);
+    4. read the TOUCHED buckets only;
+    5. write the per-batch log partitions FIRST:
+       ``logs(batch_df, keyed_batch, store)`` returns ``{name: frame}``,
+       each overwritten at ``<out_dir>/<name>/batch=<id>`` (an
+       idempotent rewrite on replay);
+    6. full-outer combine the batch into the touched buckets
+       (``combine`` is ``"min"`` or ``"sum"``) and ``commit_buckets``
+       SECOND — the manifest rename carrying the batch id is the
+       commit point.
+
+    A crash between 5 and 6 replays the batch against the pre-batch
+    manifest: the logs rewrite to identical content, then the buckets
+    fold once."""
+    merge = _COMBINE[combine]
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        manifest = read_manifest(path)
+        if batch_id <= manifest["batch_id"]:
+            return  # replayed micro-batch: already folded (logs exist)
+        gc_store(path, manifest)  # prior batch's superseded dirs
+        if split_threshold_bytes is not None:
+            manifest = maybe_split_store(
+                spark, path, manifest, split_threshold_bytes
+            )
+        n_buckets = manifest["n_buckets"]
+        batch = (
+            keyed(batch_df)
+            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
+            .localCheckpoint(eager=True)
+        )
+        touched = sorted(
+            r["bk"] for r in batch.select("bk").distinct().collect()
+        )  # bounded by n_buckets
+        store = read_buckets(spark, path, manifest, touched)
+        for name, frame in logs(batch_df, batch, store).items():
+            frame.write.mode("overwrite").parquet(
+                os.path.join(out_dir, name, f"batch={batch_id}")
+            )
+        fresh = (
+            store.join(batch.drop("bk"), "s", "full_outer")
+            .select("s", merge(F.col("fd"), F.col("value")).alias("fd"))
+            .withColumn("bk", bucket_of(F.col("s"), n_buckets))
+        )
+        commit_buckets(fresh, path, manifest, batch_id)
+
+    return sink

@@ -189,3 +189,31 @@ def test_ivm_maintains_histogram_bins(spark):
     want = build_agg(bins(new), ["t", "bin"], {}, count_col="cnt")
     as_set = lambda df: {tuple(r) for r in df.select("t", "bin", "cnt").collect()}  # noqa: E731
     assert as_set(got) == as_set(want)
+
+
+def test_incremental_agg_persists_into_its_callers_list_only(spark):
+    """Each call puts the frames it persists into its caller's own
+    ``persisted`` list: unpersisting one call's list leaves the other
+    call's frames cached.  ``DataFrame.storageLevel`` asks the JVM cache
+    manager, so this reads what is really cached."""
+    from pyspark import StorageLevel
+
+    def call(g):
+        old = spark.createDataFrame([(g, 1, 10)], "g string, id int, v int")
+        base = _agg(old)
+        retr = spark.createDataFrame(
+            [(1, g, 5)], f"{SIGN} int, g string, v int"
+        )
+        held = []
+        incremental_agg(base, retr, ["g"], {"sv": "v"}, persisted=held)
+        return held
+
+    first, second = call("a"), call("b")
+    assert first and second
+    assert all(df.storageLevel != StorageLevel.NONE for df in first + second)
+    for df in first:
+        df.unpersist()
+    assert all(df.storageLevel == StorageLevel.NONE for df in first)
+    assert all(df.storageLevel != StorageLevel.NONE for df in second)
+    for df in second:
+        df.unpersist()

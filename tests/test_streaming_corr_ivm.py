@@ -3,7 +3,8 @@ UNCHANGED: a CDC feed carrying each row's moment contributions
 (p, d, p^2, d^2, p*d as _old/_new payloads) maintains the moment
 table through run_ivm_agg_stream, and Pearson corr is a projection of
 the final state — zero new streaming code, the incremental_corr_orders
-argument made end-to-end."""
+argument made end-to-end.  Also pins the table fold's per-batch release
+of the maintainer's persists and the drain's timeout."""
 
 import math
 
@@ -110,3 +111,78 @@ def test_corr_moments_stream_through_ivm_agg(spark, tmp_path):
             float(state["n_rows"]) * state["sdd"] - float(state["sd"]) * state["sd"]
         )
         assert got_num / got_den == num / den
+
+
+def test_ivm_agg_stream_releases_each_batch_persists(spark, tmp_path, monkeypatch):
+    """Every frame the maintainer persists for a micro-batch is
+    unpersisted once that batch commits: after 5 batches none is still
+    cached (``DataFrame.storageLevel`` asks the JVM cache manager)."""
+    from pyspark import StorageLevel
+
+    from beehive_spark.streaming import materialize
+
+    feed_dir = tmp_path / "feed"
+    for i in range(5):
+        spark.createDataFrame(
+            [_moment_row("insert", "a" if i % 2 else "b", None, (i, i + 1))],
+            SCHEMA,
+        ).coalesce(1).write.parquet(str(feed_dir / f"f{i}.parquet"))
+    sums = {"sp": "p"}
+    table = str(tmp_path / "moments")
+    spark.createDataFrame(
+        [], "g string, n_rows bigint, sp bigint, sp_nn bigint"
+    ).write.parquet(table)
+
+    lists = []
+    maintainer = materialize.incremental_agg
+
+    def recording(*args, persisted=None, **kwargs):
+        lists.append(persisted)
+        return maintainer(*args, persisted=persisted, **kwargs)
+
+    monkeypatch.setattr(materialize, "incremental_agg", recording)
+    changes = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(feed_dir) + "/*/")
+    )
+    materialize.run_ivm_agg_stream(
+        spark, changes, table, str(tmp_path / "ckpt"), keys=["g"], sums=sums
+    )
+
+    assert len(lists) == 5 and all(lists)
+    assert all(
+        df.storageLevel == StorageLevel.NONE for held in lists for df in held
+    )
+    got = {
+        r["g"]: (r["n_rows"], r["sp"])
+        for r in spark.read.parquet(table).collect()
+    }
+    assert got == {"a": (2, 1 + 3), "b": (3, 0 + 2 + 4)}
+
+
+def test_drain_raises_and_stops_a_stream_past_its_timeout(spark, tmp_path):
+    """A stream still running at ``timeout_sec`` must not look applied:
+    the drain stops it and raises."""
+    import time
+
+    import pytest
+
+    from beehive_spark.streaming.events import drain
+
+    src = tmp_path / "src"
+    spark.createDataFrame([(1,)], "x int").coalesce(1).write.parquet(
+        str(src / "f0.parquet")
+    )
+
+    def slow_sink(batch_df, batch_id):
+        time.sleep(4)
+
+    stream = spark.readStream.schema("x int").parquet(str(src) + "/*/")
+    with pytest.raises(TimeoutError):
+        drain(
+            stream.writeStream.foreachBatch(slow_sink),
+            str(tmp_path / "ckpt"),
+            timeout_sec=1,
+        )
+    assert spark.streams.active == []

@@ -8,6 +8,7 @@ import duckdb
 
 from beehive_spark.sources.readers import normalize_ts
 from beehive_spark.streaming import cusum_monitor_stream, run_stream_to_memory
+from beehive_spark.streaming.events import drain
 from tests.test_streaming_holt import _time_split_source
 
 REF = 49000  # fixed calibration reference (milli), ~the corpus mean
@@ -103,20 +104,13 @@ def test_cusum_stream_resumes_state_across_restart(spark, sf_dir, tmp_path):
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        q = (
+        drain(
             cusum_monitor_stream(stream, reference_milli=REF)
             .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(str(tmp_path), "ck", "cusum"),
-            )
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            os.path.join(str(tmp_path), "ck", "cusum"),
+            120,
         )
-        q.awaitTermination(120)
-        if q.isActive:  # pragma: no cover
-            q.stop()
 
     out1 = str(tmp_path / "phase1_out")
     run(out1)

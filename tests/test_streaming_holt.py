@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from beehive_spark.sources.readers import normalize_ts
 from beehive_spark.streaming import holt_forecast_stream, run_stream_to_memory
+from beehive_spark.streaming.events import drain
 
 
 def _time_split_source(spark, sf_dir, out_dir, n_files=3):
@@ -131,19 +132,13 @@ def test_holt_stream_resumes_state_across_restart(spark, sf_dir, tmp_path):
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        q = (
+        drain(
             holt_forecast_stream(stream)
             .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", os.path.join(str(tmp_path), "ck", "holt")
-            )
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            os.path.join(str(tmp_path), "ck", "holt"),
+            120,
         )
-        q.awaitTermination(120)
-        if q.isActive:  # pragma: no cover
-            q.stop()
 
     out1 = str(tmp_path / "phase1_out")
     run(out1)
