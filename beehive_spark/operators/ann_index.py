@@ -16,8 +16,8 @@ lifecycle:
   staged write + atomic directory swap (readers never see a partial
   index; a rebuild interrupted before the swap leaves the old index
   live, and one interrupted MID-swap is rolled forward by the next
-  reader — ``_recover`` promotes a complete ``.staging``, else
-  restores ``.old``).
+  reader's ``layout.recover_swap``, with ``_ann_meta.json`` as the
+  marker that makes a copy complete).
 - :func:`probe_ivf_index` — answer top-k cosine queries from the
   persisted index: pick each query's ``nprobe`` closest lists from the
   (broadcast) codebook, then scan ONLY those list partitions —
@@ -62,7 +62,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from beehive_spark.sources.layout import dir_swap_lock, promote_staging
+from beehive_spark.sources.layout import (
+    dir_swap_lock,
+    promote_staging,
+    recover_swap,
+    staging_path,
+    write_durable,
+)
 
 META_NAME = "_ann_meta.json"
 
@@ -358,73 +364,16 @@ def _unit(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"):
     )
 
 
-def _swap_in(staging: str, path: str) -> None:
-    """Atomic-with-backup directory promotion (same protocol as
-    ``sources.layout.compact_parquet``; artifacts are vacuum-safe).
-
-    A concurrent reader's ``_recover`` may promote OUR complete
-    staging before this writer reaches its critical section — the
-    shared `sources.layout.promote_staging` treats that as a no-op
-    success (see its docstring)."""
-    promote_staging(staging, path, marker=META_NAME)
-
-
-def _recover(path: str) -> None:
-    """Roll the staged swap forward after a crash.
-
-    ``_swap_in`` has a window between demoting the live dir to
-    ``.old`` and promoting ``.staging`` where NO live index exists; a
-    crash there would otherwise fail every probe with
-    FileNotFoundError until a manual rebuild, with the complete
-    ``.staging``/``.old`` copies sitting unrecovered (mirrors
-    ``streaming.materialize._recover``).  A complete copy is one whose
-    meta file exists — the meta is always written last, so a mid-build
-    staging dir is never promoted.  Preference order: ``.staging``
-    (the newer artifact — the interrupted swap's whole point) then
-    ``.old``.  The cheap already-live check runs unlocked (the hot
-    probe path takes no lock); the promotion itself serializes with
-    ``_swap_in`` and other recoveries, re-checking liveness inside the
-    lock.
-
-    The non-promoted sibling is removed only if it is itself COMPLETE
-    (has meta): an incomplete ``.staging`` next to a complete ``.old``
-    may be a live writer's in-progress rebuild — deleting it would let
-    that writer commit a gutted index once its meta lands (review
-    finding); incomplete leftovers are the age-guarded vacuum's job,
-    not recovery's."""
-    if os.path.exists(os.path.join(path, META_NAME)):
-        return
-    with dir_swap_lock(path):
-        if os.path.exists(os.path.join(path, META_NAME)):
-            return  # a concurrent swap/recovery already made it live
-        staging = path.rstrip("/") + ".staging"
-        backup = path.rstrip("/") + ".old"
-        for cand, other in ((staging, backup), (backup, staging)):
-            if os.path.exists(os.path.join(cand, META_NAME)):
-                shutil.rmtree(path, ignore_errors=True)
-                os.replace(cand, path)
-                if os.path.exists(os.path.join(other, META_NAME)):
-                    shutil.rmtree(other, ignore_errors=True)
-                return
-
-
 def read_meta(index_dir: str) -> dict:
-    _recover(index_dir)
+    recover_swap(index_dir, META_NAME)
     with open(os.path.join(index_dir, META_NAME)) as f:
         return json.load(f)
 
 
 def write_meta(dir_path: str, meta: dict) -> None:
-    """Durably write ``_ann_meta.json`` into ``dir_path``: fsynced temp
-    file + atomic rename (one shared implementation for the build,
-    append and streaming paths — the sequence was previously copied in
-    five places)."""
-    tmp = os.path.join(dir_path, META_NAME + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(dir_path, META_NAME))
+    """Durably write ``_ann_meta.json``, the index's marker, into
+    ``dir_path`` (the build, append and streaming paths)."""
+    write_durable(os.path.join(dir_path, META_NAME), json.dumps(meta))
 
 
 # ---------------------------------------------------------------------------
@@ -461,7 +410,7 @@ def build_ivf_index(
     # crossJoin, ~300x less per-row compute at any corpus size
     lists = assign_topr_lists(emb, cents, replicas)
 
-    staging = index_dir.rstrip("/") + ".staging"
+    staging = staging_path(index_dir)
     shutil.rmtree(staging, ignore_errors=True)
     os.makedirs(staging)
     cb_rows = [(i, c) for i, c in enumerate(cents)]
@@ -487,12 +436,12 @@ def build_ivf_index(
         "n_vectors": emb.count(),
     }
     write_meta(staging, meta)
-    _swap_in(staging, index_dir)
+    promote_staging(staging, index_dir, marker=META_NAME)
     return meta
 
 
 def _load_codebook(spark: SparkSession, index_dir: str) -> list:
-    _recover(index_dir)
+    recover_swap(index_dir, META_NAME)
     rows = (
         spark.read.parquet(os.path.join(index_dir, "codebook.parquet"))
         .orderBy("cid")
@@ -676,7 +625,7 @@ def compact_ivf_index(spark: SparkSession, index_dir: str, attempts: int = 3) ->
     rewrite and read AS that exact snapshot) is unchanged; on conflict
     the rewrite retries against the fresh state, ``attempts`` times,
     then raises — quiesce maintenance traffic or retry later."""
-    staging = index_dir.rstrip("/") + ".staging"
+    staging = staging_path(index_dir)
     adir = os.path.join(index_dir, "assignments.parquet")
     tdir = os.path.join(index_dir, TOMBSTONES)
     for _ in range(attempts):
@@ -811,7 +760,7 @@ def build_pq_index(
     )
     enc = embc.select("vec_id", codes.alias("codes"), "en")
 
-    staging = index_dir.rstrip("/") + ".staging"
+    staging = staging_path(index_dir)
     shutil.rmtree(staging, ignore_errors=True)
     os.makedirs(staging)
     # same one-row frame already broadcast into the encode — reuse it
@@ -825,7 +774,7 @@ def build_pq_index(
         "n_vectors": emb.count(),
     }
     write_meta(staging, meta)
-    _swap_in(staging, index_dir)
+    promote_staging(staging, index_dir, marker=META_NAME)
     return meta
 
 

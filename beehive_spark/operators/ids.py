@@ -177,7 +177,9 @@ def _assign_ids_bounds(
     """
     probe = df.select(F.col(key).cast("double").alias("__k"))
     qs = [i / n for i in range(1, n)]
-    bounds = sorted(set(probe.approxQuantile("__k", qs, 0.001)))
+    # one bucket (n == 1) needs no boundaries, and approxQuantile
+    # rejects an empty probability list
+    bounds = sorted(set(probe.approxQuantile("__k", qs, 0.001))) if qs else []
     if bounds:
         barr = F.array(*[F.lit(float(b)) for b in bounds])
         bucket = F.size(

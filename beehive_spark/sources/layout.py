@@ -19,12 +19,53 @@ table read (SURVEY.md §2.1 S2).  At 100 TB, layout IS the query plan:
 
 Both are plain Spark writers — no custom file format — so Catalyst,
 AQE, and any reader interoperate.
+
+**Staged commits.**  Every on-disk artifact the engine rewrites in
+place (parquet tables, IVM views, ANN indexes) commits through one
+protocol, replacing the reference's MySQL transaction
+(orchestrator.js:66,98-109) with stage-then-swap:
+
+1. The writer builds the new version in :func:`staging_path`
+   (``<path>.staging``).  An artifact with a *marker* (the IVM batch
+   meta, the ANN meta) writes it last, through :func:`write_durable`,
+   so a staging dir holding its marker is complete.
+2. :func:`promote_staging` demotes the live dir to ``<path>.old``,
+   renames the staging dir into place and drops the backup, all under
+   :func:`dir_swap_lock`.  The demote happens only after the staging
+   write has finished.
+3. A crash between the two renames leaves no live dir.  Every reader
+   and writer of the artifact first calls :func:`recover_swap`, which
+   rolls the swap forward under the same lock:
+
+   | live dir | ``.staging`` | ``.old``  | action                       |
+   |----------|--------------|-----------|------------------------------|
+   | exists   | any          | any       | nothing                      |
+   | missing  | complete     | any       | promote it; drop a complete  |
+   |          |              |           | ``.old``                     |
+   | missing  | absent or    | complete  | restore ``.old``; leave the  |
+   |          | incomplete   |           | staging (a live writer's     |
+   |          |              |           | build, possibly)             |
+   | missing  | otherwise    | absent    | nothing (a first write       |
+   |          |              |           | crashed; its writer clears   |
+   |          |              |           | the staging)                 |
+
+   "Complete" means the dir holds the marker.  Without a marker a
+   ``.staging`` is complete only beside a ``.old`` (step 2's order)
+   and a ``.old`` always is.  "Live" means the directory exists, not
+   that it holds the marker: a table seeded by a batch backfill has no
+   marker and is still the live version.
+
+Plain directories carry no log, so each artifact has one writer at a
+time (single-writer contract); the lock only serializes the renames of
+that writer with concurrent recoveries.  Stale siblings left by a
+crash are collected by :func:`vacuum_artifacts`.
 """
 
 from __future__ import annotations
 
 import fcntl
 import os
+import shutil
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,11 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 @contextmanager
 def dir_swap_lock(path: str):
     """Exclusive advisory lock serializing staged-directory swaps and
-    crash recovery on one artifact path — THE shared guard for every
-    rename-with-backup protocol in this engine (`compact_parquet`
-    here, `operators.ann_index._swap_in`/`_recover`,
-    `streaming.materialize._commit_swap`/`_recover`,
-    `MergePipeline.publish`).
+    crash recovery on one artifact path.
 
     Without it, a reader's roll-forward recovery racing a writer's
     swap (or a second reader's recovery) can promote `.staging`
@@ -81,15 +118,70 @@ def dir_swap_lock(path: str):
         os.close(fd)
 
 
+def staging_path(path: str) -> str:
+    """The one staging sibling, ``<path>.staging``, that a staged
+    writer builds the next version of ``path`` in."""
+    return path.rstrip("/") + ".staging"
+
+
+def _backup_path(path: str) -> str:
+    return path.rstrip("/") + ".old"
+
+
+def write_durable(path: str, text: str) -> None:
+    """Replace the small file ``path`` with ``text`` atomically and
+    durably: write a fsynced ``<path>.tmp``, then ``os.replace`` it over
+    ``path``.  A reader sees the old content or the new, never a torn
+    file, and the new content is on disk before the rename publishes
+    it."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def recover_swap(path: str, marker: str | None = None) -> None:
+    """Roll forward a staged swap of ``path`` that a crash interrupted
+    between its two renames, per the decision table in the module
+    docstring.  ``marker`` is the file whose presence makes a sibling
+    dir complete.  The already-live check runs unlocked (the hot read
+    path takes no lock) and is repeated under :func:`dir_swap_lock`,
+    which serializes the recovery with writers' promotions and other
+    recoveries."""
+    staging, backup = staging_path(path), _backup_path(path)
+
+    def pending() -> bool:
+        return not os.path.exists(path) and (
+            os.path.exists(staging) or os.path.exists(backup)
+        )
+
+    if not pending():
+        return
+    with dir_swap_lock(path):
+        if not pending():
+            return
+        has_old = os.path.isdir(backup)
+        if marker is None:
+            staged, old = os.path.isdir(staging) and has_old, has_old
+        else:
+            staged = os.path.exists(os.path.join(staging, marker))
+            old = os.path.exists(os.path.join(backup, marker))
+        if staged:
+            os.replace(staging, path)
+            if old:
+                shutil.rmtree(backup, ignore_errors=True)
+        elif old:
+            os.replace(backup, path)
+
+
 def promote_staging(
     staging: str, path: str, marker: str | None = None, assume_locked: bool = False
 ) -> bool:
     """THE locked rename-with-backup promotion: demote the live
-    directory to ``.old``, promote ``staging``, drop the backup — one
-    implementation for every staged swap in the engine
-    (`compact_parquet`, `operators.ann_index._swap_in`,
-    `streaming.materialize._commit_swap`, `MergePipeline.publish`), so
-    protocol fixes land once.
+    directory to ``.old``, promote ``staging``, drop the backup (step 2
+    of the staged-commit protocol in the module docstring).
 
     ``marker`` is the relative filename whose presence makes a
     directory "complete" (always written last by builders).  When
@@ -121,9 +213,7 @@ def promote_staging(
 
 
 def _promote_locked(staging: str, path: str, marker: str | None) -> bool:
-    import shutil
-
-    backup = path.rstrip("/") + ".old"
+    backup = _backup_path(path)
     if marker is not None:
         live_complete = os.path.exists(os.path.join(path, marker))
         if not os.path.exists(staging):
@@ -347,9 +437,9 @@ def compact_parquet(
 ) -> dict:
     """Compact a small-file-ridden parquet directory into
     ``ceil(total_bytes / target_file_bytes)`` files (per partition when
-    ``partition_by`` is given), with a staged write + backup-then-swap
-    so readers never observe a partial table and a crash leaves the
-    previous version intact.
+    ``partition_by`` is given), as a staged commit (module docstring):
+    readers never observe a partial table, and a crash leaves a
+    complete version that the next call recovers before it reads.
 
     Small files are the silent killer of 100 TB scans: every streaming
     micro-batch, upsert rewrite and over-parallel job leaves behind
@@ -374,7 +464,6 @@ def compact_parquet(
     Returns {"files_before", "files_after", "bytes"}.
     """
     import math
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -384,11 +473,12 @@ def compact_parquet(
                 if f.endswith(".parquet") and not f.startswith("_"):
                     yield os.path.join(root, f)
 
+    recover_swap(path)
     files_before = list(_walk(path))
     total_bytes = sum(os.path.getsize(f) for f in files_before)
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
     df = spark.read.parquet(path)
-    staging = path.rstrip("/") + ".compact_staging"
+    staging = staging_path(path)
     shutil.rmtree(staging, ignore_errors=True)
     if partition_by:
         cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
@@ -430,10 +520,9 @@ def compact_parquet(
 
 def vacuum_artifacts(root: str, min_age_sec: float = 24 * 3600) -> list[str]:
     """Remove stale transactional leftovers under ``root``: the
-    ``.staging`` / ``.compact_staging`` / ``.old`` sibling directories
-    that an interrupted staged-swap writer (upsert_parquet,
-    apply_cdc_parquet, delete_where, compact_parquet) can leave
-    behind, and the ``merged.old`` backup of ``MergePipeline.publish``
+    ``.staging`` / ``.old`` sibling directories that an interrupted
+    staged commit (see the module docstring) can leave behind,
+    including the ``merged.old`` backup of ``MergePipeline.publish``
     (its ``<out>/_staging_<tag>`` directory matches no suffix and is
     cleared by the next publish of that tag).  Returns the paths
     removed.
@@ -447,9 +536,8 @@ def vacuum_artifacts(root: str, min_age_sec: float = 24 * 3600) -> list[str]:
       (the name with the suffix stripped) exists as a live directory.
       If the base is MISSING, the artifact may be the sole surviving
       version of a swap that crashed between renames (e.g. a staged
-      IVM table carrying its committed batch meta — see
-      ``streaming.materialize._recover``) — left alone for the owning
-      writer's roll-forward.  This also stops the vacuum from touching
+      IVM table carrying its committed batch meta) — left alone for
+      :func:`recover_swap`.  This also stops the vacuum from touching
       unrelated user directories that merely end in ``.old``.
     - **Age**: only artifacts whose mtime is older than
       ``min_age_sec`` (default 24 h) are removed, so a freshly-written
@@ -468,9 +556,10 @@ def vacuum_artifacts(root: str, min_age_sec: float = 24 * 3600) -> list[str]:
     retries on the fresh file, so exclusion holds under arbitrary
     interleaving (hammer-pinned in ``tests/test_queries_r5.py``).
     """
-    import shutil
     import time
 
+    # the middle suffix is the staging name older compact_parquet
+    # versions used; their leftovers are still collected
     suffixes = (".staging", ".compact_staging", ".old")
     now = time.time()
     removed = []

@@ -22,6 +22,8 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 
+from beehive_spark.sources.layout import promote_staging, recover_swap, staging_path
+
 
 def append_table(
     df: DataFrame,
@@ -153,53 +155,20 @@ def upsert_jdbc(
     df.foreachPartition(run)
 
 
-def _recover_backup_swap(path: str) -> None:
-    """Finish a crashed backup-then-replace swap BEFORE reading the
-    table — shared preamble of :func:`upsert_parquet`,
-    :func:`apply_cdc_parquet` and :func:`delete_where`.
-
-    Their swap is: write staging (fully, counted) ->
-    ``os.replace(path, path.old)`` -> ``os.replace(staging, path)`` ->
-    remove backup.  A crash between the two replaces leaves NO live
-    table; without recovery a rerun's ``isdir(path)`` check reads the
-    table as empty and an apply/upsert would silently publish only the
-    batch's own rows (r6 review finding — historical rows lost).
-    Rolling FORWARD is always correct in that window: the first rename
-    only ever happens after the staging write completed, so a missing
-    table with a backup present implies the staging (if present) is
-    the complete NEW state; if the staging is gone too, restore the
-    backup.  A missing table with NO backup is a fresh table whose
-    first write crashed — the staging may be partial, so it is left
-    for the writer to clear.  Single-writer contract (documented on
-    the writers); concurrent recovery needs external locking."""
-    import os
-    import shutil
-
-    if os.path.isdir(path):
-        return
-    staging = path.rstrip("/") + ".staging"
-    backup = path.rstrip("/") + ".old"
-    if os.path.isdir(backup):
-        if os.path.isdir(staging):
-            os.replace(staging, path)
-            shutil.rmtree(backup, ignore_errors=True)
-        else:
-            os.replace(backup, path)
-
-
 def _stage_and_swap(df: DataFrame, path: str) -> int:
-    """Write ``df`` to ``path``'s ``.staging`` sibling, count the rows
-    from its parquet footers, then promote it over ``path`` with the
-    engine's one locked backup-then-replace swap
+    """Write ``df`` to ``path``'s staging sibling, count the rows from
+    its parquet footers, then promote it over ``path``
     (``layout.promote_staging``).  Returns the row count written —
     shared tail of :func:`upsert_parquet`, :func:`apply_cdc_parquet`
-    and :func:`delete_where`."""
+    and :func:`delete_where`, which each call ``layout.recover_swap``
+    before reading the table.  These tables carry no marker: without
+    recovery, a crash between the swap's two renames would make the
+    next call read the table as empty and publish only its own rows."""
     import shutil
 
     from beehive_spark.operators.checks import footer_rows
-    from beehive_spark.sources.layout import promote_staging
 
-    staging = path.rstrip("/") + ".staging"
+    staging = staging_path(path)
     shutil.rmtree(staging, ignore_errors=True)
     df.write.mode("overwrite").parquet(staging)
     total = footer_rows(staging)
@@ -232,7 +201,7 @@ def upsert_parquet(
     """
     import os
 
-    _recover_backup_swap(path)
+    recover_swap(path)
     key_cols = [keys] if isinstance(keys, str) else list(keys)
     incoming = df
     if os.path.isdir(path):
@@ -285,7 +254,7 @@ def apply_cdc_parquet(
 
     from pyspark.sql import functions as F
 
-    _recover_backup_swap(path)
+    recover_swap(path)
     key_cols = [keys] if isinstance(keys, str) else list(keys)
     payload = [c for c in changes.columns if c != type_col]
     upserts = changes.filter(F.col(type_col) != "delete").select(*payload)
@@ -325,7 +294,7 @@ def delete_where(spark, path: str, predicate) -> dict:
     """
     from pyspark.sql import functions as F
 
-    _recover_backup_swap(path)
+    recover_swap(path)
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     existing = spark.read.parquet(path)
     survivors = existing.filter(~cond | cond.isNull())

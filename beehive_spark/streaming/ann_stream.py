@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from beehive_spark.operators.ann_index import append_ivf_index, read_meta, write_meta
+from beehive_spark.sources.layout import write_durable
 from beehive_spark.streaming.events import drain
 
 
@@ -73,10 +74,7 @@ def _lineage_id(checkpoint: str) -> str:
     os.makedirs(checkpoint, exist_ok=True)
     marker = os.path.join(checkpoint, "lineage.id")
     if not os.path.exists(marker):
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(uuid.uuid4().hex)
-        os.replace(tmp, marker)  # atomic vs a concurrent creator
+        write_durable(marker, uuid.uuid4().hex)  # atomic vs a concurrent creator
     with open(marker) as fh:
         return fh.read().strip()
 

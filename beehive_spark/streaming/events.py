@@ -37,7 +37,14 @@ def drain(writer: DataStreamWriter, checkpoint: str, timeout_sec: int = 120) -> 
     A query still running after ``timeout_sec`` is stopped and
     ``TimeoutError`` raised: returning normally would report a stream
     whose table silently misses batches as fully applied.  A failed
-    batch surfaces as the query's own exception."""
+    batch surfaces as the query's own exception.
+
+    ``timeout_sec`` cannot interrupt a ``foreachBatch`` call that is
+    already running: ``q.stop()`` waits for the Python sink to return,
+    so ``TimeoutError`` is raised only after that batch finishes, and a
+    sink that never returns hangs the drain.  The sink is not made to
+    skip work instead, because Spark commits any batch whose sink
+    returned as applied."""
     q = (
         writer.option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)

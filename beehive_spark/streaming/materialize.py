@@ -62,7 +62,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from beehive_spark.operators.ivm import cdc_to_retractions, incremental_agg
-from beehive_spark.sources.layout import dir_swap_lock, promote_staging
+from beehive_spark.sources.layout import (
+    promote_staging,
+    recover_swap,
+    staging_path,
+    write_durable,
+)
 from beehive_spark.streaming.events import compact_changes, drain
 from beehive_spark.streaming.shingle_store import store_fold
 
@@ -81,33 +86,8 @@ def _legacy_meta_path(table_path: str) -> str:
     return table_path.rstrip("/") + ".ivm_meta.json"
 
 
-def _staging_path(table_path: str) -> str:
-    return table_path.rstrip("/") + ".staging"
-
-
-def _recover(table_path: str) -> None:
-    """Finish a swap interrupted between the two renames.
-
-    ``_commit_swap`` briefly has no live table (os.replace cannot swap
-    two directories atomically); if a crash lands there, the staged
-    directory — which already contains both the fresh data AND its
-    batch-id meta — is the complete committed state, so promoting it
-    is the unambiguous roll-forward.  Promotion serializes with
-    ``_commit_swap`` and other recoveries on the shared swap lock
-    (same race as `operators.ann_index`: an unlocked recovery racing
-    the writer's rename window strands the writer); the cheap
-    already-live check stays unlocked."""
-    staging = _staging_path(table_path)
-    if not os.path.exists(table_path) and os.path.exists(_meta_file(staging)):
-        with dir_swap_lock(table_path):
-            if not os.path.exists(table_path) and os.path.exists(
-                _meta_file(staging)
-            ):
-                os.replace(staging, table_path)
-
-
 def _last_applied(table_path: str) -> int:
-    _recover(table_path)
+    recover_swap(table_path, META_NAME)
     for path in (_meta_file(table_path), _legacy_meta_path(table_path)):
         try:
             with open(path) as f:
@@ -120,22 +100,20 @@ def _last_applied(table_path: str) -> int:
 def _stage(fresh: DataFrame, table_path: str, batch_id: int) -> str:
     """Write ``fresh`` plus its batch-id meta into the table's staging
     directory (NOT yet promoted) and return the staging path.  The
-    meta is written and fsynced INTO the staging directory, so a
-    staging directory WITH meta is a complete, promotable state."""
-    staging = _staging_path(table_path)
+    meta is the table's marker, written durably INTO the staging
+    directory last, so a staging directory WITH meta is a complete,
+    promotable state."""
+    staging = staging_path(table_path)
     shutil.rmtree(staging, ignore_errors=True)
     fresh.write.mode("overwrite").parquet(staging)
-    with open(_meta_file(staging), "w") as f:
-        json.dump({"batch_id": batch_id}, f)
-        f.flush()
-        os.fsync(f.fileno())
+    write_durable(_meta_file(staging), json.dumps({"batch_id": batch_id}))
     return staging
 
 
 def _staged_batch_id(table_path: str) -> int:
     """Batch id of a COMPLETE staging for this table, else -1 (no
     staging, or one that crashed before its meta was written)."""
-    staging = _staging_path(table_path)
+    staging = staging_path(table_path)
     try:
         with open(_meta_file(staging)) as f:
             return json.load(f)["batch_id"]
@@ -157,7 +135,7 @@ def _promote(staging: str, table_path: str) -> None:
 def _commit_swap(fresh: DataFrame, table_path: str, batch_id: int) -> None:
     """Atomically publish ``fresh`` as ``table_path`` with its batch id.
 
-    The batch-id meta is written (and fsynced) INTO the staging
+    The batch-id meta is written durably INTO the staging
     directory BEFORE the swap, so the final os.replace commits data and
     replay marker together: a replayed micro-batch after any crash
     either sees the old table with the old id (recomputes — the batch
@@ -445,7 +423,12 @@ def run_ivm_join_agg_stream(
     either finds no complete staging (nothing mutated — recompute), or
     a complete staging for THIS batch (snapshots may already be
     post-batch — skip the recompute, redo the idempotent row applies,
-    promote), or a recorded batch id (fully committed — no-op).
+    promote), or a recorded batch id (fully committed — no-op).  The
+    view's recovery (``_last_applied``) therefore never replaces an
+    existing view dir, marker or not: a view seeded by a batch
+    backfill has no meta, and promoting the staged view over it
+    before the row tables are applied would make the replay skip
+    their rewrites.
 
     Scale shape: both delta terms broadcast the delta side (see
     ``delta_join``), the row applies broadcast their touched keys, and
@@ -463,7 +446,7 @@ def run_ivm_join_agg_stream(
             return  # fully committed: replay no-op
         fa = batch_df.filter(F.col(table_col) == "a")
         fb = batch_df.filter(F.col(table_col) == "b")
-        staging = _staging_path(view_path)
+        staging = staging_path(view_path)
         if _staged_batch_id(view_path) != batch_id:
             # pre-batch snapshots are intact (row applies happen only
             # after a complete staging exists): fold the join delta

@@ -57,6 +57,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from beehive_spark.sources.layout import write_durable
+
 MANIFEST = "_store_manifest.json"
 STORE_SCHEMA = "s string, fd long"
 # bucket index is %05d-formatted but NOT capped at 5 digits (the %d
@@ -80,16 +82,6 @@ def _manifest_file(path: str) -> str:
 def read_manifest(path: str) -> dict:
     with open(_manifest_file(path)) as f:
         return json.load(f)
-
-
-def _write_manifest(path: str, manifest: dict) -> None:
-    # fsync'd temp file + os.replace: the ONLY commit point
-    tmp = _manifest_file(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_file(path))
 
 
 def store_batch_id(path: str) -> int:
@@ -132,7 +124,7 @@ def init_shingle_store(
             os.replace(os.path.join(stage, sub), os.path.join(path, name))
             manifest["buckets"][str(b)] = name
         shutil.rmtree(stage, ignore_errors=True)
-    _write_manifest(path, manifest)
+    write_durable(_manifest_file(path), json.dumps(manifest))
 
 
 def _version_name(bucket: int, batch_id: int) -> str:
@@ -248,7 +240,7 @@ def split_store(spark: SparkSession, path: str, manifest: dict) -> dict:
         "n_buckets": new_b,
         "buckets": new_buckets,
     }
-    _write_manifest(path, new_manifest)
+    write_durable(_manifest_file(path), json.dumps(new_manifest))
     return new_manifest
 
 
@@ -306,13 +298,15 @@ def commit_buckets(
         os.replace(os.path.join(stage, sub), target)
         new_buckets[str(b)] = name
     shutil.rmtree(stage, ignore_errors=True)
-    _write_manifest(
-        path,
-        {
-            "batch_id": batch_id,
-            "n_buckets": manifest["n_buckets"],
-            "buckets": new_buckets,
-        },
+    write_durable(
+        _manifest_file(path),
+        json.dumps(
+            {
+                "batch_id": batch_id,
+                "n_buckets": manifest["n_buckets"],
+                "buckets": new_buckets,
+            }
+        ),
     )
 
 

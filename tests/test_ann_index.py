@@ -324,8 +324,8 @@ def test_streaming_append_keeps_index_fresh_and_replays_noop(
 
 
 def test_interrupted_swap_rolls_forward(spark, sf_dir, tmp_path):
-    """A crash in `_swap_in`'s window (live dir demoted to .old, .staging
-    not yet promoted) must not strand the index: the next reader
+    """A crash in `promote_staging`'s window (live dir demoted to .old,
+    .staging not yet promoted) must not strand the index: the next reader
     promotes the complete staging copy (roll-forward) — and with only
     a backup present, restores it."""
     import shutil
@@ -401,15 +401,16 @@ def test_probe_results_absorb_duplicate_list_entries(spark, sf_dir, tmp_path):
 
 
 def test_swap_and_recover_serialize_under_concurrency(tmp_path):
-    """Hammer _swap_in against concurrent _recover callers (the review
-    race: a reader promoting .staging mid-swap stranded the writer, and
+    """Hammer promote_staging against concurrent recover_swap callers (the
+    review race: a reader promoting .staging mid-swap stranded the writer, and
     two interleaved recoveries could delete the artifact).  Pure
     filesystem — no Spark.  Invariants: no call raises, and after every
     swap the live index exists with monotonically advancing content."""
     import json
     import threading
 
-    from beehive_spark.operators.ann_index import META_NAME, _recover, _swap_in
+    from beehive_spark.operators.ann_index import META_NAME
+    from beehive_spark.sources.layout import promote_staging, recover_swap
 
     path = str(tmp_path / "idx")
 
@@ -426,7 +427,7 @@ def test_swap_and_recover_serialize_under_concurrency(tmp_path):
     def recover_loop():
         while not stop.is_set():
             try:
-                _recover(path)
+                recover_swap(path, META_NAME)
             except Exception as exc:  # pragma: no cover - the failure under test
                 errors.append(exc)
                 return
@@ -437,7 +438,7 @@ def test_swap_and_recover_serialize_under_concurrency(tmp_path):
     try:
         for version in range(30):
             staging = make_staging(version)
-            _swap_in(staging, path)
+            promote_staging(staging, path, marker=META_NAME)
             with open(os.path.join(path, META_NAME)) as fh:
                 assert json.load(fh)["version"] == version
     finally:

@@ -5,7 +5,7 @@ collapse)."""
 
 import pytest
 
-pytestmark = pytest.mark.slow  # brute-force random-graph pins (operators covered fast by test_graph_property + planted oracle twins)
+pytestmark = pytest.mark.slow  # operator pins; the random-graph brute-force pins run fast in test_graph_property
 
 import random
 
@@ -62,27 +62,6 @@ def test_bfs_levels_multiple_roots(spark):
 # -- connected_components ---------------------------------------------------
 
 
-def _union_find_components(edges):
-    """Pure-python oracle: component = min node id reachable."""
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    for a, b in edges:
-        union(a, b)
-    return {n: find(n) for n in parent}
-
-
 def test_cc_two_components(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["src", "dst"]
@@ -107,16 +86,6 @@ def test_cc_long_chain_converges(spark):
     )
     comps = {r["component"] for r in connected_components(edges).collect()}
     assert comps == {0}
-
-
-def test_cc_matches_union_find_random(spark):
-    rng = random.Random(42)
-    edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(35)]
-    edges = [(a, b) for a, b in edges if a != b]
-    expect = _union_find_components(edges)
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    assert got == expect
 
 
 def _numpy_pagerank(edges, damping=0.85, iters=10):
@@ -315,39 +284,6 @@ def test_triangle_counts_ignores_self_loops(spark):
     )
     got = {r["id"]: r["triangles"] for r in triangle_counts(df).collect()}
     assert got == {0: 1, 1: 1, 2: 1}
-
-
-def _brute_kcore(edges, k):
-    adj = {}
-    for u, v in edges:
-        if u == v:
-            continue
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    changed = True
-    while changed:
-        changed = False
-        for n in list(adj):
-            if len(adj[n]) < k:
-                for m in adj.pop(n):
-                    adj[m].discard(n)
-                changed = True
-    return {n: len(ns) for n, ns in adj.items()}
-
-
-def test_kcore_matches_brute_force_random(spark):
-    from beehive_spark.operators.graph import kcore
-
-    rng = random.Random(3)
-    edges = set()
-    while len(edges) < 150:
-        u, v = rng.randrange(30), rng.randrange(30)
-        if u != v:
-            edges.add((min(u, v), max(u, v)))
-    df = spark.createDataFrame(sorted(edges), ["u", "v"])
-    for k in (3, 6, 9):
-        got = {r["id"]: r["core_degree"] for r in kcore(df, k=k).collect()}
-        assert got == _brute_kcore(edges, k), f"k={k}"
 
 
 def test_kcore_peels_chain_to_nothing_keeps_clique(spark):

@@ -414,6 +414,102 @@ def test_vacuum_never_touches_orphan_staging_or_lookalike_dirs(tmp_path):
     assert (lookalike / "keep.txt").read_text() == "precious"
 
 
+def test_compact_rolls_forward_an_interrupted_swap(spark, tmp_path):
+    """A crash between promote_staging's demote and its rename leaves
+    no live table, the previous version in .old and the complete new
+    one in .staging: compaction must recover the staged version before
+    it reads, compact it, and leave neither sibling behind."""
+    from beehive_spark.sources.layout import compact_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(0, 40, numPartitions=4).withColumn("v", F.lit("old")).write.parquet(
+        path
+    )
+    spark.range(0, 60, numPartitions=6).withColumn("v", F.lit("new")).write.parquet(
+        path + ".staging"
+    )
+    os.replace(path, path + ".old")
+    stats = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
+    assert stats["files_before"] == 6 and stats["files_after"] == 1
+    got = spark.read.parquet(path)
+    assert sorted(r["id"] for r in got.select("id").collect()) == list(range(60))
+    assert {r["v"] for r in got.select("v").distinct().collect()} == {"new"}
+    assert not os.path.exists(path + ".staging")
+    assert not os.path.exists(path + ".old")
+
+
+# recover_swap's decision table: (marker, live, staging, old) -> which
+# dir ends up live and which siblings stay.  A dir is absent (None),
+# holds the marker ("full"), or has data only ("part"); without a
+# marker "part" is just a present dir.
+_RECOVERY = [
+    # the live dir exists (even without its marker): nothing moves
+    ("_meta", "part", "full", "full", "live", {"staging", "old"}),
+    (None, "part", "part", "part", "live", {"staging", "old"}),
+    # complete staging: promote it; drop .old only if complete
+    ("_meta", None, "full", None, "staging", set()),
+    ("_meta", None, "full", "full", "staging", set()),
+    ("_meta", None, "full", "part", "staging", {"old"}),
+    (None, None, "part", "part", "staging", set()),
+    # no complete staging, complete .old: restore it, keep the staging
+    ("_meta", None, None, "full", "old", set()),
+    ("_meta", None, "part", "full", "old", {"staging"}),
+    (None, None, None, "part", "old", set()),
+    # nothing complete, or a first write that crashed: nothing
+    ("_meta", None, "part", None, None, {"staging"}),
+    ("_meta", None, None, "part", None, {"old"}),
+    ("_meta", None, "part", "part", None, {"staging", "old"}),
+    ("_meta", None, None, None, None, set()),
+    (None, None, "part", None, None, {"staging"}),
+    (None, None, None, None, None, set()),
+]
+
+
+def _tree(d: str) -> dict:
+    out = {}
+    for root, _dirs, files in os.walk(d):
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), d)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize(
+    "marker,live,staged,old,want_live,want_left",
+    _RECOVERY,
+    ids=[
+        f"{m or 'nomarker'}-live={lv}-staging={st}-old={od}"
+        for m, lv, st, od, _, _ in _RECOVERY
+    ],
+)
+def test_recover_swap_decision_table(
+    tmp_path, marker, live, staged, old, want_live, want_left
+):
+    from beehive_spark.sources.layout import recover_swap
+
+    path = str(tmp_path / "art")
+    dirs = {"live": path, "staging": path + ".staging", "old": path + ".old"}
+    for name, state in (("live", live), ("staging", staged), ("old", old)):
+        if state is None:
+            continue
+        os.makedirs(os.path.join(dirs[name], "sub"))
+        with open(os.path.join(dirs[name], "sub", "part-0.parquet"), "w") as fh:
+            fh.write(name)
+        if state == "full":
+            with open(os.path.join(dirs[name], marker), "w") as fh:
+                fh.write('{"batch_id": 3}')
+    before = {n: _tree(d) for n, d in dirs.items() if os.path.isdir(d)}
+    recover_swap(path, marker)
+    if want_live is None:
+        assert not os.path.exists(path)
+    else:
+        assert _tree(path) == before[want_live]
+    left = {n for n in ("staging", "old") if os.path.exists(dirs[n])}
+    assert left == want_left
+    for n in left:
+        assert _tree(dirs[n]) == before[n]
+
+
 def test_compact_partitioned_splits_oversized_partitions(spark, sf_dir, tmp_path):
     """Per-partition salting: a partition whose bytes exceed the target
     must come out as MULTIPLE files, not one monolith (the round-2

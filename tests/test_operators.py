@@ -284,9 +284,26 @@ def test_assign_ids_all_scalable_paths_equal_contiguous(spark):
             df2, "pk", order_cols=["tag", "pk"], base=10, mode="contiguous"
         ).collect()
     }
+    # one shuffle partition: a single bucket on both distributed paths
+    got_bounds1 = {
+        r["pk"]: r["dest_id"]
+        for r in assign_ids(
+            df, "pk", base=10, mode="scalable", small_threshold=0,
+            num_partitions=1,
+        ).collect()
+    }
+    got_range1 = {
+        r["pk"]: r["dest_id"]
+        for r in assign_ids(
+            df2, "pk", order_cols=["tag", "pk"], base=10,
+            mode="scalable", small_threshold=0, num_partitions=1,
+        ).collect()
+    }
     assert got_auto == want
     assert got_bounds == want
     assert got_range == want_range
+    assert got_bounds1 == want
+    assert got_range1 == want_range
 
 
 @pytest.mark.parametrize("order_cols", [["pk"], ["tag", "pk"]])
