@@ -10,11 +10,15 @@ specific tables (SURVEY.md §2.3 J4).
 Spark-first re-expression: one generic operator =
   inner join  (src ∩ dst on business key)  -> mapping rows
   left_anti   (src − dst)                  -> rows to insert
-with optional pre-remap of FK-typed business-key columns
-(utils.js:101-104's "mapped column compare").  The destination side
-of both joins is the same pruned projection, so at scale this is a
-single shuffle (or broadcast when the metadata table is small —
-metadata tables in this domain are KB-MB, so broadcast is the norm).
+The destination side of both joins is the same pruned projection,
+and it carries an explicit ``F.broadcast`` hint, which overrides
+``spark.sql.autoBroadcastJoinThreshold``: dst is broadcast whatever
+its size, never shuffled.  Metadata tables in this domain are KB-MB,
+so it fits; nothing here switches a dst too large to broadcast over
+to a shuffled join.  FK-typed business-key columns
+(utils.js:101-104's "mapped column compare") must already be in
+destination id space: the merge remaps them through the spec's
+``business_premaps`` before it calls this.
 """
 
 from __future__ import annotations
@@ -25,7 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from beehive_spark.operators.ids import assign_ids, mapping_of
-from beehive_spark.operators.remap import remap_fks
 
 
 @dataclass
@@ -50,44 +53,37 @@ def consolidate(
     src_pk: str,
     dst_pk: str,
     business_keys: list[str],
-    fk_premaps: dict[str, DataFrame] | None = None,
     next_id_base: int = 1,
     order_cols: list[str] | None = None,
-    broadcast_dst: bool = True,
     persisted: list[DataFrame] | None = None,
 ) -> ConsolidateResult:
     """Generic consolidation (replaces utils.js:83-150 and all J4 clones).
 
-    fk_premaps: business-key columns that are themselves FKs must be
-    remapped to destination id-space *before* comparison
-    (utils.js:101-104) — e.g. program_workflow matches on
+    Business-key columns that are themselves FKs must be remapped to
+    destination id space *before* the call (``remap_fks``,
+    utils.js:101-104) — e.g. program_workflow matches on
     (mapped program_id, concept_id) (patient-programs.js:190-199).
     persisted: passed to ``assign_ids``.
     """
-    s = src
-    if fk_premaps:
-        s = remap_fks(s, fk_premaps, on_missing="null")
     # Rename the dst side to internal names so consolidation works even
     # when src and dst derive from the same DataFrame (self-join safety).
-    dkeys = dst.select(
+    dkeys = F.broadcast(dst.select(
         F.col(dst_pk).alias("__dst_pk"),
         *[F.col(k).alias(f"__dst_{k}") for k in business_keys],
-    )
-    if broadcast_dst:
-        dkeys = F.broadcast(dkeys)
+    ))
 
     # Null-safe equality: business keys may be NULL on either side and
     # the reference's `===` JS compare treats NULL==NULL as a match
     # only when both are null -> use <=> semantics.
     cond = None
     for k in business_keys:
-        c = s[k].eqNullSafe(dkeys[f"__dst_{k}"])
+        c = src[k].eqNullSafe(dkeys[f"__dst_{k}"])
         cond = c if cond is None else (cond & c)
 
-    matched = s.join(dkeys, cond, "inner").select(
-        s[src_pk].alias("src_id"), F.col("__dst_pk").cast("long").alias("dest_id")
+    matched = src.join(dkeys, cond, "inner").select(
+        src[src_pk].alias("src_id"), F.col("__dst_pk").cast("long").alias("dest_id")
     )
-    to_insert = s.join(dkeys, cond, "left_anti")
+    to_insert = src.join(dkeys, cond, "left_anti")
     to_insert = assign_ids(
         to_insert, src_pk, order_cols=order_cols or [src_pk], base=next_id_base,
         persisted=persisted,

@@ -7,12 +7,13 @@ NULL (insert-NULL variant, patient-programs.js:118-124) or cause the
 row to be dropped (drop variant, person-users.js:79-80).
 
 Spark-first re-expression: one null-preserving equi-join per FK
-against a slim ``(src_id, dest_id)`` mapping DataFrame.  Mapping DFs
-are broadcast when small (explicit hint); when a mapping outgrows the
-broadcast threshold at scale, Catalyst/AQE falls back to a shuffled
-hash/sort-merge join — the code is identical, only the physical plan
-changes.  This is the property that lets the same pipeline run at
-100 TB where the reference's driver-side Maps cannot.
+against a slim ``(src_id, dest_id)`` mapping DataFrame.  Every mapping
+carries an explicit ``F.broadcast`` hint, and the hint overrides
+``spark.sql.autoBroadcastJoinThreshold``: a mapping is broadcast
+whatever its size, never shuffled.  Mappings are per-source-instance
+sized, not corpus sized, so the hint holds while each fits in
+memory; nothing here switches a mapping too large to broadcast over
+to a shuffled join.
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ def remap_fks(
     df: DataFrame,
     mappings: dict[str, DataFrame],
     on_missing: str = "null",
-    broadcast: bool = True,
 ) -> DataFrame:
     """Rewrite each column named in ``mappings`` through its mapping DF.
 
@@ -35,32 +35,24 @@ def remap_fks(
         obs.js:24-28); NULL FK stays NULL.
       - "drop": rows whose FK is non-null but unmapped are dropped
         (reference skip path, person-users.js:79-80).
-      - "keep": unmapped FK keeps its source value (used for
-        pre-seeded identity maps).
 
     Implementation detail: each join key is left-joined on
     ``df[fk] == m.src_id``; the fk column is then replaced by
-    ``dest_id`` (or per on_missing).  Chained joins stay in one stage
-    per shuffle-free broadcast, so K small maps cost K broadcast hash
-    joins inside a single WholeStageCodegen span.
+    ``dest_id`` (or per on_missing).  Every mapping is broadcast, so
+    K maps cost K broadcast hash joins inside a single WholeStageCodegen
+    span.
     """
+    if on_missing not in ("null", "drop"):
+        raise ValueError(f"unknown on_missing: {on_missing}")
     out = df
     for fk, mdf in mappings.items():
-        m = mdf.select(
+        m = F.broadcast(mdf.select(
             F.col(mdf.columns[0]).alias(f"__src_{fk}"),
             F.col(mdf.columns[1]).alias(f"__dst_{fk}"),
-        )
-        if broadcast:
-            m = F.broadcast(m)
+        ))
         out = out.join(m, out[fk] == m[f"__src_{fk}"], "left")
-        if on_missing == "null":
-            new_val = F.col(f"__dst_{fk}")
-        elif on_missing == "keep":
-            new_val = F.coalesce(F.col(f"__dst_{fk}"), F.col(fk))
-        elif on_missing == "drop":
+        if on_missing == "drop":
             out = out.filter(F.col(fk).isNull() | F.col(f"__src_{fk}").isNotNull())
-            new_val = F.col(f"__dst_{fk}")
-        else:
-            raise ValueError(f"unknown on_missing: {on_missing}")
-        out = out.withColumn(fk, new_val).drop(f"__src_{fk}", f"__dst_{fk}")
+        out = out.withColumn(fk, F.col(f"__dst_{fk}")).drop(
+            f"__src_{fk}", f"__dst_{fk}")
     return out

@@ -28,31 +28,9 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-#: directory name Hive/Spark uses for the NULL partition value
-HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
-
-def existing_partition_values(out_path: str, part_col: str) -> set[str]:
-    """Partition values already materialized under ``out_path``
-    (Hive-style ``col=value`` directories), UNESCAPED — Hive percent-
-    encodes special path characters (``escapePathName``), so the raw
-    directory name for ``a b:c`` is ``a%20b%3Ac``; this returns
-    ``a b:c``.  The NULL sentinel directory is excluded."""
-    prefix = f"{part_col}="
-    try:
-        return {
-            unquote(d[len(prefix):])
-            for d in os.listdir(out_path)
-            if d.startswith(prefix)
-            and d[len(prefix):] != HIVE_DEFAULT_PARTITION
-        }
-    except FileNotFoundError:
-        return set()
 
 
 def _existing_typed(

@@ -44,10 +44,12 @@ Replaces the reference's orchestration (orchestrator.js:22-121):
                    rows and reconciles the count of the lazy merged
                    frame.
 
-Scale notes: mappings are slim (src_id, dest_id) DataFrames joined
-with broadcast hints while they fit (they are per-source-instance
-sized, not corpus sized); above the broadcast threshold Catalyst
-falls back to shuffled joins with identical semantics.
+Scale notes: mappings are slim (src_id, dest_id) DataFrames, sized
+per source instance, not per corpus.  Every mapping join (``remap_fks``)
+and every consolidate dst side carries an explicit ``F.broadcast``
+hint, which overrides ``spark.sql.autoBroadcastJoinThreshold``: they
+are broadcast whatever their size, and nothing falls back to a
+shuffled join above the threshold.
 
 Each shared intermediate runs once: the uuid-fixpoint rounds, the user
 and person premaps, each moved table's id assignment and, in a dry run,

@@ -1654,8 +1654,7 @@ def negative_sampling(spark, sf_dir, k: int = 5, oversample: int = 4):
 
     Undersupply is possible by construction (a customer whose 20
     draws all collide or hit positives emits < k rows) and identical
-    in both engines; at the shipped SFs every customer fills all 5
-    (asserted in tests/test_queries_r8d.py)."""
+    in both engines; at sf0.001 every customer fills all 5."""
     c = load(spark, sf_dir, "customer").select("c_custkey")
     np_ = load(spark, sf_dir, "part").agg(F.count(F.lit(1)).alias("n_parts"))
     slots = c.select(
@@ -1727,7 +1726,7 @@ def feature_minmax_scaled(spark, sf_dir):
     identically from identical stored doubles in both engines, so the
     rounded values are bit-equal.  Groups where hi == lo would divide
     by zero; the corpus has none (every brand spans prices — asserted
-    in tests/test_queries_r8d.py), and real pipelines gate constant
+    in tests/test_curation.py), and real pipelines gate constant
     features out before scaling.
 
     Scale shape: one map-side-combinable (brand, min, max) aggregate

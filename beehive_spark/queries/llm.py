@@ -557,7 +557,7 @@ def dedup_minhash_lsh_planted(spark, sf_dir):
     output is therefore pure id arithmetic — all C(4,2)=6 pairs per
     group at 1.0 — which the oracle states as a self-join on
     ``id // 4``.  LOAD-BEARING data assumptions (asserted in
-    tests/test_queries_r8b.py): doc_ids 0-based contiguous, count
+    tests/test_llm.py): doc_ids 0-based contiguous, count
     divisible by 4 at every shipped SF.
 
     What a red gate here would catch: a broken permutation (sigs no
@@ -702,7 +702,7 @@ def dedup_simhash_planted(spark, sf_dir):
     independent signatures land within hamming 3 of each other
     (<= sum_{i<=3} C(64,i) / 2^64 ~ 2^-46 per pair — and the corpus,
     tokenizer, and xxhash64 seed are all FIXED, so the check is
-    deterministic: tests/test_queries_r8b.py asserts the closed form
+    deterministic: tests/test_llm.py asserts the closed form
     exactly at every shipped SF, and the driver gate re-proves it at
     sf0.01 forever after).  Expected output: all 6 pairs per 4-wide
     group at hamming 0, which the oracle states as id arithmetic.
@@ -2029,7 +2029,7 @@ def similarity_ann_lsh_planted(spark, sf_dir):
     3-bit band keys collide constantly across groups — the plant
     PROVES those collisions are harmless because the re-rank, not the
     bucket, decides the output.  Same load-bearing data assumptions
-    as the IVF twin (asserted in tests/test_queries_r8b.py)."""
+    as the IVF twin (asserted in tests/test_llm.py)."""
     e = load(spark, sf_dir, "embeddings")
     # Arrow constructor (see _planted_sign_frame): the pipeline reads
     # its input from four lineage branches, and the former 64-branch
@@ -2194,7 +2194,7 @@ def similarity_ann_ivf_planted(spark, sf_dir):
     cross-group candidate) first, tie-broken by neighbor_id.  Top-5 is
     therefore pure id arithmetic: the 5 smallest group-mates.
     LOAD-BEARING data assumptions (asserted in
-    tests/test_queries_r8b.py): vec_ids 0-based contiguous, count
+    tests/test_llm.py): vec_ids 0-based contiguous, count
     divisible by 20 at every shipped SF, and group count <= 2^16 (16
     sign bits).
 
@@ -2391,7 +2391,7 @@ def dedup_semantic_planted(spark, sf_dir, threshold: float = 0.45):
     on identical integer inputs, so the compared doubles are
     bit-equal; thresholds and the 4-decimal round sit >= 0.005 from
     every attained value.  LOAD-BEARING data assumptions (asserted in
-    tests/test_queries_r6.py): custkeys 0-based contiguous, counts
+    tests/test_graph.py): custkeys 0-based contiguous, counts
     divisible by 15 at every shipped SF.
 
     Scale shape: identical to :func:`dedup_semantic`'s pair stage —

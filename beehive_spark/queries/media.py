@@ -457,7 +457,7 @@ def media_image_resize(spark, sf_dir):
     # RGB bytes (channel 0 of pixel cy*4+cx), all JVM.
     # NOTE (r12, measured and rejected): an Arrow re-expression of
     # this projection (one mapInArrow slicing the same bytes from the
-    # binary buffers — plans/r12/media_image_resize_{before,after}.txt,
+    # binary buffers — history/plans/r12/media_image_resize_{before,after}.txt,
     # oracle green) LOST the quiet-host interleaved best-of-3 A/B:
     # 1.50-1.88 s for this conv shape vs 1.96-4.98 s with the extra
     # Python stage.  The 16 x docs interpreted convs are ~ms of JVM

@@ -554,7 +554,7 @@ def vacuum_artifacts(root: str, min_age_sec: float = 24 * 3600) -> list[str]:
     half lives in :func:`dir_swap_lock`: an acquirer that flocks an
     inode the vacuum just orphaned detects the path/inode mismatch and
     retries on the fresh file, so exclusion holds under arbitrary
-    interleaving (hammer-pinned in ``tests/test_queries_r5.py``).
+    interleaving (hammer-pinned in ``tests/test_layout.py``).
     """
     import time
 

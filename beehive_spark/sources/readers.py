@@ -135,15 +135,3 @@ def table_exists(spark: SparkSession, source: Endpoint | str, table: str) -> boo
         .load()
     )
     return not probe.isEmpty()
-
-
-def discover_fk_pairs_sql() -> str:
-    """The information_schema query the deployment uses to derive FK
-    integrity pairs at runtime (reference integrity-checks.js:65-79);
-    pipeline.specs.fk_pairs is the static equivalent used in tests."""
-    return (
-        "SELECT table_name, column_name, referenced_table_name, "
-        "referenced_column_name FROM information_schema.key_column_usage "
-        "WHERE referenced_table_name IS NOT NULL "
-        "AND table_schema = DATABASE()"
-    )

@@ -784,7 +784,7 @@ def run_novelty_stream(
       the normal per-doc path.  A consumer folding
       ``n_new + sum(n_new_delta)`` per doc therefore converges to the
       batch query's answer under ANY feed order (pinned in
-      tests/test_streaming_novelty.py); in-order feeds produce empty
+      tests/test_streaming_stores.py); in-order feeds produce empty
       correction partitions and the log alone is already exact.
 
       Backfilled-store caveat: when the store was created with
@@ -811,7 +811,7 @@ def run_novelty_stream(
     manifest rename SECOND; a crash between them replays the batch
     against the pre-batch store, so both partitions rewrite to
     identical content before the buckets fold once
-    (kill-between-artifacts test: tests/test_streaming_novelty.py).
+    (kill-between-artifacts test: tests/test_streaming_stores.py).
 
     Scale shape per micro-batch: shingles shuffle once for the
     in-batch MIN (xxhash64 keys, the jaccard idiom), equi-join the
@@ -986,7 +986,7 @@ def run_dedup_stream(
       retroactively a duplicate of the newcomer, and consumers remap
       their dup_of pointers through these records (the CDC-correction
       idiom; in-order feeds emit none, pinned in
-      tests/test_streaming_dedup.py).
+      tests/test_streaming_stores.py).
 
       Backfilled-store caveat (same as ``run_novelty_stream``): with
       a backfilled store, corrections can name an ``old_canonical``

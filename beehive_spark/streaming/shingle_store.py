@@ -19,7 +19,7 @@ A micro-batch therefore reads and rewrites ONLY the buckets its
 shingles hash into (<= min(batch distinct shingles, B) of them); the
 rest of the store is untouched bytes on disk.  Batch cost is
 proportional to the touched fraction, not to history — the property
-``tests/test_streaming_novelty.py`` pins by bucket-directory version
+``tests/test_streaming_stores.py`` pins by bucket-directory version
 names and by untouched-file mtimes.
 
 Atomicity WITHOUT multi-directory renames: version directories are

@@ -181,7 +181,7 @@ def main() -> None:
         try:
             with open(os.path.join(here, "BENCH_EXTRA.json"), "w") as fh:
                 json.dump(extra_line, fh, indent=1)
-            with open(os.path.join(here, "BENCH_EXTRA_HISTORY.jsonl"), "a") as fh:
+            with open(os.path.join(here, "history", "BENCH_EXTRA_HISTORY.jsonl"), "a") as fh:
                 fh.write(json.dumps(extra_line) + "\n")
         except OSError:  # pragma: no cover - read-only checkout
             pass

@@ -1,7 +1,7 @@
 """Per-query regression diff between two bench result files.
 
 Usage:
-    python scripts/bench_diff.py BENCH_r01.json current.json [--ratio 1.3]
+    python scripts/bench_diff.py history/BENCH_r01.json current.json [--ratio 1.3]
 
 Accepts either the driver's wrapped format ({"parsed": {...}}) or the
 raw one-line JSON bench.py prints.  Exits 1 if any query regresses by
@@ -30,9 +30,10 @@ def _extras_for(d: dict, base_dir: str) -> dict | None:
     with float-identical totals could in principle collide on it, which
     is exactly why the id replaced it; with the id present the value
     fallback is never consulted).  Lookup order: append-only
-    BENCH_EXTRA_HISTORY.jsonl (newest match last — survives sidecar
-    overwrites, so old baselines stay gateable), then the live
-    sidecar."""
+    BENCH_EXTRA_HISTORY.jsonl beside the bench file or in its
+    ``history/`` dir, where bench.py appends it (newest match last —
+    survives sidecar overwrites, so old baselines stay gateable), then
+    the live sidecar."""
     run_id, value = d.get("run_id"), d.get("value")
     if run_id is None and value is None:
         return None
@@ -47,19 +48,20 @@ def _extras_for(d: dict, base_dir: str) -> dict | None:
             return rec.get("run_id") == run_id and run_id is not None
         return rec.get("headline_value") == value
 
-    hist = os.path.join(base_dir, "BENCH_EXTRA_HISTORY.jsonl")
     found = None
-    try:
-        with open(hist) as f:
-            for line in f:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                if _matches(rec):
-                    found = rec.get("queries")
-    except OSError:
-        pass
+    for hist in (os.path.join(base_dir, "BENCH_EXTRA_HISTORY.jsonl"),
+                 os.path.join(base_dir, "history", "BENCH_EXTRA_HISTORY.jsonl")):
+        try:
+            with open(hist) as f:
+                for line in f:
+                    try:
+                        rec = json.loads(line)
+                    except ValueError:
+                        continue
+                    if _matches(rec):
+                        found = rec.get("queries")
+        except OSError:
+            pass
     if found is not None:
         return found
     if d.get("extras_file"):

@@ -1,7 +1,7 @@
 """Per-query profiling harness for the optimization rounds.
 
 Usage:
-    python scripts/profile_query.py [--plan-dir plans/r11] [--suffix before]
+    python scripts/profile_query.py [--plan-dir history/plans/r11] [--suffix before]
         [--runs 3] name [name ...]
 
 For each named query: captures `.explain("formatted")` to

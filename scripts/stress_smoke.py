@@ -790,7 +790,7 @@ def main() -> None:
         f"Each fold touched {novelty_stats[1][2]} /",
         f"{novelty_stats[COPIES][2]} bucket directories across its two",
         "batches (<= the batch's distinct shingles, pinned in",
-        "tests/test_streaming_novelty.py) — the rest of the store is",
+        "tests/test_streaming_stores.py) — the rest of the store is",
         "untouched bytes, so per-batch cost tracks touched-bucket",
         "bytes, NOT store size; the ~flat table row is the direct",
         "measurement of that.  The r9 whole-store _commit_swap this",

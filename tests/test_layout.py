@@ -1,16 +1,21 @@
 """Layout tests: partition pruning and bucketed shuffle-free joins
-must be visible in the physical plan, not just assumed."""
-
-import pytest
+must be visible in the physical plan, not just assumed; z-order
+values and grid scaling; and the staged swap's guards (marker checks,
+lock vacuum, lock re-acquisition after an unlink)."""
 
 import os
+import random
 import shutil
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from beehive_spark.queries import load
 from beehive_spark.sources.layout import (
+    promote_staging,
     read_bucketed,
+    vacuum_artifacts,
     write_bucketed,
     write_clustered,
     write_partitioned,
@@ -539,3 +544,233 @@ def test_compact_partitioned_splits_oversized_partitions(spark, sf_dir, tmp_path
     assert spark.read.parquet(path).count() == load(
         spark, sf_dir, "orders"
     ).count()
+
+
+def _mkdir_with(path, *files):
+    os.makedirs(path, exist_ok=True)
+    for f in files:
+        with open(os.path.join(path, f), "w") as fh:
+            fh.write("x")
+
+
+def _py_interleave(gx: int, gy: int, bits: int) -> int:
+    z = 0
+    for i in range(bits):
+        z |= ((gx >> i) & 1) << (2 * i)
+        z |= ((gy >> i) & 1) << (2 * i + 1)
+    return z
+
+
+@pytest.mark.slow
+def test_promote_refuses_foreign_incomplete_staging(tmp_path):
+    """After a recoverer promotes a writer's complete staging, the
+    writer's RETRIED promotion must not demote the (now good) live dir
+    in favor of a newly-started rebuild's incomplete staging: with a
+    complete live dir that is the recoverer-already-did-it
+    no-op."""
+    live = str(tmp_path / "idx")
+    staging = live + ".staging"
+    _mkdir_with(live, "MARKER", "data.parquet")
+    _mkdir_with(staging, "part-0.parquet")  # mid-write rebuild: no marker
+    assert promote_staging(staging, live, marker="MARKER") is False
+    # live untouched, foreign staging untouched
+    assert os.path.exists(os.path.join(live, "MARKER"))
+    assert os.path.exists(os.path.join(staging, "part-0.parquet"))
+
+
+@pytest.mark.slow
+def test_promote_incomplete_staging_no_live_raises(tmp_path):
+    """With NO complete live dir, promoting an incomplete staging would
+    publish a partial table — hard error, nothing deleted."""
+    live = str(tmp_path / "idx")
+    staging = live + ".staging"
+    _mkdir_with(staging, "part-0.parquet")  # no marker
+    with pytest.raises(RuntimeError, match="incomplete staging"):
+        promote_staging(staging, live, marker="MARKER")
+    assert os.path.exists(staging)
+    assert not os.path.exists(live)
+
+
+@pytest.mark.slow
+def test_promote_complete_staging_still_swaps(tmp_path):
+    live = str(tmp_path / "idx")
+    staging = live + ".staging"
+    _mkdir_with(live, "MARKER", "old.parquet")
+    _mkdir_with(staging, "MARKER", "new.parquet")
+    assert promote_staging(staging, live, marker="MARKER") is True
+    assert os.path.exists(os.path.join(live, "new.parquet"))
+    assert not os.path.exists(staging)
+
+
+@pytest.mark.slow
+def test_vacuum_collects_dangling_locks_only(tmp_path):
+    """.lock sentinels are collected only when old AND their base
+    artifact is missing; a lock whose artifact exists stays (read_meta
+    on a nonexistent index leaves a lock behind)."""
+    root = str(tmp_path)
+    live = os.path.join(root, "idx")
+    _mkdir_with(live, "meta.json")
+    old = time.time() - 100_000
+    for name in ("idx.lock", "ghost.lock", "fresh_ghost.lock"):
+        p = os.path.join(root, name)
+        with open(p, "w"):
+            pass
+    os.utime(os.path.join(root, "idx.lock"), (old, old))
+    os.utime(os.path.join(root, "ghost.lock"), (old, old))
+    # fresh_ghost.lock keeps its current mtime (too young to collect)
+    removed = vacuum_artifacts(root)
+    assert removed == [os.path.join(root, "ghost.lock")]
+    assert os.path.exists(os.path.join(root, "idx.lock"))  # artifact alive
+    assert os.path.exists(os.path.join(root, "fresh_ghost.lock"))  # young
+
+
+@pytest.mark.slow
+def test_promote_missing_staging_incomplete_live_raises_before_demoting(tmp_path):
+    """With marker set, staging MISSING and an incomplete
+    live dir, promote must error out WITHOUT demoting the live dir
+    (the old fall-through moved live to .old and then crashed on the
+    staging rename, stranding the data)."""
+    live = str(tmp_path / "idx")
+    _mkdir_with(live, "data.parquet")  # no marker
+    with pytest.raises(RuntimeError, match="missing"):
+        promote_staging(live + ".staging", live, marker="MARKER")
+    assert os.path.exists(os.path.join(live, "data.parquet"))
+    assert not os.path.exists(live + ".old")
+
+
+@pytest.mark.slow
+def test_dir_swap_lock_reacquires_after_unlink(tmp_path):
+    """If the lockfile is unlinked between open() and
+    flock() (vacuum collecting a dangling lock), the acquirer must
+    detect the orphaned inode and retry on the fresh file — holding a
+    lock on an unlinked inode is no lock at all."""
+    from beehive_spark.sources.layout import dir_swap_lock
+
+    path = str(tmp_path / "idx")
+    lockfile = path + ".lock"
+    with dir_swap_lock(path):
+        # lock held: the path must resolve to the inode we locked
+        assert os.path.exists(lockfile)
+    # simulate the race: stale lockfile vanishes, then a new acquire
+    # must create a fresh file and still succeed
+    os.unlink(lockfile)
+    with dir_swap_lock(path):
+        assert os.path.exists(lockfile)
+
+
+@pytest.mark.slow
+def test_dir_swap_lock_mutual_exclusion_survives_vacuum_hammer(tmp_path):
+    """N workers repeatedly enter the critical
+    section while a vacuum thread keeps unlinking the (dangling)
+    lockfile; the inode re-check must keep the section exclusive —
+    without it two workers holding different inodes overlap."""
+    import multiprocessing as mp
+
+    from beehive_spark.sources.layout import dir_swap_lock
+
+    path = str(tmp_path / "idx")  # base artifact never exists
+    shared = str(tmp_path / "counter")
+
+    def worker(n_iters: int):
+        for _ in range(n_iters):
+            with dir_swap_lock(path):
+                # read-modify-write a counter file: lost updates reveal
+                # any mutual-exclusion break
+                try:
+                    with open(shared) as f:
+                        v = int(f.read())
+                except FileNotFoundError:
+                    v = 0
+                with open(shared, "w") as f:
+                    f.write(str(v + 1))
+
+    def vacuum(stop_file: str):
+        # mirrors vacuum_artifacts' collection protocol: unlink ONLY
+        # while holding a non-blocking exclusive flock on the inode —
+        # an unconditional unlink genuinely breaks exclusion (a worker
+        # past its re-check can lose the file under it), which is why
+        # the production vacuum never does that
+        import fcntl
+
+        while not os.path.exists(stop_file):
+            try:
+                fd = os.open(path + ".lock", os.O_RDWR)
+            except FileNotFoundError:
+                continue
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except OSError:
+                os.close(fd)
+                continue
+            try:
+                os.unlink(path + ".lock")
+            except FileNotFoundError:
+                pass
+            finally:
+                os.close(fd)
+
+    stop = str(tmp_path / "stop")
+    vac = mp.Process(target=vacuum, args=(stop,))
+    vac.start()
+    workers = [mp.Process(target=worker, args=(60,)) for _ in range(4)]
+    for w in workers:
+        w.start()
+    for w in workers:
+        w.join()
+    with open(stop, "w"):
+        pass
+    vac.join()
+    with open(shared) as f:
+        assert int(f.read()) == 4 * 60  # zero lost updates
+
+
+def test_z_value_matches_python_interleave(spark):
+    from beehive_spark.functions.zorder import z_value
+
+    rng = random.Random(6)
+    rows = [(rng.randrange(1 << 16), rng.randrange(1 << 16)) for _ in range(200)]
+    df = spark.createDataFrame(rows, "gx long, gy long")
+    got = df.select("gx", "gy", z_value(F.col("gx"), F.col("gy")).alias("z")).collect()
+    for r in got:
+        assert r["z"] == _py_interleave(r["gx"], r["gy"], 16)
+
+
+def test_z_value_rejects_bigint_overflow():
+    import pytest
+
+    from beehive_spark.functions.zorder import z_value
+
+    with pytest.raises(ValueError, match="overflow"):
+        z_value(F.lit(0), F.lit(0), bits=32)
+
+
+def test_grid_scale_degenerate_and_bounds(spark):
+    from beehive_spark.functions.zorder import grid_scale
+
+    df = spark.createDataFrame([(0,), (500,), (1000,)], "v long")
+    out = df.select(
+        grid_scale(F.col("v"), F.lit(0), F.lit(1000)).alias("g"),
+        grid_scale(F.col("v"), F.lit(7), F.lit(7)).alias("flat"),
+    ).collect()
+    gs = sorted(r["g"] for r in out)
+    assert gs[0] == 0 and gs[-1] == (1 << 16) - 1 and gs[1] == 500 * 65535 // 1000
+    assert all(r["flat"] == 0 for r in out)
+
+
+def test_grid_scale_exact_up_to_overflow_guard_then_quantized(spark):
+    """Exact BIGINT path for spans under the overflow guard; wide
+    spans must neither overflow (ANSI would raise) nor leave the
+    grid range, and may drift at most one cell from the closed
+    form."""
+    from beehive_spark.functions.zorder import grid_scale
+
+    exact_v, exact_span = (1 << 45) + 12345, 1 << 46
+    wide_v, wide_span = (1 << 56) + 12345, 1 << 57
+    df = spark.createDataFrame([(exact_v, wide_v)], "ev long, wv long")
+    r = df.select(
+        grid_scale(F.col("ev"), F.lit(0), F.lit(exact_span)).alias("ge"),
+        grid_scale(F.col("wv"), F.lit(0), F.lit(wide_span)).alias("gw"),
+    ).first()
+    assert r["ge"] == exact_v * 65535 // exact_span
+    ideal = wide_v * 65535 // wide_span
+    assert 0 <= r["gw"] <= 65535 and abs(r["gw"] - ideal) <= 1

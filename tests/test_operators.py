@@ -113,8 +113,8 @@ def test_remap_fks_null_and_drop(spark):
     assert out == {1: 110, 2: 120, 3: None, 4: None}
     dropped = remap_fks(rows, {"fk": m}, on_missing="drop")
     assert sorted(r["pk"] for r in dropped.collect()) == [1, 2, 3]
-    kept = {r["pk"]: r["fk"] for r in remap_fks(rows, {"fk": m}, on_missing="keep").collect()}
-    assert kept[4] == 99
+    with pytest.raises(ValueError, match="on_missing"):
+        remap_fks(rows, {"fk": m}, on_missing="keep")
 
 
 def test_consolidate_split(spark):
@@ -143,8 +143,8 @@ def test_consolidate_with_fk_premap(spark):
     dst = spark.createDataFrame([(50, 900, 7)], ["dst_pk", "prog", "concept"])
     prog_map = spark.createDataFrame([(100, 900)], ["src_id", "dest_id"])
     res = consolidate(
-        src, dst, "src_pk", "dst_pk", ["prog", "concept"],
-        fk_premaps={"prog": prog_map}, next_id_base=51,
+        remap_fks(src, {"prog": prog_map}), dst, "src_pk", "dst_pk",
+        ["prog", "concept"], next_id_base=51,
     )
     mapping = {r["src_id"]: r["dest_id"] for r in res.mapping.collect()}
     assert mapping[1] == 50 and mapping[2] == 51

@@ -10,12 +10,6 @@ from beehive_spark.queries import all_queries
 from beehive_spark.session import register_views
 
 
-def _canon(df, round_cols=()):
-    for c in round_cols:
-        df = df.withColumn(c, F.round(c, 2))
-    return sorted(tuple(r) for r in df.collect())
-
-
 def test_sql_matches_dataframe_q1(spark, sf_dir):
     register_views(spark, sf_dir)
     sql = spark.sql(
