@@ -2391,7 +2391,7 @@ def dedup_semantic_planted(spark, sf_dir, threshold: float = 0.45):
     on identical integer inputs, so the compared doubles are
     bit-equal; thresholds and the 4-decimal round sit >= 0.005 from
     every attained value.  LOAD-BEARING data assumptions (asserted in
-    tests/test_graph.py): custkeys 0-based contiguous, counts
+    tests/test_queries_r6.py): custkeys 0-based contiguous, counts
     divisible by 15 at every shipped SF.
 
     Scale shape: identical to :func:`dedup_semantic`'s pair stage —

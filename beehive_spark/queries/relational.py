@@ -2433,7 +2433,7 @@ def graph_kcore_planted(spark, sf_dir):
     surviving core is exactly the clique positions with
     core_degree = |clique|-1, plus the chain contribution (1 per
     existing neighbor block) on position-0 nodes.  LOAD-BEARING data
-    assumptions, both asserted in ``tests/test_graph.py``:
+    assumptions, both asserted in ``tests/test_queries_r6.py``:
     custkeys are 0-BASED AND CONTIGUOUS (conventional 1-based keys
     would orphan block 0's position-0 node, demoting its clique below
     the core while the arithmetic oracle still claims it), and node
@@ -2543,7 +2543,7 @@ def pagerank_planted(spark, sf_dir):
     float drift is ulp-scale (the operator fl-sums 14 equal leaf
     contributions where the oracle multiplies by 14), ~9 orders of
     magnitude below the grid.  LOAD-BEARING data assumptions, both
-    asserted in ``tests/test_graph.py``: custkeys 0-based
+    asserted in ``tests/test_queries_r6.py``: custkeys 0-based
     contiguous, counts divisible by 15 at every shipped SF.
 
     Scale shape: the edge frame is two pure projections (no join at
@@ -2614,7 +2614,7 @@ def tree_shortest_paths(spark, sf_dir):
     bounded shuffles; rounds = tree height (~log4 n), because only
     improved nodes re-relax.  RAISES on round-cap exhaustion and on
     negative weights (exact-operator contract).  Random-graph
-    Dijkstra twin in ``tests/test_graph.py``."""
+    Dijkstra twin in ``tests/test_queries_r7.py``."""
     from beehive_spark.operators.graph import sssp
 
     p = load(spark, sf_dir, "part").select(
@@ -2913,7 +2913,7 @@ def bom_cost_rollup(spark, sf_dir):
     shrink.  The oracle pays |V| * height path rows; the operator
     never materializes paths.  RAISES on round-cap exhaustion (exact
     iterative-operator contract).  Brute-force python twin in
-    ``tests/test_graph.py`` on random forests."""
+    ``tests/test_queries_r7.py`` on random forests."""
     from beehive_spark.operators.graph import tree_rollup
 
     p = load(spark, sf_dir, "part").select(
@@ -3666,7 +3666,7 @@ def label_propagation_planted(spark, sf_dir, rounds: int = _LPA_ROUNDS):
     no tie is ever attained (margins are integer vote counts), so
     both engines' ROW_NUMBER argmax picks identically and the result
     hash-gates exactly.  LOAD-BEARING data assumptions (asserted in
-    tests/test_graph.py): custkeys 0-based contiguous.
+    tests/test_queries_r6.py): custkeys 0-based contiguous.
 
     Scale shape: per round ONE join of the edge frame against the
     label frame (node-keyed, bounded by |E|), one map-side-combinable

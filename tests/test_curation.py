@@ -3,9 +3,7 @@ are covered by the oracle gate; these pin semantic invariants:
 balance, conservation, bounds, and the data assumptions the queries'
 no-divide-by-zero and exclusion promises rest on)."""
 
-import math
 import os
-from collections import Counter
 
 import duckdb
 from pyspark.sql import functions as F
@@ -195,53 +193,6 @@ def test_substring_spans_merge_and_split(spark, tmp_path):
     ]
 
 
-def test_interleave_is_balanced_permutation(spark, sf_dir, qs):
-    rows = sorted(
-        (r["interleave_pos"], r["source"])
-        for r in qs["dataset_interleave"](spark, sf_dir).collect()
-    )
-    assert [p for p, _ in rows] == list(range(len(rows)))
-    # strict round-robin: every prefix is balanced within 1 per source
-    for cut in (50, 200, len(rows)):
-        c = Counter(s for _, s in rows[:cut])
-        assert max(c.values()) - min(c.values()) <= 1, (cut, c)
-
-
-def test_split_manifest_fractions_and_conservation(spark, sf_dir, qs):
-    rows = qs["dataset_split_manifest"](spark, sf_dir).collect()
-    d = load(spark, sf_dir, "documents")
-    assert sum(r["n_docs"] for r in rows) == d.count()
-    total = sum(r["n_docs"] for r in rows)
-    train = sum(r["n_docs"] for r in rows if r["split"] == "train")
-    assert 0.8 < train / total < 0.97
-
-
-def test_bigram_probabilities_sum_within_head(spark, sf_dir, qs):
-    rows = qs["bigram_next_word"](spark, sf_dir).collect()
-    assert rows and len({r["w1"] for r in rows}) <= 20
-    for r in rows:
-        assert 0 < r["p_next"] <= 1
-        assert r["n_pair"] <= r["n_head"]
-
-
-def test_corpus_overlap_full_matrix_and_bounds(spark, sf_dir, qs):
-    rows = qs["cross_corpus_overlap"](spark, sf_dir).collect()
-    d = load(spark, sf_dir, "documents")
-    k = d.select("source").distinct().count()
-    assert len(rows) == k * (k - 1) // 2
-    assert all(0 <= r["jaccard"] <= 1 for r in rows)
-
-
-def test_length_outliers_all_beyond_cut(spark, sf_dir, qs):
-    rows = qs["doc_length_outliers"](spark, sf_dir).collect()
-    assert rows and all(abs(r["robust_z"]) > 1.5 for r in rows)
-
-
-def test_prefix_clusters_sizes(spark, sf_dir, qs):
-    rows = qs["doc_prefix_clusters"](spark, sf_dir).collect()
-    assert rows and all(r["n_docs"] >= 2 and r["n_sources"] >= 1 for r in rows)
-
-
 def test_negative_sampling_excludes_every_positive(spark, sf_dir):
     from beehive_spark.queries.curation import negative_sampling
 
@@ -266,39 +217,3 @@ def test_no_constant_price_brand_at_any_shipped_sf():
             f"  GROUP BY 1 HAVING MIN(p_retailprice) = MAX(p_retailprice))"
         ).fetchone()
         assert n == 0, f"{d}: {n} constant-price brands"
-
-
-def test_l_diversity_matches_bruteforce(spark):
-    """Group sizes, distinct-l, entropy and risk flags equal the
-    Python computation over the banded sensitive attribute."""
-    from beehive_spark.queries import load
-    from beehive_spark.queries.curation import (
-        _LDIV_L,
-        _LDIV_MID_CENTS,
-        l_diversity_audit,
-    )
-
-    groups = {}
-    for r in load(spark, SF, "customer").collect():
-        cents = round(r["c_acctbal"] * 100)
-        sens = (
-            "debt" if cents < 0 else "mid" if cents < _LDIV_MID_CENTS
-            else "high"
-        )
-        g = groups.setdefault((r["c_nationkey"], r["c_mktsegment"]), {})
-        g[sens] = g.get(sens, 0) + 1
-    got = {
-        (r["nationkey"], r["segment"]): r
-        for r in l_diversity_audit(spark, SF).collect()
-    }
-    assert set(got) == set(groups)
-    for key, counts in groups.items():
-        n = sum(counts.values())
-        want_h = sum(
-            round(-(c / n) * math.log(c / n) * 1_000_000)
-            for c in counts.values()
-        )
-        r = got[key]
-        assert (r["group_size"], r["distinct_l"]) == (n, len(counts))
-        assert r["entropy_l_micro"] == want_h
-        assert r["at_risk"] == (len(counts) < _LDIV_L)

@@ -1,12 +1,14 @@
 """Graph operators and queries: bfs_levels (the iterative replacement
 for the reference's recursive user tree, person-users.js:568-601),
 connected components (near-dup cluster collapse), pagerank, k-core,
-tree rollup, sssp, label propagation and the co-purchase graph queries.
+label propagation and the co-purchase graph queries.  The planted
+PageRank and k-core pins and the tree-rollup and sssp twins live in
+test_queries_r6 and test_queries_r7.
 
 The operator pins below run in the slow tier; the random-graph
 brute-force pins run fast in test_graph_property.  The query pins
-(planted closed forms, brute-force peels and power iterations, random
-forests and graphs) carry their tier per test."""
+(brute-force peels, power iterations and planted label blocks) carry
+their tier per test."""
 
 import math
 import os
@@ -376,53 +378,6 @@ def _brute_peel(edges, k):
     return {n: len(ns) for n, ns in adj.items()}
 
 
-def _brute_pagerank_star_forest(n: int, iters: int, damping: float = 0.85):
-    """Dense per-node power iteration over the planted star forest,
-    replicating the operator's no_dangling update order exactly:
-    r' = (1-d)/n + d * sum(in-contribs)."""
-    out_deg = [14 if i % 15 == 0 else 1 for i in range(n)]
-    ranks = [1.0 / n] * n
-    for _ in range(iters):
-        contrib = [0.0] * n
-        for i in range(n):
-            hub = (i // 15) * 15
-            if i == hub:
-                continue
-            # leaf -> hub and hub -> leaf
-            contrib[hub] += ranks[i] / out_deg[i]
-            contrib[i] += ranks[hub] / out_deg[hub]
-        ranks = [
-            (1.0 - damping) / n + damping * contrib[i] for i in range(n)
-        ]
-    return ranks
-
-
-def _brute_rollup(edges, costs):
-    """Recursive python rollup: total(n) = cost(n) + sum qty*total(child)."""
-    import sys
-
-    kids = {}
-    for c, p, q in edges:
-        kids.setdefault(p, []).append((c, q))
-    sys.setrecursionlimit(10000)
-    memo_t, memo_n = {}, {}
-
-    def go(n):
-        if n in memo_t:
-            return memo_t[n], memo_n[n]
-        t, d = costs[n], 1
-        for c, q in kids.get(n, ()):
-            ct, cd = go(c)
-            t += q * ct
-            d += cd
-        memo_t[n], memo_n[n] = t, d
-        return t, d
-
-    for n in costs:
-        go(n)
-    return {n: (memo_t[n], memo_n[n]) for n in costs}
-
-
 def test_copurchase_pagerank_is_a_distribution_head(spark, sf_dir, qs):
     rows = qs["pagerank_copurchase"](spark, sf_dir).collect()
     assert 0 < len(rows) <= 100
@@ -507,207 +462,6 @@ def test_graph_kcore_query_matches_brute_peel_on_real_data(spark):
     assert got == want
 
 
-def test_graph_kcore_planted_matches_closed_form(spark, sf_dir):
-    from beehive_spark.queries.relational import graph_kcore_planted
-
-    got = {
-        (r["id"], r["core_degree"])
-        for r in graph_kcore_planted(spark, sf_dir).collect()
-    }
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = cust.count()
-    # load-bearing planted-topology assumptions (see the query
-    # docstring): custkeys 0-based AND contiguous, count divisible
-    # by 15 — 1-based keys would orphan block 0's anchor and make
-    # the closed-form oracle silently wrong
-    lo, hi = cust.selectExpr(
-        "min(c_custkey)", "max(c_custkey)"
-    ).first()
-    assert lo == 0 and hi == n - 1 and n % 15 == 0
-    maxb = (n - 1) // 15
-    want = set()
-    for i in range(n):
-        b, p = divmod(i, 15)
-        c = 6 if b % 2 == 0 else 7
-        if p < c:
-            deg = c - 1
-            if p == 0:
-                deg += (1 if b > 0 else 0) + (1 if b < maxb else 0)
-            want.add((i, deg))
-    assert got == want and got
-
-
-def test_pagerank_planted_matches_dense_power_iteration(spark, sf_dir):
-    from beehive_spark.queries.relational import (
-        _PR_PLANTED_ITERS,
-        pagerank_planted,
-    )
-
-    got = {
-        (r["id"], r["rank_nano"])
-        for r in pagerank_planted(spark, sf_dir).collect()
-    }
-    n = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
-    assert n % 15 == 0 and n > 0
-    ranks = _brute_pagerank_star_forest(n, _PR_PLANTED_ITERS)
-    # the dense twin and the operator disagree only at fl-sum ulp
-    # scale, ~9 orders below the nano grid — exact match expected
-    want = {(i, round(ranks[i] * 1e9)) for i in range(n)}
-    assert got == want and got
-    # ranks form a probability distribution (mass conservation is the
-    # property the planted oracle is designed to catch violations of)
-    total = sum(ranks)
-    assert abs(total - 1.0) < 1e-9
-    # non-uniform by construction: hub mass well above leaf mass
-    hubs = {v for i, v in want if i % 15 == 0}
-    leaves = {v for i, v in want if i % 15 != 0}
-    assert min(hubs) > 5 * max(leaves)
-
-
-def test_tree_rollup_matches_brute_force_on_random_forest(spark):
-    import random
-
-    from beehive_spark.operators.graph import tree_rollup
-
-    rng = random.Random(77)
-    n = 400
-    costs = {i: rng.randint(1, 1000) for i in range(n)}
-    # random forest: each non-root picks a parent with a SMALLER id
-    # (acyclic by construction), ~5% of nodes are extra roots
-    edges = [
-        (i, rng.randrange(i), rng.randint(1, 3))
-        for i in range(1, n)
-        if rng.random() > 0.05
-    ]
-    want = _brute_rollup(edges, costs)
-    e_df = spark.createDataFrame(edges, "child long, parent long, qty long")
-    c_df = spark.createDataFrame(list(costs.items()), "id long, cost long")
-    got = {
-        r["id"]: (r["total"], r["n_desc"])
-        for r in tree_rollup(e_df, c_df).collect()
-    }
-    assert got == want and len(got) == n
-
-
-def test_tree_rollup_succeeds_when_height_equals_cap(spark):
-    """A chain of height == max_iter drains its last edge in the final
-    round; the completion check must fire inside that round, not at the
-    top of a (nonexistent) next one (an off-by-one)."""
-    from beehive_spark.operators.graph import tree_rollup
-
-    # chain 4 -> 3 -> 2 -> 1 -> 0: height (and rounds needed) = 5
-    e_df = spark.createDataFrame(
-        [(i, i - 1, 1) for i in range(1, 6)], "child long, parent long, qty long"
-    )
-    c_df = spark.createDataFrame([(i, 1) for i in range(6)], "id long, cost long")
-    got = {
-        r["id"]: (r["total"], r["n_desc"])
-        for r in tree_rollup(e_df, c_df, max_iter=5).collect()
-    }
-    assert got == {i: (6 - i, 6 - i) for i in range(6)}
-
-
-def test_tree_rollup_handles_edgeless_forest(spark):
-    from beehive_spark.operators.graph import tree_rollup
-
-    e_df = spark.createDataFrame([], "child long, parent long, qty long")
-    c_df = spark.createDataFrame([(1, 5), (2, 7)], "id long, cost long")
-    got = {
-        r["id"]: (r["total"], r["n_desc"]) for r in tree_rollup(e_df, c_df).collect()
-    }
-    assert got == {1: (5, 1), 2: (7, 1)}
-
-
-def test_tree_rollup_raises_on_cycle(spark):
-    import pytest
-
-    from beehive_spark.operators.graph import tree_rollup
-
-    e_df = spark.createDataFrame(
-        [(1, 2, 1), (2, 1, 1)], "child long, parent long, qty long"
-    )
-    c_df = spark.createDataFrame([(1, 5), (2, 7)], "id long, cost long")
-    with pytest.raises(RuntimeError, match="truncated rollup"):
-        tree_rollup(e_df, c_df, max_iter=5)
-
-
-def test_bom_cost_rollup_root_equals_whole_forest(spark, sf_dir):
-    """The planted tree is rooted at part 0, so the root's rollup must
-    cover every part exactly once (n_desc == |part|)."""
-    from beehive_spark.queries.relational import bom_cost_rollup
-
-    out = bom_cost_rollup(spark, sf_dir)
-    n = spark.read.parquet(f"{sf_dir}/part.parquet").count()
-    root = out.filter(F.col("id") == 0).collect()[0]
-    assert root["n_desc"] == n
-    # leaves (no children): total == own cents
-    hi = out.filter(F.col("id") >= (n - 1) // 4 + 1).limit(5).collect()
-    prices = {
-        r["p_partkey"]: r["p_retailprice"]
-        for r in spark.read.parquet(f"{sf_dir}/part.parquet")
-        .filter(F.col("p_partkey") >= (n - 1) // 4 + 1)
-        .limit(50)
-        .collect()
-    }
-    for r in hi:
-        if r["id"] in prices:
-            assert r["total_cost_cents"] == round(prices[r["id"]] * 100)
-            assert r["n_desc"] == 1
-
-
-def test_sssp_matches_dijkstra_on_random_graph(spark):
-    import heapq
-    import random
-
-    from beehive_spark.operators.graph import sssp
-
-    rng = random.Random(99)
-    n = 200
-    edges = []
-    for _ in range(800):
-        u, v = rng.randrange(n), rng.randrange(n)
-        if u != v:
-            edges.append((u, v, rng.randint(0, 20)))
-    adj = {}
-    for u, v, w in edges:
-        adj.setdefault(u, []).append((v, w))
-    dist = {0: 0}
-    pq = [(0, 0)]
-    while pq:
-        d, u = heapq.heappop(pq)
-        if d > dist.get(u, float("inf")):
-            continue
-        for v, w in adj.get(u, ()):
-            nd = d + w
-            if nd < dist.get(v, float("inf")):
-                dist[v] = nd
-                heapq.heappush(pq, (nd, v))
-    e_df = spark.createDataFrame(edges, "src long, dst long, w long")
-    roots = spark.createDataFrame([(0,)], "id long")
-    got = {r["id"]: r["dist"] for r in sssp(e_df, roots).collect()}
-    assert got == dist and got
-    # the big-graph branch (no broadcast hints, u-sorted edge layout)
-    # must compute the identical distances — force it over the same
-    # graph by zeroing the threshold (r11: the loop grew two
-    # layout/strategy modes, mirroring pagerank's)
-    smj = {
-        r["id"]: r["dist"]
-        for r in sssp(e_df, roots, broadcast_dist_rows=0).collect()
-    }
-    assert smj == dist
-
-
-def test_sssp_rejects_negative_weights(spark):
-    import pytest
-
-    from beehive_spark.operators.graph import sssp
-
-    e_df = spark.createDataFrame([(0, 1, -2)], "src long, dst long, w long")
-    roots = spark.createDataFrame([(0,)], "id long")
-    with pytest.raises(ValueError, match="non-negative"):
-        sssp(e_df, roots)
-
-
 @pytest.mark.slow
 def test_label_propagation_recovers_planted_blocks(spark, sf_dir):
     from beehive_spark.queries.relational import label_propagation_planted
@@ -769,37 +523,3 @@ def test_adamic_adar_small_basket_outweighs_large(spark):
     assert s12 == round(1_000_000 / math.log(2))
     assert s10 == 3 * round(1_000_000 / math.log(20))
     assert s12 > s10  # ...but AA damping flips the ranking
-
-
-def test_assortativity_matches_networkx_free_bruteforce(spark):
-    """Newman r recomputed from the collected edge list in Python;
-    coefficient bounded in [-1, 1]."""
-    from beehive_spark.queries.relational import (
-        copurchase_pairs,
-        graph_degree_assortativity,
-    )
-    from beehive_spark.queries import load
-
-    li = load(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-    edges = {
-        (r["pa"], r["pb"])
-        for r in copurchase_pairs(li).distinct().collect()
-    }
-    deg = {}
-    for a, b in edges:
-        deg[a] = deg.get(a, 0) + 1
-        deg[b] = deg.get(b, 0) + 1
-    xs = []
-    for a, b in edges:
-        xs.append((deg[a], deg[b]))
-        xs.append((deg[b], deg[a]))
-    m = len(xs)
-    sx = sum(x for x, _ in xs)
-    sxx = sum(x * x for x, _ in xs)
-    sxy = sum(x * y for x, y in xs)
-    want = (m * sxy - sx * sx) / (m * sxx - sx * sx)
-    r = graph_degree_assortativity(spark, SF).collect()[0]
-    assert r["n_nodes"] == len(deg)
-    assert r["n_edges"] == len(edges)
-    assert abs(r["assortativity_micro"] - round(want * 1_000_000)) <= 1
-    assert -1_000_000 <= r["assortativity_micro"] <= 1_000_000

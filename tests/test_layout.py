@@ -1,10 +1,10 @@
 """Layout tests: partition pruning and bucketed shuffle-free joins
 must be visible in the physical plan, not just assumed; z-order
-values and grid scaling; and the staged swap's guards (marker checks,
-lock vacuum, lock re-acquisition after an unlink)."""
+file skipping and null ordering; and the staged swap's guards
+(marker checks, lock vacuum, lock re-acquisition after an
+unlink)."""
 
 import os
-import random
 import shutil
 import time
 
@@ -162,7 +162,6 @@ def test_export_training_shards_deterministic_and_complete(spark, sf_dir, tmp_pa
 
     want = collections.Counter(a1.values())
     assert man == dict(want)
-
 
 
 def test_upsert_parquet_replaces_by_key_and_survives(spark, sf_dir, tmp_path):
@@ -553,14 +552,6 @@ def _mkdir_with(path, *files):
             fh.write("x")
 
 
-def _py_interleave(gx: int, gy: int, bits: int) -> int:
-    z = 0
-    for i in range(bits):
-        z |= ((gx >> i) & 1) << (2 * i)
-        z |= ((gy >> i) & 1) << (2 * i + 1)
-    return z
-
-
 @pytest.mark.slow
 def test_promote_refuses_foreign_incomplete_staging(tmp_path):
     """After a recoverer promotes a writer's complete staging, the
@@ -722,55 +713,3 @@ def test_dir_swap_lock_mutual_exclusion_survives_vacuum_hammer(tmp_path):
     vac.join()
     with open(shared) as f:
         assert int(f.read()) == 4 * 60  # zero lost updates
-
-
-def test_z_value_matches_python_interleave(spark):
-    from beehive_spark.functions.zorder import z_value
-
-    rng = random.Random(6)
-    rows = [(rng.randrange(1 << 16), rng.randrange(1 << 16)) for _ in range(200)]
-    df = spark.createDataFrame(rows, "gx long, gy long")
-    got = df.select("gx", "gy", z_value(F.col("gx"), F.col("gy")).alias("z")).collect()
-    for r in got:
-        assert r["z"] == _py_interleave(r["gx"], r["gy"], 16)
-
-
-def test_z_value_rejects_bigint_overflow():
-    import pytest
-
-    from beehive_spark.functions.zorder import z_value
-
-    with pytest.raises(ValueError, match="overflow"):
-        z_value(F.lit(0), F.lit(0), bits=32)
-
-
-def test_grid_scale_degenerate_and_bounds(spark):
-    from beehive_spark.functions.zorder import grid_scale
-
-    df = spark.createDataFrame([(0,), (500,), (1000,)], "v long")
-    out = df.select(
-        grid_scale(F.col("v"), F.lit(0), F.lit(1000)).alias("g"),
-        grid_scale(F.col("v"), F.lit(7), F.lit(7)).alias("flat"),
-    ).collect()
-    gs = sorted(r["g"] for r in out)
-    assert gs[0] == 0 and gs[-1] == (1 << 16) - 1 and gs[1] == 500 * 65535 // 1000
-    assert all(r["flat"] == 0 for r in out)
-
-
-def test_grid_scale_exact_up_to_overflow_guard_then_quantized(spark):
-    """Exact BIGINT path for spans under the overflow guard; wide
-    spans must neither overflow (ANSI would raise) nor leave the
-    grid range, and may drift at most one cell from the closed
-    form."""
-    from beehive_spark.functions.zorder import grid_scale
-
-    exact_v, exact_span = (1 << 45) + 12345, 1 << 46
-    wide_v, wide_span = (1 << 56) + 12345, 1 << 57
-    df = spark.createDataFrame([(exact_v, wide_v)], "ev long, wv long")
-    r = df.select(
-        grid_scale(F.col("ev"), F.lit(0), F.lit(exact_span)).alias("ge"),
-        grid_scale(F.col("wv"), F.lit(0), F.lit(wide_span)).alias("gw"),
-    ).first()
-    assert r["ge"] == exact_v * 65535 // exact_span
-    ideal = wide_v * 65535 // wide_span
-    assert 0 <= r["gw"] <= 65535 and abs(r["gw"] - ideal) <= 1

@@ -7,9 +7,7 @@ scale factor, structural contracts of the approximate hosts, and
 properties on constructed corpora."""
 
 import itertools
-import math
 import os
-import re
 
 import duckdb
 import pytest
@@ -148,36 +146,6 @@ def test_mmr_rerank_is_diverse_and_relevant(spark):
 
     if set(ids) != set(naive):  # MMR changed the set: diversity improved
         assert max_pair([int(i) for i in ids]) <= max_pair(naive) + 1e-12
-
-
-def test_ngram_lm_score_unseen_history_fallback(spark):
-    import math
-
-    import beehive_spark.queries.llm as mod
-    from beehive_spark.queries.llm import ngram_lm_score
-
-    rows = [
-        (0, "alpha beta alpha beta gamma"),  # train
-        (2, "beta gamma beta"),  # train
-        (1, "alpha beta zeta zeta"),  # score: 'zeta' history unseen
-        (3, "x"),  # score: <2 tokens -> n_bigrams 0, NULL xent
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    orig_load = mod.load
-    try:
-        mod.load = lambda sp, sf, t: df
-        got = {r["doc_id"]: r for r in ngram_lm_score(spark, "unused").collect()}
-    finally:
-        mod.load = orig_load
-    # train bigrams: (alpha,beta) x2, (beta,alpha), (beta,gamma) x2, (gamma,beta)
-    # histories: alpha->2, beta->3, gamma->1 ; V = 3 (alpha beta gamma)
-    def lp(cb, cu):
-        return round(math.log((cb + 1) / (cu + 3)) * 1_000_000)
-
-    s = lp(2, 2) + lp(0, 3) + lp(0, 0)  # alpha-beta, beta-zeta, zeta-zeta
-    assert got[1]["n_bigrams"] == 3
-    assert got[1]["xent"] == round(-s / 1_000_000 / 3, 4)
-    assert got[3]["n_bigrams"] == 0 and got[3]["xent"] is None
 
 
 def test_similarity_ann_pq_planted_matches_digit_arithmetic(spark, sf_dir):
@@ -455,138 +423,3 @@ def test_int8_quantization_error_bound(spark):
             f"vec {r['vec_id']}: {r['recon_err_micro']} > {budget}"
         )
         assert 0 <= r["q_sum"] <= 255 * r["n_dims"]
-
-
-def test_zipf_slope_matches_numpy_polyfit(spark):
-    import numpy as np
-
-    from beehive_spark.queries import load
-    from beehive_spark.queries.llm import _tokens, text_zipf_slope
-
-    freqs = (
-        load(spark, SF, "documents")
-        .select(F.explode(_tokens(F.col("text"))).alias("t"))
-        .groupBy("t")
-        .count()
-        .orderBy(F.col("count").desc(), "t")
-        .limit(1000)
-        .collect()
-    )
-    y = np.log([r["count"] for r in freqs])
-    x = np.log(np.arange(1, len(freqs) + 1, dtype=float))
-    slope, intercept = np.polyfit(x, y, 1)
-    r = text_zipf_slope(spark, SF).collect()[0]
-    assert r["n_ranked"] == len(freqs)
-    assert abs(r["slope_micro"] - round(slope * 1_000_000)) <= 2
-    assert abs(r["intercept_micro"] - round(intercept * 1_000_000)) <= 2
-    # a frequency spectrum always slopes down; the sf0.001 synthetic
-    # corpus is flat-ish (~-0.18), real text sits near -1
-    assert r["slope_micro"] < 0
-
-
-def test_retrieval_ndcg_matches_bruteforce(spark):
-    from beehive_spark.queries.llm import (
-        _NDCG_K,
-        _bm25_doc_scores,
-        retrieval_ndcg,
-    )
-
-    docs = [
-        (r["doc_id"], r["n_terms"], r["score_micro"])
-        for r in _bm25_doc_scores(spark, SF).collect()
-    ]
-
-    def dcg(rels):
-        return sum(
-            (2**rel - 1) / (math.log(r + 2) / math.log(2))
-            for r, rel in enumerate(rels)
-        )
-
-    ranked = sorted(docs, key=lambda d: (-d[2], d[0]))[:_NDCG_K]
-    ideal = sorted(docs, key=lambda d: (-d[1], d[0]))[:_NDCG_K]
-    want_dcg = dcg([d[1] for d in ranked])
-    want_idcg = dcg([d[1] for d in ideal])
-    r = retrieval_ndcg(spark, SF).collect()[0]
-    assert r["k"] == _NDCG_K
-    assert abs(r["dcg_micro"] - round(want_dcg * 1_000_000)) <= 1
-    assert abs(r["idcg_micro"] - round(want_idcg * 1_000_000)) <= 1
-    assert (
-        abs(r["ndcg_micro"] - round(want_dcg / want_idcg * 1_000_000)) <= 1
-    )
-    assert 0 < r["ndcg_micro"] <= 1_000_000
-
-
-def test_burstiness_matches_bruteforce(spark):
-    """Fano factors recomputed from raw per-doc counts; the head is
-    the df-ordered top and every factor is positive."""
-    from collections import Counter
-
-    from beehive_spark.queries import load
-    from beehive_spark.queries.llm import _BURST_TOP, text_burstiness
-    import re as _re
-
-    docs = load(spark, SF, "documents").select("doc_id", "text").collect()
-    n_docs = len(docs)
-    per_term = {}
-    for r in docs:
-        for t, c in Counter(
-            _re.findall(r"[a-z0-9]+", r["text"].lower())
-        ).items():
-            df, tot, sq = per_term.get(t, (0, 0, 0))
-            per_term[t] = (df + 1, tot + c, sq + c * c)
-    top = sorted(per_term.items(), key=lambda kv: (-kv[1][0], kv[0]))[
-        :_BURST_TOP
-    ]
-    got = {
-        r["term"]: (r["df"], r["total"], r["fano_micro"])
-        for r in text_burstiness(spark, SF).collect()
-    }
-    assert set(got) == {t for t, _ in top}
-    for t, (df, tot, sq) in top:
-        mean = tot / n_docs
-        fano = (sq / n_docs - mean * mean) / mean
-        assert got[t][0] == df and got[t][1] == tot
-        assert abs(got[t][2] - round(fano * 1_000_000)) <= 1
-        assert got[t][2] > 0
-
-
-def test_readability_matches_python_regexes(spark):
-    """Per-doc word/sentence/syllable counts and the Flesch score
-    equal the identical Python regex computation."""
-    from beehive_spark.queries import load
-    from beehive_spark.queries.llm import (
-        _FLESCH_BASE,
-        _FLESCH_SPW,
-        _FLESCH_WPS,
-        text_readability,
-    )
-
-    docs = {
-        r["doc_id"]: r["text"]
-        for r in load(spark, SF, "documents").collect()
-    }
-    got = {r["doc_id"]: r for r in text_readability(spark, SF).collect()}
-    n_checked = 0
-    for doc_id, text in docs.items():
-        toks = re.findall(r"[a-z0-9]+", (text or "").lower())
-        sents = max(1, len(re.findall(r"[.!?]+", text or "")))
-        if not toks:
-            assert doc_id not in got
-            continue
-        syl = sum(
-            max(1, len(re.findall(r"[aeiouy]+", w))) for w in toks
-        )
-        r = got[doc_id]
-        assert (r["n_words"], r["n_sentences"], r["n_syllables"]) == (
-            len(toks),
-            sents,
-            syl,
-        )
-        score = (
-            _FLESCH_BASE
-            - _FLESCH_WPS * (len(toks) / sents)
-            - _FLESCH_SPW * (syl / len(toks))
-        )
-        assert abs(r["flesch_micro"] - score * 1_000_000) <= 1
-        n_checked += 1
-    assert n_checked == len(got)

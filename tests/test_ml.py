@@ -1,35 +1,16 @@
 """ML feature-prep and evaluation queries (``queries.ml``): planted
-k-means recovery, leave-one-out and fold semantics, impurity and
-normalization invariants, and brute-force pins of the selection
-primitive."""
+k-means recovery, leave-one-out and fold semantics, the split's
+impurity gain and a python re-count of weight of evidence."""
 
 import math
 import os
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from conftest import TESTDATA
 
 SF = os.path.join(TESTDATA, "sf0.001")
-
-
-def _feature_values(spark):
-    from beehive_spark.queries import load
-
-    rows = load(spark, SF, "lineitem").select(
-        "l_quantity", "l_extendedprice", "l_discount"
-    ).collect()
-    return {
-        "quantity": sorted(int(r["l_quantity"]) * 100 for r in rows),
-        "extendedprice": sorted(
-            int(round(r["l_extendedprice"] * 100)) for r in rows
-        ),
-        "discount": sorted(
-            int(round(r["l_discount"] * 10000)) for r in rows
-        ),
-    }
 
 
 def test_decision_stump_beats_root_impurity(spark, sf_dir):
@@ -189,235 +170,3 @@ def test_woe_iv_matches_python(spark):
             (g / tg - b / tb) * woe * 1_000_000
         )
         assert r["iv_contrib_micro"] >= 0
-
-
-def test_kaplan_meier_matches_bruteforce(spark):
-    from beehive_spark.queries import load
-    from beehive_spark.queries.ml import (
-        _KM_CENSOR_GAP_US,
-        _US_PER_HOUR,
-        survival_kaplan_meier,
-    )
-
-    rows = (
-        load(spark, SF, "events")
-        .select("user_id", F.unix_micros("ts").alias("us"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("f"), F.max("us").alias("l"))
-        .collect()
-    )
-    end = max(r["l"] for r in rows)
-    subj = [
-        (
-            (r["l"] - r["f"]) // _US_PER_HOUR,
-            1 if r["l"] < end - _KM_CENSOR_GAP_US else 0,
-        )
-        for r in rows
-    ]
-    times = sorted({t for t, c in subj if c == 1})
-    want = []
-    surv = 1.0
-    for t in times:
-        n_risk = sum(1 for d, _ in subj if d >= t)
-        d_t = sum(1 for d, c in subj if d == t and c == 1)
-        surv *= 1.0 - d_t / n_risk
-        want.append((t, n_risk, d_t, round(surv * 1_000_000)))
-    got = [
-        (r["t_hours"], r["n_risk"], r["n_churned"], r["surv_micro"])
-        for r in survival_kaplan_meier(spark, SF)
-        .orderBy("t_hours")
-        .collect()
-    ]
-    assert len(got) == len(want)
-    for g, w in zip(got, want):
-        assert g[:3] == w[:3]
-        assert abs(g[3] - w[3]) <= 1
-    # survival is monotone non-increasing
-    survs = [g[3] for g in got]
-    assert survs == sorted(survs, reverse=True)
-
-
-def test_calibration_ece_matches_bruteforce(spark):
-    from beehive_spark.queries import load
-    from beehive_spark.queries.ml import model_calibration_ece
-
-    o = load(spark, SF, "orders").select(
-        "o_orderkey", "o_totalprice"
-    ).collect()
-    bins = {}
-    for r in o:
-        s = r["o_orderkey"] % 1000
-        label = 1 if (round(r["o_totalprice"] * 100) % 1000) < s else 0
-        b = s * 10 // 1000
-        n, ss, pos = bins.get(b, (0, 0, 0))
-        bins[b] = (n + 1, ss + s, pos + label)
-    total = sum(v[0] for v in bins.values())
-    got = {r["bin"]: r for r in model_calibration_ece(spark, SF).collect()}
-    assert set(got) == set(bins)
-    for b, (n, ss, pos) in bins.items():
-        r = got[b]
-        assert r["n"] == n
-        assert abs(r["conf_micro"] - round(ss / n * 1000)) <= 1
-        assert abs(r["acc_micro"] - round(pos / n * 1_000_000)) <= 1
-        contrib = n / total * abs(pos / n - ss / n / 1000) * 1_000_000
-        assert abs(r["ece_contrib_micro"] - round(contrib)) <= 1
-    # the synthetic scorer is calibrated by construction: ECE under 10%
-    ece = sum(r["ece_contrib_micro"] for r in got.values())
-    assert ece < 100_000
-
-
-def test_quantile_normalize_map_properties(spark):
-    """Equal-count buckets per feature; per-bucket target is the
-    cross-feature mean of bucket means; feature means are monotone in
-    the bucket index (rank buckets sort values)."""
-    from beehive_spark.queries.ml import (
-        _QN_BUCKETS,
-        feature_quantile_normalize,
-    )
-
-    rows = feature_quantile_normalize(spark, SF).collect()
-    by_feat = {}
-    by_bucket = {}
-    for r in rows:
-        by_feat.setdefault(r["feature"], []).append(r)
-        by_bucket.setdefault(r["bucket"], []).append(r)
-    assert set(by_feat) == {"quantity", "extendedprice", "discount"}
-    for feat, rs in by_feat.items():
-        assert len(rs) == _QN_BUCKETS
-        # NTILE balance: bucket sizes differ by at most 1
-        sizes = {r["n"] for r in rs}
-        assert max(sizes) - min(sizes) <= 1, feat
-        # monotone means over the bucket index
-        means = [r["mean_milli"] for r in sorted(rs, key=lambda r: r["bucket"])]
-        assert means == sorted(means), feat
-    for b, rs in by_bucket.items():
-        target = sum(r["mean_milli"] for r in rs) / len(rs)
-        for r in rs:
-            assert abs(r["target_milli"] - target) <= 2, b
-
-
-def test_winsorize_matches_bruteforce_sorted_clip(spark):
-    """Bounds, tail counts and the post-clip mean all equal the
-    Python sorted-list computation (k = ceil(q*n) lower-quantile
-    selection, symmetric p1/p99)."""
-    from beehive_spark.queries.ml import _WINSOR_PCT, feature_winsorize_clip
-
-    vals = _feature_values(spark)
-    got = {
-        r["feature"]: r for r in feature_winsorize_clip(spark, SF).collect()
-    }
-    assert set(got) == set(vals)
-    for feat, xs in vals.items():
-        n = len(xs)
-        k_lo = (_WINSOR_PCT * n + 99) // 100
-        k_hi = ((100 - _WINSOR_PCT) * n + 99) // 100
-        lo, hi = xs[k_lo - 1], xs[k_hi - 1]
-        clipped = [min(max(x, lo), hi) for x in xs]
-        r = got[feat]
-        assert r["n"] == n
-        assert (r["lo_cents"], r["hi_cents"]) == (lo, hi), feat
-        assert r["n_clip_lo"] == sum(1 for x in xs if x < lo), feat
-        assert r["n_clip_hi"] == sum(1 for x in xs if x > hi), feat
-        assert r["mean_clip_milli"] == round(sum(clipped) / n * 10), feat
-
-
-def test_banded_selection_prefix_and_value_algebra(spark):
-    """The shared primitive's rank/value/threshold answers equal the
-    sorted-list ground truth at every probed rank, including band
-    edges and heavy-tie values (discount has ~11 distinct values)."""
-    from beehive_spark.queries.ml import (
-        _BandedSelection,
-        _lineitem_feature_frame,
-    )
-
-    vals = _feature_values(spark)
-    sel = _BandedSelection(_lineitem_feature_frame(spark, SF), n_bands=64)
-    probes = {}
-    for feat, xs in vals.items():
-        n = len(xs)
-        probes[feat] = sorted(
-            {1, 2, n // 3, n // 2, (2 * n) // 3, n - 1, n}
-        )
-    need = {
-        feat: {
-            b
-            for r in rs
-            if (b := sel.band_of_rank(feat, r)) is not None
-        }
-        for feat, rs in probes.items()
-    }
-    sel.refine(need)
-    for feat, xs in vals.items():
-        n, total = sel.totals[feat]
-        assert (n, total) == (len(xs), sum(xs))
-        for r in probes[feat]:
-            assert sel.prefix_sum(feat, r) == sum(xs[:r]), (feat, r)
-            assert sel.value_at(feat, r) == xs[r - 1], (feat, r)
-        v0 = xs[len(xs) // 2]  # a heavy tie for discount
-        lt = [x for x in xs if x < v0]
-        le = [x for x in xs if x <= v0]
-        assert sel.below(feat, v0, inclusive=False) == (len(lt), sum(lt))
-        assert sel.below(feat, v0, inclusive=True) == (len(le), sum(le))
-
-
-def test_hash_cross_fixed_width_and_mass_conservation(spark):
-    """Bucket ids stay inside the fixed width, every customer row's
-    mass lands in exactly one bucket, and |signed_sum| per bucket is
-    bounded by its row mass (signs are +-1)."""
-    from beehive_spark.queries import load
-    from beehive_spark.queries.ml import (
-        _HASH_CROSS_BUCKETS,
-        feature_hash_cross,
-    )
-
-    n_customers = load(spark, SF, "customer").count()
-    rows = feature_hash_cross(spark, SF).collect()
-    assert all(0 <= r["bucket"] < _HASH_CROSS_BUCKETS for r in rows)
-    assert sum(r["n_rows"] for r in rows) == n_customers
-    for r in rows:
-        assert abs(r["signed_sum"]) <= r["n_rows"]
-        assert 1 <= r["n_crosses"] <= r["n_rows"]
-
-
-def test_roc_auc_matches_pair_counting(spark):
-    """AUC from the per-score-aggregate identity equals literal
-    O(P*N) pair counting (1 per correctly ordered pair, 0.5 per tie)
-    on the sf0.001 orders, and sits near the calibrated scorer's
-    theoretical 5/6 (positives' score density rises linearly,
-    negatives' falls: P(S+ > S-) = (5/24)/(1/4))."""
-    from beehive_spark.queries import load
-    from beehive_spark.queries.ml import roc_auc_eval
-
-    rows = load(spark, SF, "orders").select(
-        "o_orderkey", "o_totalprice"
-    ).collect()
-    scored = [
-        (
-            int(r["o_orderkey"]) % 1000,
-            1
-            if (int(round(r["o_totalprice"] * 100)) % 1000)
-            < (int(r["o_orderkey"]) % 1000)
-            else 0,
-        )
-        for r in rows
-    ]
-    pos = [s for s, l in scored if l == 1]
-    neg = [s for s, l in scored if l == 0]
-    u2 = 0  # 2 * Mann-Whitney U, exact integer
-    for p in pos:
-        for q in neg:
-            if p > q:
-                u2 += 2
-            elif p == q:
-                u2 += 1
-    got = roc_auc_eval(spark, SF).collect()[0]
-    assert got["n_pos"] == len(pos)
-    assert got["n_neg"] == len(neg)
-    assert got["n_scores"] == len(set(s for s, _ in scored))
-    assert got["auc_micro"] == round(
-        u2 / (2.0 * len(pos) * len(neg)) * 1_000_000
-    )
-    assert got["gini_micro"] == round(
-        (u2 / (float(len(pos)) * len(neg)) - 1) * 1_000_000
-    )
-    assert 750_000 < got["auc_micro"] < 900_000

@@ -1,13 +1,18 @@
-"""Property pins for the round-10 queries — brute-force micro-oracles
-and invariants the differential gate cannot express (the gate proves
-cross-engine equality; these prove the SEMANTICS are the ones the
-docstrings claim)."""
+"""Property pins for attribution, CUPED, survival, calibration, Zipf,
+retrieval, assortativity, burstiness, path signatures and quantile
+normalisation — brute-force micro-oracles and invariants the
+differential gate cannot express (the gate proves cross-engine
+equality; these prove the semantics are the ones the docstrings
+claim)."""
 
 import math
+import os
 
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
+from conftest import TESTDATA
+
+SF = os.path.join(TESTDATA, "sf0.001")
 
 
 def test_linear_attribution_matches_bruteforce_and_conserves_credit(spark):

@@ -1,14 +1,17 @@
-"""Property pins for the round-11 queries — brute-force micro-oracles
-and invariants the differential gate cannot express (the gate proves
-cross-engine equality; these prove the SEMANTICS are the ones the
-docstrings claim)."""
+"""Property pins for winsorizing, banded selection, readability, Benford,
+entropy, hash crossing, Gini, l-diversity, Poisson bootstrap,
+count-min and ROC AUC — brute-force micro-oracles and invariants the
+differential gate cannot express (the gate proves cross-engine
+equality; these prove the semantics are the ones the docstrings
+claim)."""
 
 import math
+import os
 import re
 
-from pyspark.sql import functions as F
+from conftest import TESTDATA
 
-SF = "/root/testdata/sf0.001"
+SF = os.path.join(TESTDATA, "sf0.001")
 
 
 def _feature_values(spark):

@@ -1,21 +1,16 @@
-"""Semantic invariants for the round-3 query batch.
+"""Semantic invariants for the relational, curation and point-in-time
+queries (``queries.core``, ``queries.curation``).
 
-The driver's differential gate proves Spark == DuckDB; these tests pin
-properties that BOTH engines could get wrong together (conservation
-laws, permutation/balance properties, score bounds) — the second,
-independent line of defense."""
+Every registered query is compared with its DuckDB oracle by
+``test_oracle_gate.py``; these tests pin properties that both engines
+could get wrong together: conservation laws, permutation and balance
+properties, and score bounds."""
 
 from collections import Counter
 
-import pytest
 from pyspark.sql import functions as F
 
-from beehive_spark.queries import all_queries, load
-
-
-@pytest.fixture(scope="module")
-def qs():
-    return all_queries()
+from beehive_spark.queries import load
 
 
 def test_gap_fill_densifies_and_conserves_counts(spark, sf_dir, qs):
@@ -42,29 +37,6 @@ def test_rfm_scores_bounded_and_recency_inverted(spark, sf_dir, qs):
     assert all(r["r_score"] == 5 for r in rows if r["recency_days"] == freshest)
     stalest = max(r["recency_days"] for r in rows)
     assert all(r["r_score"] == 1 for r in rows if r["recency_days"] == stalest)
-
-
-def test_stddev_exact_matches_builtin_stddev(spark, sf_dir, qs):
-    got = {
-        r["o_orderpriority"]: (r["n"], r["mean_price"], r["stddev_price"])
-        for r in qs["stddev_prices_exact"](spark, sf_dir).collect()
-    }
-    o = load(spark, sf_dir, "orders")
-    want = {
-        r["p"]: (r["n"], r["m"], r["sd"])
-        for r in o.groupBy(F.col("o_orderpriority").alias("p"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("o_totalprice").alias("m"),
-            F.stddev_samp("o_totalprice").alias("sd"),
-        )
-        .collect()
-    }
-    for k, (n, mean, sd) in got.items():
-        wn, wm, wsd = want[k]
-        assert n == wn
-        assert abs(mean - wm) < 0.02
-        assert abs(sd - wsd) < 0.02
 
 
 def test_attribution_conserves_purchases(spark, sf_dir, qs):
@@ -172,38 +144,6 @@ def test_length_outliers_all_beyond_cut(spark, sf_dir, qs):
 def test_prefix_clusters_sizes(spark, sf_dir, qs):
     rows = qs["doc_prefix_clusters"](spark, sf_dir).collect()
     assert rows and all(r["n_docs"] >= 2 and r["n_sources"] >= 1 for r in rows)
-
-
-def test_winnowing_matches_reference_implementation(spark, sf_dir, qs):
-    """Pin the Spark winnowing against a direct python transliteration
-    of the Schleimer et al. scheme (rolling k-gram hash, rightmost
-    minimum per window, distinct (pos, hash) set)."""
-    K, W, B, M = 8, 4, 31, 10**9 + 7
-
-    def reference(text):
-        h = [
-            sum(ord(text[i + j]) * pow(B, K - 1 - j, M) for j in range(K)) % M
-            for i in range(len(text) - K + 1)
-        ]
-        fps = set()
-        for p in range(len(h) - W + 1):
-            win = h[p:p + W]
-            m = min(win)
-            idx = max(i for i, v in enumerate(win) if v == m)
-            fps.add((p + idx, m))
-        return len(h), len(fps), sum(v for _, v in fps) % M
-
-    rows = {r["doc_id"]: r
-            for r in qs["doc_winnowing_fingerprints"](spark, sf_dir).collect()}
-    docs = load(spark, sf_dir, "documents").limit(10).collect()
-    for d in docs:
-        n_grams, n_fp, checksum = reference(d["text"])
-        r = rows[d["doc_id"]]
-        assert (r["n_grams"], r["n_fingerprints"], r["fp_checksum"]) == (
-            n_grams, n_fp, checksum,
-        ), d["doc_id"]
-        # winnowing guarantee: density near 2/(w+1), never above 1
-        assert 0 < r["density"] <= 1
 
 
 def test_point_in_time_state_is_a_true_snapshot(spark, sf_dir, qs):

@@ -1,21 +1,18 @@
-"""Round-6 additions: planted k-core twin, per-brand skyline, q-gram
-edit-distance join, Z-order layout, interval concurrency, time-series
-resample, integer EWMA, bigram LM scoring.
+"""Z-order expressions, grid scaling, the q-gram filter bound, the
+planted k-core, bigram LM fallback, the bloom semi-join and the media
+decode paths.
 
-Each driver-gated query also gets an in-test pin against a
-brute-force / pure-python twin on random or real data — never
-hardcoded counts (the r5 lesson)."""
+Each test checks a property the DuckDB oracle gate cannot see: a
+closed form on planted data, a brute-force twin on random inputs, a
+raise, or a decode re-run outside Spark."""
 
 import random
 
 from pyspark.sql import functions as F
 
-from beehive_spark.queries import load as _load
+from beehive_spark.queries import load
 
 
-# ---------------------------------------------------------------------------
-# Z-order expressions
-# ---------------------------------------------------------------------------
 def _py_interleave(gx: int, gy: int, bits: int) -> int:
     z = 0
     for i in range(bits):
@@ -76,43 +73,6 @@ def test_grid_scale_exact_up_to_overflow_guard_then_quantized(spark):
     assert 0 <= r["gw"] <= 65535 and abs(r["gw"] - ideal) <= 1
 
 
-# ---------------------------------------------------------------------------
-# Skyline
-# ---------------------------------------------------------------------------
-def test_skyline_query_matches_brute_force(spark, sf_dir):
-    from beehive_spark.queries.core import part_skyline_brand
-
-    got = {
-        (r["p_brand"], r["p_partkey"])
-        for r in part_skyline_brand(spark, sf_dir).collect()
-    }
-    pts = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
-        .select(
-            "p_brand",
-            "p_partkey",
-            F.round(F.col("p_retailprice") * 100).cast("long").alias("pc"),
-            F.col("p_size").cast("long").alias("s"),
-        )
-        .collect()
-    )
-    want = set()
-    for a in pts:
-        dominated = any(
-            b["p_brand"] == a["p_brand"]
-            and b["pc"] <= a["pc"]
-            and b["s"] <= a["s"]
-            and (b["pc"] < a["pc"] or b["s"] < a["s"])
-            for b in pts
-        )
-        if not dominated:
-            want.add((a["p_brand"], a["p_partkey"]))
-    assert got == want and got
-
-
-# ---------------------------------------------------------------------------
-# q-gram edit-distance join
-# ---------------------------------------------------------------------------
 def _lev(a: str, b: str) -> int:
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
@@ -125,35 +85,12 @@ def _lev(a: str, b: str) -> int:
     return prev[-1]
 
 
-def test_qgram_join_query_matches_brute_force(spark, sf_dir):
-    from beehive_spark.queries.relational import qgram_editdist_join
-
-    got = {
-        (r["name_a"], r["name_b"], r["dist"])
-        for r in qgram_editdist_join(spark, sf_dir).collect()
-    }
-    names = [
-        r["p_name"]
-        for r in spark.read.parquet(f"{sf_dir}/part.parquet")
-        .select("p_name")
-        .distinct()
-        .collect()
-    ]
-    want = set()
-    for i, a in enumerate(names):
-        for b in names[i + 1 :]:
-            d = _lev(a, b)
-            if d <= 2:
-                want.add((min(a, b), max(a, b), d))
-    assert got == want and got
-
-
 def test_qgram_count_filter_bound_on_random_strings(spark):
     """Adversarial check of the (max_len - 1) - d*q bound: random
     short strings over a 3-letter alphabet maximize gram collisions
     and edit interactions; the join must find exactly the brute-force
-    pair set (the r6 bound was initially too tight and dropped
-    distance-2 substitution pairs)."""
+    pair set (a bound one gram too tight drops distance-2
+    substitution pairs)."""
     from beehive_spark.queries import relational as R
 
     rng = random.Random(42)
@@ -186,128 +123,6 @@ def test_qgram_count_filter_bound_on_random_strings(spark):
     assert got == want
 
 
-# ---------------------------------------------------------------------------
-# Interval concurrency
-# ---------------------------------------------------------------------------
-def test_interval_concurrency_matches_brute_sweep(spark, sf_dir):
-    from beehive_spark.queries.core import interval_concurrency
-
-    got = {
-        (r["hour_start"], r["max_concurrent"])
-        for r in interval_concurrency(spark, sf_dir).collect()
-    }
-    ev = (
-        _load(spark, sf_dir, "events")
-        .select(
-            F.unix_micros("ts").alias("s"),
-            F.round(F.col("value") * 100).cast("long").alias("vc"),
-        )
-        .collect()
-    )
-    HOUR = 3_600_000_000
-    deltas = {}
-    for r in ev:
-        e = r["s"] + (r["vc"] % 3540 + 60) * 1_000_000
-        deltas[r["s"]] = deltas.get(r["s"], 0) + 1
-        deltas[e] = deltas.get(e, 0) - 1
-    run, prev = 0, {}
-    per_hour = {}
-    for t in sorted(deltas):
-        h = t // HOUR
-        if h not in per_hour:
-            per_hour[h] = run  # carry-in level
-        run += deltas[t]
-        per_hour[h] = max(per_hour[h], run)
-    import datetime
-
-    want = {
-        (
-            datetime.datetime.utcfromtimestamp(h * 3600),
-            m,
-        )
-        for h, m in per_hour.items()
-    }
-    assert got == want and got
-
-
-# ---------------------------------------------------------------------------
-# Resample + EWMA
-# ---------------------------------------------------------------------------
-def test_events_resample_matches_python_interpolation(spark, sf_dir):
-    from beehive_spark.queries.core import events_resample
-
-    got = {
-        (r["user_id"], r["hour_start"], r["v_milli"])
-        for r in events_resample(spark, sf_dir).collect()
-    }
-    pts = {}
-    for r in (
-        _load(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.unix_micros("ts").alias("t"),
-            F.round(F.col("value") * 1000).cast("long").alias("v"),
-        )
-        .collect()
-    ):
-        key = (r["user_id"], r["t"])
-        pts[key] = min(pts.get(key, r["v"]), r["v"])
-    series = {}
-    for (u, t), v in pts.items():
-        series.setdefault(u, []).append((t, v))
-    HOUR = 3_600_000_000
-    import datetime
-
-    want = set()
-    for u, sv in series.items():
-        sv.sort()
-        ts = [t for t, _ in sv]
-        h0 = -(-ts[0] // HOUR)
-        h1 = ts[-1] // HOUR
-        import bisect
-
-        for h in range(h0, h1 + 1):
-            g = h * HOUR
-            i = bisect.bisect_right(ts, g) - 1
-            tp, vp = sv[i]
-            j = bisect.bisect_left(ts, g)
-            tn, vn = sv[j]
-            v = vp if tn == tp else (vp * (tn - g) + vn * (g - tp)) // (tn - tp)
-            want.add((u, datetime.datetime.utcfromtimestamp(g // 1_000_000), v))
-    assert got == want and got
-
-
-def test_events_ewma_matches_python_fold(spark, sf_dir):
-    from beehive_spark.queries.core import events_ewma
-
-    got = {
-        (r["user_id"], r["n_points"], r["ewma_milli"])
-        for r in events_ewma(spark, sf_dir).collect()
-    }
-    series = {}
-    for r in (
-        _load(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.unix_micros("ts").alias("t"),
-            F.round(F.col("value") * 1000).cast("long").alias("v"),
-        )
-        .collect()
-    ):
-        series.setdefault(r["user_id"], []).append((r["t"], r["v"]))
-    want = set()
-    for u, sv in series.items():
-        sv.sort()
-        s = sv[0][1]
-        for _, v in sv[1:]:
-            s = (3 * v + 7 * s) // 10
-        want.add((u, len(sv), s))
-    assert got == want and got
-
-
-# ---------------------------------------------------------------------------
-# Planted k-core: closed form really is what the peel computes
-# ---------------------------------------------------------------------------
 def test_graph_kcore_planted_matches_closed_form(spark, sf_dir):
     from beehive_spark.queries.relational import graph_kcore_planted
 
@@ -338,9 +153,6 @@ def test_graph_kcore_planted_matches_closed_form(spark, sf_dir):
     assert got == want and got
 
 
-# ---------------------------------------------------------------------------
-# Bigram LM: add-one fallback really fires for unseen histories
-# ---------------------------------------------------------------------------
 def test_ngram_lm_score_unseen_history_fallback(spark):
     import math
 
@@ -371,9 +183,6 @@ def test_ngram_lm_score_unseen_history_fallback(spark):
     assert got[3]["n_bigrams"] == 0 and got[3]["xent"] is None
 
 
-# ---------------------------------------------------------------------------
-# Bloom broadcast-bitmap path: exactness, column-name collision, validation
-# ---------------------------------------------------------------------------
 def test_bloom_broadcast_path_exact_and_collision_safe(spark, monkeypatch):
     """Force the past-the-literal-cliff path (bitmap shipped as a
     broadcast single-row array<long> frame) and verify (a) the result
@@ -406,9 +215,6 @@ def test_might_contain_requires_a_bitmap_source():
         might_contain(F.col("k"), None)
 
 
-# ---------------------------------------------------------------------------
-# Scene cuts: the detected set matches a pure-python decode + sweep
-# ---------------------------------------------------------------------------
 def test_media_scene_cuts_matches_python_decode(spark, sf_dir):
     """Independent twin: decode every synthesized payload with the
     vendored codec OUTSIDE Spark, compute exact integer frame means,
@@ -422,7 +228,7 @@ def test_media_scene_cuts_matches_python_decode(spark, sf_dir):
         synth_scene_video_media,
     )
 
-    docs = _load(spark, sf_dir, "documents").limit(40)
+    docs = load(spark, sf_dir, "documents").limit(40)
 
     import beehive_spark.queries.media as mod
 
@@ -451,9 +257,6 @@ def test_media_scene_cuts_matches_python_decode(spark, sf_dir):
     assert got == want and len(got) == 2 * 40
 
 
-# ---------------------------------------------------------------------------
-# Audio VAD: detected segments match a pure-python decode + sweep
-# ---------------------------------------------------------------------------
 def test_media_audio_vad_matches_python_decode(spark, sf_dir):
     """Independent twin: decode every synthesized clip with the stdlib
     codec OUTSIDE Spark, window, threshold, and merge runs in python —
@@ -468,7 +271,7 @@ def test_media_audio_vad_matches_python_decode(spark, sf_dir):
         synth_vad_wav_media,
     )
 
-    docs = _load(spark, sf_dir, "documents").limit(40)
+    docs = load(spark, sf_dir, "documents").limit(40)
 
     import beehive_spark.queries.media as mod
 

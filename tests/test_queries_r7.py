@@ -1,9 +1,10 @@
-"""Round-7 additions: planted PageRank twin (and siblings as they land).
+"""Planted PageRank, tree and BOM rollups, single-source shortest paths,
+planted record linkage, truncating integer division and the media
+caption/luma paths.
 
-Each driver-gated query gets an in-test pin against an INDEPENDENT
-brute-force twin on the real sf0.001 data — here a full |V|-dimensional
-python power iteration, NOT the two-scalar symmetry collapse the oracle
-uses, so a symmetry-breaking bug in the plant itself would also show."""
+Each test pins an independent brute-force twin or a constructed input
+(random forests, random graphs, cycles, edgeless forests) that the
+DuckDB oracle gate cannot express."""
 
 from pyspark.sql import functions as F
 
@@ -56,30 +57,6 @@ def test_pagerank_planted_matches_dense_power_iteration(spark, sf_dir):
     assert min(hubs) > 5 * max(leaves)
 
 
-# ---------------------------------------------------------------------------
-# Cross-modal join: python-decode twin + fake-tier plumbing
-# ---------------------------------------------------------------------------
-def test_media_caption_luma_matches_python_join(spark, sf_dir):
-    from beehive_spark.queries.media import media_caption_luma
-
-    got = {
-        (r["luma_bucket"], r["source"]): (
-            r["n_docs"], r["total_chars"], r["luma_char_moment"]
-        )
-        for r in media_caption_luma(spark, sf_dir).collect()
-    }
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source", F.length("text").alias("chars")
-    ).collect()
-    want = {}
-    for r in docs:
-        v = (r["doc_id"] * 37) % 251
-        key = (v // 32, r["source"])
-        n, c, m = want.get(key, (0, 0, 0))
-        want[key] = (n + 1, c + r["chars"], m + v * r["chars"])
-    assert got == want and got
-
-
 def test_media_caption_luma_decode_really_runs(spark, sf_dir):
     """The real decode path is load-bearing: decode a few synthesized
     payloads with the vendored codec in plain python and check the
@@ -113,9 +90,6 @@ def test_image_stats_fake_tier_reduces_raw_bytes(spark):
     assert got == {1: (20, 3), 2: (None, 0), 3: (255, 1)}
 
 
-# ---------------------------------------------------------------------------
-# tree_rollup: random-forest brute-force twin + contract guards
-# ---------------------------------------------------------------------------
 def _brute_rollup(edges, costs):
     """Recursive python rollup: total(n) = cost(n) + sum qty*total(child)."""
     import sys
@@ -170,7 +144,7 @@ def test_tree_rollup_matches_brute_force_on_random_forest(spark):
 def test_tree_rollup_succeeds_when_height_equals_cap(spark):
     """A chain of height == max_iter drains its last edge in the final
     round; the completion check must fire inside that round, not at the
-    top of a (nonexistent) next one (r7 advisory off-by-one)."""
+    top of a (nonexistent) next one (an off-by-one)."""
     from beehive_spark.operators.graph import tree_rollup
 
     # chain 4 -> 3 -> 2 -> 1 -> 0: height (and rounds needed) = 5
@@ -233,9 +207,6 @@ def test_bom_cost_rollup_root_equals_whole_forest(spark, sf_dir):
             assert r["n_desc"] == 1
 
 
-# ---------------------------------------------------------------------------
-# Fellegi-Sunter linkage: planted-truth recall + score composition
-# ---------------------------------------------------------------------------
 def test_record_linkage_recovers_every_planted_pair(spark, sf_dir):
     from beehive_spark.queries.relational import record_linkage_fs
 
@@ -268,101 +239,11 @@ def test_record_linkage_recovers_every_planted_pair(spark, sf_dir):
     assert possibles.isdisjoint(planted)
 
 
-# ---------------------------------------------------------------------------
-# BM25: brute python twin on the real corpus
-# ---------------------------------------------------------------------------
-def test_bm25_matches_python_scoring(spark, sf_dir):
-    import math
-    import re
-    from collections import Counter
-
-    from beehive_spark.queries.llm import _BM25_TERMS, bm25_retrieval
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    ).collect()
-    tok = lambda s: re.findall(r"[a-z0-9]+", s.lower())  # noqa: E731
-    toks = {r["doc_id"]: tok(r["text"]) for r in docs}
-    n = len(docs)
-    t = sum(len(v) for v in toks.values())
-    df = Counter()
-    tfs = {}
-    for d, ws in toks.items():
-        c = Counter(w for w in ws if w in _BM25_TERMS)
-        if c:
-            tfs[d] = c
-            for w in c:
-                df[w] += 1
-    want = {}
-    for d, c in tfs.items():
-        dl = len(toks[d])
-        score = 0
-        for w, tf in c.items():
-            idf = math.log(1.0 + (n - df[w] + 0.5) / (df[w] + 0.5))
-            sat = (tf * 2.2) / (tf + 1.2 * (1.0 - 0.75 + 0.75 * ((dl * n) / t)))
-            score += round(idf * sat * 1_000_000)
-        want[d] = (len(c), score)
-    top = sorted(want.items(), key=lambda kv: (-kv[1][1], kv[0]))[:25]
-    got = [
-        (r["doc_id"], (r["n_terms"], r["score_micro"]))
-        for r in bm25_retrieval(spark, sf_dir).collect()
-    ]
-    assert got == top and len(got) == min(25, len(want))
-    # the rare term must dominate: the top hit contains 'dup'
-    assert "dup" in toks[got[0][0]]
-
-
-# ---------------------------------------------------------------------------
-# TWAP: brute python twin on the real events
-# ---------------------------------------------------------------------------
-def test_events_twap_matches_python_fold(spark, sf_dir):
-    import math
-
-    from beehive_spark.queries import load
-    from beehive_spark.queries.core import events_twap
-
-    e = load(spark, sf_dir, "events").select("user_id", "ts", "value").collect()
-    pts = {}
-    for r in e:
-        t = int(r["ts"].timestamp() * 1_000_000)
-        # half-AWAY-from-zero like F.round / DuckDB ROUND — builtin
-        # round() is half-even and would diverge on exact .5 millis
-        # (r7 advisory; same key rounding as the MMR argmax)
-        mv = r["value"] * 1000
-        v = int(math.copysign(math.floor(abs(mv) + 0.5), mv))
-        key = (r["user_id"], t)
-        pts[key] = min(pts.get(key, v), v)
-    byu = {}
-    for (u, t), v in pts.items():
-        byu.setdefault(u, []).append((t, v))
-    want = {}
-    for u, series in byu.items():
-        series.sort()
-        if len(series) < 2:
-            continue
-        span = series[-1][0] - series[0][0]
-        wsum = sum(
-            v * (series[i + 1][0] - t) for i, (t, v) in enumerate(series[:-1])
-        )
-        # TRUNCATING division (Spark div == DuckDB //), not python's
-        # flooring // — differs on negative weighted sums
-        q = abs(wsum) // span if wsum >= 0 else -(abs(wsum) // span)
-        want[u] = (len(series) - 1, span, q)
-    got = {
-        r["user_id"]: (r["n_intervals"], r["span_us"], r["twap_milli"])
-        for r in events_twap(spark, sf_dir).collect()
-    }
-    assert got == want and got
-
-
-# ---------------------------------------------------------------------------
-# Cross-engine integer-division parity (the r7 review inversion)
-# ---------------------------------------------------------------------------
 def test_spark_div_matches_duckdb_intdiv_on_all_signs(spark):
     """Spark's registered `div` and DuckDB's `//` BOTH truncate toward
-    zero — pinned here because an advisory once claimed DuckDB floors,
-    and 'fixing' three hash gates to floor semantics would have broken
-    them on the first negative fixture (r7 review finding)."""
+    zero — pinned here because 'fixing' the hash gates to floor
+    semantics on the belief that DuckDB floors would break them on the
+    first negative fixture."""
     import duckdb
 
     cases = [(-7, 10), (-17, 4), (7, 10), (17, 4), (-1, 10), (0, 3), (-20, 7)]
@@ -383,9 +264,6 @@ def test_spark_div_matches_duckdb_intdiv_on_all_signs(spark):
     assert got[(-7, 10)] == 0 and (-7) // 10 == -1
 
 
-# ---------------------------------------------------------------------------
-# SSSP: random-graph Dijkstra twin + contract guards
-# ---------------------------------------------------------------------------
 def test_sssp_matches_dijkstra_on_random_graph(spark):
     import heapq
     import random
